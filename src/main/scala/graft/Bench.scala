@@ -73,11 +73,15 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
     }
+    // codegen compiles per gate, summed over its passes: a retry finds
+    // its classes cached, so the sum is what the gate compiled
+    val compiles = scala.collection.mutable.Map.empty[String, Long]
     /** (wall_s, proc_cpu_s, task_cpu_s); wall −1.0 marks failure. */
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
       val cpu0 = processCpuSec()
       val task0 = taskCpuNanos.get()
+      val compiles0 = GraftSession.codegenCompiles()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable =>
@@ -89,6 +93,7 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => () }
       val cpu = { val c1 = processCpuSec(); if (cpu0 < 0 || c1 < 0) -1.0 else c1 - cpu0 }
       val task = (taskCpuNanos.get() - task0) / 1e9
+      compiles(name) = compiles.getOrElse(name, 0L) + GraftSession.codegenCompiles() - compiles0
       // a failed query must not masquerade as a fast success
       if (ok) (wall, cpu, task) else (-1.0, cpu, task)
     }
@@ -158,6 +163,8 @@ object Bench {
     val qs = jmap(_._1)
     val cpuJson = jmap(_._2)
     val taskCpuJson = jmap(_._3)
+    val compilesJson = results.map { case (k, _) => "\"" + k + "\":" + compiles.getOrElse(k, 0L) }
+      .mkString("{", ",", "}")
     val retriedJson = results.collect { case (k, (_, true)) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     // -1.0 marks a failed query; it must not distort the aggregate, so the
@@ -173,7 +180,7 @@ object Bench {
     // (before warmup), load1_after here.
     val loadAfter = osLoad1()
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""cpu":$cpuJson,"task_cpu":$taskCpuJson,""" +
+      s""""cpu":$cpuJson,"task_cpu":$taskCpuJson,"codegen_compiles":$compilesJson,""" +
       s""""cpu_total":$cpuTotal,"task_cpu_total":$taskCpuTotal,""" +
       s""""failed":$failedJson,"failed_count":${failed.size},"retried":$retriedJson,""" +
       s""""load1_before":$loadBefore,"load1_after":$loadAfter,"sf":"$sfDir"}"""

@@ -28,6 +28,16 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the codegen working set of a full registry run, which sizes
+    // GraftSession's cache: every compile is a cache miss, so below the
+    // cap each one is a distinct class
+    System.gc()
+    val mb = 1048576.0
+    val heap = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / mb
+    val metaspace = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.stream
+      .filter(_.getName == "Metaspace").mapToLong(_.getUsage.getUsed).sum / mb
+    println(f"[verify] codegen_compiles=${GraftSession.codegenCompiles()} " +
+      f"heap_used_mb=$heap%.0f metaspace_used_mb=$metaspace%.0f")
     spark.stop()
     // outputs are written; reclaim every scratch dir this session created
     Tmp.purge()

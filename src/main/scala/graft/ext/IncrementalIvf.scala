@@ -44,14 +44,13 @@ object IncrementalIvf {
     // e feeds the codebook write and both halves of the assignment —
     // persist across the eager writes so the scan + normalization runs
     // once (guide §2.4); released before returning
-    val e = Similarity.withNorm(vecs).persist()
-    e.orderBy(col("vec_id")).limit(Similarity.IvfK)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .write.mode("overwrite").parquet(s"$root/cents")
-    Similarity.ivfAssigned(e, centsOf(s, root))
-      .write.mode("overwrite").parquet(s"$root/assigned")
-    e.unpersist()
-    ()
+    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
+      e.orderBy(col("vec_id")).limit(Similarity.IvfK)
+        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
+        .write.mode("overwrite").parquet(s"$root/cents")
+      Similarity.ivfAssigned(e, centsOf(s, root))
+        .write.mode("overwrite").parquet(s"$root/assigned")
+    }
   }
 
   /** Assign an append batch against the FROZEN codebook and append — one
@@ -61,11 +60,10 @@ object IncrementalIvf {
     val s = vecs.sparkSession
     // ivfAssigned reads its input twice (scoring + re-attach) — persist
     // the normalized batch across the one write, then release
-    val e = Similarity.withNorm(vecs).persist()
-    Similarity.ivfAssigned(e, centsOf(s, root))
-      .write.mode("append").parquet(s"$root/assigned")
-    e.unpersist()
-    ()
+    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
+      Similarity.ivfAssigned(e, centsOf(s, root))
+        .write.mode("append").parquet(s"$root/assigned")
+    }
   }
 
   /** Multi-probe top-3 for the standard query batch over the maintained
@@ -83,21 +81,22 @@ object IncrementalIvf {
     */
   private[graft] def query(
       s: SparkSession, root: String, nprobe: Int, reuse: Boolean): DataFrame = {
-    val assigned = Similarity.persistIf(
-      s.read.parquet(s"$root/assigned").dropDuplicates("vec_id"), reuse)
     val cents = centsOf(s, root)
-    val e = assigned.select(col("vec_id"), col("v"), col("nrm"))
-    val qp = Similarity.queryProbes(e, cents, nprobe).drop("prk")
-      .join(e.filter(Similarity.isQuery(col("vec_id"))).select(
-        col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")), Seq("q_id"))
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    Similarity.finishGate(reuse, Seq(assigned))(assigned.join(broadcast(qp),
-        col("cent_id") === col("probe_cell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", Similarity.cosine(col("qv"), col("qn"), col("v"), col("nrm")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 3)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cos"), col("rk")))
+    Similarity.finishGate(reuse,
+        s.read.parquet(s"$root/assigned").dropDuplicates("vec_id")) { assigned =>
+      val e = assigned.select(col("vec_id"), col("v"), col("nrm"))
+      val qp = Similarity.queryProbes(e, cents, nprobe).drop("prk")
+        .join(e.filter(Similarity.isQuery(col("vec_id"))).select(
+          col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")), Seq("q_id"))
+      assigned.join(broadcast(qp),
+          col("cent_id") === col("probe_cell") && col("vec_id") =!= col("q_id"))
+        .withColumn("cos", Similarity.cosine(col("qv"), col("qn"), col("v"), col("nrm")))
+        .withColumn("rk", row_number().over(wTop))
+        .filter(col("rk") <= 3)
+        .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cos"), col("rk"))
+    }
   }
 
   /** Gate: init on vec_id < 250 (which contains all 64 codebook ids, so
@@ -121,15 +120,15 @@ object IncrementalIvf {
     */
   def streamIvfIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sivf_").toString
-    val vecs = Tables.embeddings(s, d).persist()
-    init(vecs.filter(col("vec_id") < 250), root)
     val staged = graft.Tmp.dir("graft_sivf_src_")
-    vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    vecs.filter(col("vec_id") >= 375)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = vecs.schema
-    vecs.unpersist()
+    val schema = Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+      init(vecs.filter(col("vec_id") < 250), root)
+      vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
+        .coalesce(1).write.parquet(s"$staged/chunk=0")
+      vecs.filter(col("vec_id") >= 375)
+        .coalesce(1).write.parquet(s"$staged/chunk=1")
+      vecs.schema
+    }
     val q = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")

@@ -79,24 +79,22 @@ object IncrementalIvfPq {
     // e feeds the codebook write + both halves of the assignment, and
     // assigned feeds the vecs write + the residual pass — persist both
     // across the eager writes (guide §2.4), release before returning
-    val e = Similarity.withNorm(vecs).persist()
-    e.orderBy(col("vec_id")).limit(Similarity.IvfK)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .write.mode("overwrite").parquet(s"$root/cents")
-    val cents = centsOf(s, root)
-    val assigned = Similarity.ivfAssigned(e, cents).persist()
-    assigned.select(col("vec_id"), col("v"), col("nrm"))
-      .write.mode("overwrite").parquet(s"$root/vecs")
-    val rsubs = rsubsOf(assigned, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rsubs.filter(col("vec_id") < PqK)
-      .select(col("j").as("cj"), col("vec_id").as("cid"), col("rsub").as("csub"))
-      .write.mode("overwrite").parquet(s"$root/cb")
-    encode(rsubs, cbOf(s, root)).write.mode("overwrite").parquet(s"$root/codes")
-    rsubs.unpersist()
-    assigned.unpersist()
-    e.unpersist()
-    ()
+    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
+      e.orderBy(col("vec_id")).limit(Similarity.IvfK)
+        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
+        .write.mode("overwrite").parquet(s"$root/cents")
+      val cents = centsOf(s, root)
+      Similarity.withPersisted(Similarity.ivfAssigned(e, cents)) { assigned =>
+        assigned.select(col("vec_id"), col("v"), col("nrm"))
+          .write.mode("overwrite").parquet(s"$root/vecs")
+        Similarity.withPersisted(rsubsOf(assigned, cents)) { rsubs =>
+          rsubs.filter(col("vec_id") < PqK)
+            .select(col("j").as("cj"), col("vec_id").as("cid"), col("rsub").as("csub"))
+            .write.mode("overwrite").parquet(s"$root/cb")
+          encode(rsubs, cbOf(s, root)).write.mode("overwrite").parquet(s"$root/codes")
+        }
+      }
+    }
   }
 
   /** Assign + encode an append batch against the FROZEN models — two
@@ -108,15 +106,14 @@ object IncrementalIvfPq {
     // the normalized batch is read twice inside ivfAssigned and the
     // assignment twice more (vecs write + encode) — persist both across
     // the two eager writes (guide §2.4), release before returning
-    val e = Similarity.withNorm(vecs).persist()
-    val assigned = Similarity.ivfAssigned(e, cents).persist()
-    assigned.select(col("vec_id"), col("v"), col("nrm"))
-      .write.mode("append").parquet(s"$root/vecs")
-    encode(rsubsOf(assigned, cents), cbOf(s, root))
-      .write.mode("append").parquet(s"$root/codes")
-    assigned.unpersist()
-    e.unpersist()
-    ()
+    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
+      Similarity.withPersisted(Similarity.ivfAssigned(e, cents)) { assigned =>
+        assigned.select(col("vec_id"), col("v"), col("nrm"))
+          .write.mode("append").parquet(s"$root/vecs")
+        encode(rsubsOf(assigned, cents), cbOf(s, root))
+          .write.mode("append").parquet(s"$root/codes")
+      }
+    }
   }
 
   /** Per-probed-cell ADC top-5 over the maintained codes — identical
@@ -194,15 +191,15 @@ object IncrementalIvfPq {
     */
   def streamIvfPqIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sivfpq_").toString
-    val vecs = Tables.embeddings(s, d).persist()
-    init(vecs.filter(col("vec_id") < 250), root)
     val staged = graft.Tmp.dir("graft_sivfpq_src_")
-    vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    vecs.filter(col("vec_id") >= 375)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = vecs.schema
-    vecs.unpersist()
+    val schema = Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+      init(vecs.filter(col("vec_id") < 250), root)
+      vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
+        .coalesce(1).write.parquet(s"$staged/chunk=0")
+      vecs.filter(col("vec_id") >= 375)
+        .coalesce(1).write.parquet(s"$staged/chunk=1")
+      vecs.schema
+    }
     val q = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")

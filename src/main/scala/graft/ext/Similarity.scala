@@ -34,18 +34,20 @@ object Similarity {
     * read cached data, corrupting that gate's measurement. `reuse = false`
     * (the plan-audit path) does neither — callers see the live pipeline
     * plan, exactly like `Analytics.graphPagerank(checkpoint = false)`.
+    * The cache is released even when `res` fails.
     */
-  private[ext] def finishGate(reuse: Boolean, cached: Seq[DataFrame])(
-      res: DataFrame): DataFrame =
-    if (!reuse) res
-    else {
-      val out = res.localCheckpoint()
-      cached.foreach(_.unpersist())
-      out
-    }
+  private[ext] def finishGate(reuse: Boolean, shared: DataFrame)(
+      res: DataFrame => DataFrame): DataFrame =
+    if (!reuse) res(shared)
+    else withPersisted(shared)(p => res(p).localCheckpoint())
 
-  private[ext] def persistIf(df: DataFrame, reuse: Boolean): DataFrame =
-    if (reuse) df.persist() else df
+  /** Runs `body` over `df` persisted and unpersists it in a `finally`, so
+    * an exception cannot leave the cache entry in the long-lived session.
+    */
+  private[ext] def withPersisted[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = df.persist()
+    try body(p) finally p.unpersist()
+  }
 
   /** Strict sequential dot product of two double arrays — the codegen'd
     * native expression (see graft.functions.DotProductD). Numerically
@@ -456,21 +458,21 @@ object Similarity {
 
   private[graft] def kmeansTrain(
       s: SparkSession, d: String, reuse: Boolean): DataFrame = {
-    // e feeds five passes (init codebook, 2× assign, 2× update-join):
-    // persist so the scan + double-cast + |v|² run once (§2.4)
-    val e = persistIf(Tables.embeddings(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("_daa", dot(col("v"), col("v"))), reuse)
     def withDcc(c: DataFrame): DataFrame =
       c.withColumn("_dcc", dot(col("cv"), col("cv")))
-    val c0 = withDcc(e.orderBy(col("vec_id")).limit(KmeansK)
-      .select(col("vec_id").as("cid"), col("v").as("cv")))
-    val c1 = kmUpdate(e, kmAssign(e, c0))
-    val c2 = kmUpdate(e, kmAssign(e, withDcc(c1.select(col("cid"), col("cv")))))
-    finishGate(reuse, Seq(e))(
+    // e feeds five passes (init codebook, 2× assign, 2× update-join):
+    // persist so the scan + double-cast + |v|² run once (§2.4)
+    finishGate(reuse, Tables.embeddings(s, d)
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("_daa", dot(col("v"), col("v")))) { e =>
+      val c0 = withDcc(e.orderBy(col("vec_id")).limit(KmeansK)
+        .select(col("vec_id").as("cid"), col("v").as("cv")))
+      val c1 = kmUpdate(e, kmAssign(e, c0))
+      val c2 = kmUpdate(e, kmAssign(e, withDcc(c1.select(col("cid"), col("cv")))))
       c2.select(col("cid"), col("n"), posexplode(col("cv")))
-        .select(col("cid"), col("n"), col("pos").as("dim"), col("col").as("val")))
+        .select(col("cid"), col("n"), col("pos").as("dim"), col("col").as("val"))
+    }
   }
 
   val kmeansTrainOracle: String =

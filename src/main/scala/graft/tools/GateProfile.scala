@@ -4,8 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 
 /** Per-job profiler for a single gate: runs the named gates from
   * [[graft.SparkEntry.queries]] and prints, for every Spark job, its
-  * callsite, wall time, task CPU, and shuffle/spill bytes — the
-  * measure-first attribution step of the optimization loop (guide §1).
+  * callsite, wall time, task CPU, and shuffle/spill bytes, and per gate
+  * the generated classes Janino compiled and their estimated seconds —
+  * the measure-first attribution step of the optimization loop (guide §1).
   *
   * Run: `sbt "runMain graft.tools.GateProfile <gate>[,<gate>...] [sfDir]"`.
   * Output lines are grep-able: `JOB <id> wall=..s taskcpu=..s ... site=...`.
@@ -67,6 +68,7 @@ object GateProfile {
       println(s"=== GATE $g (warm+timed single pass) ===")
       val cpu0 = java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+      val compiles0 = graft.GraftSession.codegenCompiles()
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -74,7 +76,9 @@ object GateProfile {
         .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime - cpu0) / 1e9
       try org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
       catch { case scala.util.control.NonFatal(_) => () }
-      println(f"=== GATE $g DONE rows=$n wall=$wall%.2fs proccpu=$cpu%.2fs ===")
+      val compiles = graft.GraftSession.codegenCompiles() - compiles0
+      println(f"=== GATE $g DONE rows=$n wall=$wall%.2fs proccpu=$cpu%.2fs " +
+        f"compiles=$compiles compile=${graft.GraftSession.codegenCompileSeconds(compiles)}%.2fs ===")
     }
     spark.stop()
     graft.Tmp.purge()

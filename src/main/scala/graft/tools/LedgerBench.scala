@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures what the `_versions` ledger buys at high version counts:
   * `tableHistory` over N synthetic versions served from the ledger vs the
   * per-dir probing fallback (the pre-round-12 path). Synthetic versions
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object LedgerBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-ledger-bench")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[8]", "8").appName("graft-ledger-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val root = graft.Tmp.dir("graft_ledbench_").toString

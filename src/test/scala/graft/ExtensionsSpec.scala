@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkSessionExtensions registration: the native expressions must be
@@ -9,23 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
 
   test("graft_dot and graft_hyperplane_sig are SQL-callable via extensions") {
-    // getOrCreate would hand back the suite-shared session WITHOUT applying
-    // extensions; clear the default so a fresh session (reusing the JVM's
-    // SparkContext) is built with them, then restore for other suites.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // NOTE: the "spark.sql.extensions" CONF is only honored when the
-    // SparkContext itself is created; on a pre-existing context (shared
-    // test JVM) the programmatic withExtensions hook is the reliable path.
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-ext-test") { spark =>
       val dot = spark.sql(
         "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
         .collect().head.getDouble(0)
@@ -39,33 +22,11 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT graft_hyperplane_sig(array_repeat(1.0D, 64)) AS s")
         .collect().head.getLong(0)
       assert(sig === sig2)
-    } finally {
-      // restore the suite-shared session; never stop the shared context.
-      // If no session existed before, clear ours so later suites build
-      // their own (instead of silently adopting the extension session).
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("graft_product_mod: null-skipping modular product, codegen'd partial/final") {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-prodmod-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[4]", "4", "graft-prodmod-test") { spark =>
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val P = 2147483647L
@@ -103,31 +64,12 @@ class ExtensionsSpec extends AnyFunSuite {
           .agg(expr("graft_product_mod(id)")).collect().head.getLong(0)
       }
       assert(fps.forall(_ === expected), s"$fps vs $expected")
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("ReadGuard check rule: denies unauthorized paths at analysis, v1 and v2") {
     import graft.governance.{Permissions, ReadGuard}
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-guard-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-guard-test") { spark =>
       import org.apache.spark.sql.functions.col
       val root = java.nio.file.Files.createTempDirectory("graft_guard_ext_").toString
       spark.range(5).toDF("k").write.parquet(s"$root/open")
@@ -150,31 +92,12 @@ class ExtensionsSpec extends AnyFunSuite {
       } finally ReadGuard.clear()
       // cleared: the same read succeeds again
       assert(spark.read.parquet(s"$root/locked").count() === 5)
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("ReadGuard: the merge-on-read V1Scan fallback cannot bypass a table deny") {
     import graft.governance.{Permissions, ReadGuard}
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-mor-guard-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-mor-guard-test") { spark =>
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val root = java.nio.file.Files.createTempDirectory("graft_mguard_").toString
@@ -201,31 +124,12 @@ class ExtensionsSpec extends AnyFunSuite {
       try {
         assert(spark.sql("SELECT * FROM mg.tables.mor_sec").count() === 15)
       } finally ReadGuard.clear()
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("ReadGuard: a deny on the source cannot be laundered through a shallow clone") {
     import graft.governance.{Permissions, ReadGuard}
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-clone-guard-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-clone-guard-test") { spark =>
       import spark.implicits._
       val root = java.nio.file.Files.createTempDirectory("graft_cguard_").toString
       graft.lake.Lake.writeTableSnapshot(
@@ -253,30 +157,11 @@ class ExtensionsSpec extends AnyFunSuite {
       try {
         assert(spark.sql("SELECT * FROM cg.tables.branch").count() === 1)
       } finally ReadGuard.clear()
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("RewriteDotProduct rewrites the HOF fold to graft_dot, preserving results") {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-rule-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-rule-test") { spark =>
       import org.apache.spark.sql.functions._
       import spark.implicits._
       // a LocalRelation input would be constant-folded by
@@ -318,31 +203,12 @@ class ExtensionsSpec extends AnyFunSuite {
         aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
           lit(-0.0), (acc, v) => acc + v).as("d"))
       assert(!negZero.queryExecution.optimizedPlan.toString.contains("graft_dot"))
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("SummaryRewrite: answer-preserving rewrites fire, everything else declines") {
     import graft.warehouse.SummaryRewrite
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-mv-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-mv-test") { spark =>
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val root = java.nio.file.Files.createTempDirectory("graft_mv_spec_").toString
@@ -455,30 +321,11 @@ class ExtensionsSpec extends AnyFunSuite {
         assert(gr.getLong(0) === 0L)
         assert(gr.isNullAt(1))
       } finally SummaryRewrite.clear()
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("graft_ngrams generator: positional fan-out, null/short inputs generate nothing") {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ngrams-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-ngrams-test") { spark =>
       import spark.implicits._
       Seq((1, "a b c d"), (2, "x y"), (3, null)).toDF("id", "t")
         .createOrReplaceTempView("ng_t")
@@ -492,32 +339,13 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT pos, ngram FROM (SELECT 'a a a a' AS t) LATERAL VIEW graft_ngrams(t, 2) g AS pos, ngram")
         .collect().map(r => (r.getInt(0), r.getString(1)))
       assert(dup.toSeq.sorted === Seq((0, "a a"), (1, "a a"), (2, "a a")))
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("ColumnMask: pseudonym/redact apply in place, filters cannot leak raw values") {
     import graft.governance.ColumnMask
     import ColumnMask.{Policy, Pseudonym, Redact}
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-mask-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-mask-test") { spark =>
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val root = java.nio.file.Files.createTempDirectory("graft_mask_spec_").toString
@@ -563,32 +391,13 @@ class ExtensionsSpec extends AnyFunSuite {
       // cleared: raw values visible again
       val raw = spark.read.parquet(s"$root/t")
       assert(raw.filter(col("user") === "u1").count() === 2)
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("RowFilter: policy predicates apply at the scan, fail closed, compose beneath the mask") {
     import graft.governance.{ColumnMask, RowFilter}
     import RowFilter.Policy
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-rls-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-rls-test") { spark =>
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val root = java.nio.file.Files.createTempDirectory("graft_rls_spec_").toString
@@ -697,30 +506,11 @@ class ExtensionsSpec extends AnyFunSuite {
       } finally RowFilter.clear()
       // cleared: every row visible again
       assert(spark.read.parquet(s"$root/t").count() === 4)
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 
   test("ColumnarPreFilter: batches compact before the columnar->row transition; results unchanged") {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-colfilter-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    SparkSpec.withSession("local[2]", "2", "graft-colfilter-test") { spark =>
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val root = java.nio.file.Files.createTempDirectory("graft_colf_spec_").toString
@@ -749,15 +539,6 @@ class ExtensionsSpec extends AnyFunSuite {
       val q3 = spark.read.format("graft-stats-csv").load(root).filter(col("s") === "s2")
       assert(!q3.queryExecution.executedPlan.toString.contains("ColumnarPreFilter"))
       assert(q3.count() === (1L to 10000L).count(_ % 7 == 2))
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 }

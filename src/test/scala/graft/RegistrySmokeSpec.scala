@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Executes EVERY `SparkEntry.queries` entry end-to-end.
   *
   * This is the guard the round-6 regression proved necessary: four
@@ -12,10 +10,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Runs at sf0.01 — the driver's own Verify SF — because several gates
   * probe fixed key ranges (`p_file_skipping`'s user_id ∈ [100, 200]) that
-  * are empty in the sf0.001 slice, and under a session carrying the
-  * GraftExtensions (custom parser, SQL-registered expressions/UDTFs, the
-  * MV rewrite rule) exactly like every runtime entry point, via the
-  * ExtensionsSpec borrow-the-context pattern.
+  * are empty in the sf0.001 slice, and under the production session
+  * configuration (`GraftSession.builder`, through `SparkSpec.withSession`)
+  * exactly like every runtime entry point.
   *
   * All entries run inside ONE test so a single broken gate reports every
   * other broken gate alongside it (the driver's Verify behaves the same
@@ -25,18 +22,6 @@ class RegistrySmokeSpec extends SparkSpec {
 
   test("every registry entry executes without throwing on sf0.01") {
     val dir = "/root/testdata/sf0.01"
-    // force the suite-shared SparkContext into existence FIRST: when this
-    // suite runs before any other, clearing the (absent) default session
-    // and building master-less would otherwise throw "A master URL must
-    // be set" — and the builder's master below is ignored anyway once a
-    // context exists
-    spark.sparkContext
-    // getOrCreate would hand back the suite-shared session WITHOUT
-    // extensions; clear the default so a fresh session (reusing the JVM's
-    // SparkContext) is built with them, then restore for other suites
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
     // temp-dir lifecycle pin (round-16 audit: 13k+ leaked /tmp/graft_*
     // dirs): running the FULL registry must create scratch dirs only
     // under the session root Tmp.root, never as top-level /tmp litter
@@ -45,16 +30,9 @@ class RegistrySmokeSpec extends SparkSpec {
       Option(tmp.list()).fold(Set.empty[String])(_.filter(_.startsWith("graft")).toSet)
     }
     val tmpBefore = topLevelGraftDirs()
-    try {
-      val s = SparkSession.builder()
-        .master("local[8]")
-        .appName("graft-registry-smoke")
-        .withExtensions(new GraftExtensions())
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    // a fresh session keeps the gates' session state away from the
+    // suite-shared one
+    SparkSpec.withSession("local[8]", "8", "graft-registry-smoke") { s =>
       val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
           try { fn(s, dir).count(); None }
@@ -73,15 +51,6 @@ class RegistrySmokeSpec extends SparkSpec {
       val rootFile = Tmp.root.toFile
       Tmp.purge()
       assert(!rootFile.exists(), s"Tmp.purge() must delete $rootFile")
-    } finally {
-      prior match {
-        case Some(p) =>
-          SparkSession.setDefaultSession(p)
-          SparkSession.setActiveSession(p)
-        case None =>
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-      }
     }
   }
 }

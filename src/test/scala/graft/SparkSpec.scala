@@ -14,18 +14,43 @@ object SparkSpec {
   // first and its core count caps EVERY suite (sessions built later reuse
   // it whatever master they ask for) — 8 keeps the registry smoke spec and
   // the data-heavier specs parallel without oversubscribing the test box
-  // withExtensions (not the conf): the conf is only honored at
-  // SparkContext creation, and suite ordering makes that nondeterministic
-  // in the test JVM. The shared fixture carries the SAME extensions as the
-  // production session (GraftSession), so specs exercise the planner the
-  // way gates see it — incl. the CowRowLevelRewrite UPDATE/MERGE routing.
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions())
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = build("local[8]", "8", "graft-test")
+
+  /** A session on the production configuration, `GraftSession.builder`,
+    * so specs exercise the planner the way gates see it. Every session
+    * that can be the first in the test JVM is built here: the first one
+    * creates the SparkContext, and with it fixes the codegen cache size,
+    * artifact isolation and the `spark.sql.extensions` conf. Because that
+    * context carries the extensions conf, every later session gets the
+    * GraftExtensions from it; adding `withExtensions` as well would inject
+    * every rule twice (an audited read would log twice).
+    */
+  def build(master: String, partitions: String, app: String): SparkSession = {
+    val s = GraftSession.builder(master, partitions).appName(app).getOrCreate()
+    require(s.catalog.functionExists("graft_dot"),
+      "the SparkContext was created without GraftSession's extensions conf")
+    s
+  }
+
+  /** Runs `f` in a fresh production-configured session on the JVM's
+    * context, then restores the suite-shared default session (or clears
+    * it if there was none). Never stops the shared context.
+    */
+  def withSession[A](master: String, partitions: String, app: String)(
+      f: SparkSession => A): A = {
+    // getOrCreate would hand back the default session; clear it so a
+    // fresh session with this spec's settings is built
+    val prior = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try f(build(master, partitions, app))
+    finally prior match {
+      case Some(p) =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      case None =>
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+    }
+  }
 }

@@ -13,27 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopKSpec extends AnyFunSuite {
 
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-topk-test")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try f(spark)
-    finally prior match {
-      case Some(p) =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      case None =>
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-    }
-  }
+  private def withExtSession[A](f: SparkSession => A): A =
+    SparkSpec.withSession("local[4]", "4", "graft-topk-test")(f)
 
   // deterministic synthetic input: many keys, duplicate scores (ties), a
   // NULL score per key — spread over several partitions so the partial
