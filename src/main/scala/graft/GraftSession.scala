@@ -30,17 +30,12 @@ object GraftSession {
       // ceiling: ccStar rounds, mirrored-pair aggregates, collect_set
       // groups). `parallelismFirst` must be false or the coalescer
       // targets bytes/parallelism and caps partitions AT the core count,
-      // which is exactly the non-scaling behavior being removed. The two
-      // knobs a cluster deployment would retune are env-overridable with
-      // local defaults (driver-bench contract unchanged: the driver sets
-      // only SPARK_GRAFT_CPUS/SF_DIR, and at sf0.1 almost every exchange
-      // sits under cores × 8 MB, so it coalesces to the same core-count
-      // partitioning as the fixed setting it replaces).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512"))
+      // which is exactly the non-scaling behavior being removed. At sf0.1
+      // almost every exchange sits under cores × 8 MB, so it coalesces to
+      // the same core-count partitioning as a fixed setting would.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
         shufflePartitions)
       // minPartitionSize stays at its 1 MB default: the coalescer honors
@@ -64,8 +59,7 @@ object GraftSession {
       // (Spark reports it unknown), which can re-add an exchange where a
       // gate relied on through-cache partition reuse — the full-registry
       // sf0.1 A/B is the regression gate for that.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       // v2 commit: tasks rename straight into the output dir instead of a

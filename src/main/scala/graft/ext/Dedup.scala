@@ -1154,9 +1154,9 @@ object Dedup {
       df: DataFrame, textCol: String, outCol: String): DataFrame =
     // the native codegen'd kernel (TextKernels.cdcChunks) — identical
     // values to the previous interpreted HOF chain (same rolling
-    // polynomial, cuts, boundary and substring rules, including the
-    // short-text and empty-text edges), in one flat pass per document
-    // instead of an O(W) interpreted lambda aggregate per character
+    // polynomial over code points, cuts, boundary and substring rules,
+    // including the short-text and empty-text edges), in one flat pass per
+    // document instead of an O(W) interpreted lambda aggregate per character
     // (guide §1.2 step 2 / §4; measured the cdc family's hot spot)
     df.withColumn(outCol,
       org.apache.spark.sql.graft.TextExpressions.cdcChunks(col(textCol)))

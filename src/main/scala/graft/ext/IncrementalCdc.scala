@@ -110,37 +110,18 @@ object IncrementalCdc {
        |GROUP BY 1""".stripMargin
 
   /** Gate: the SAME maintenance driven by Structured Streaming —
-    * documents arrive as micro-batches and `foreachBatch` appends each to
-    * the persisted index. No batch marker needed: a re-delivered batch's
-    * verbatim posting rows vanish under the read-time distinct (the
-    * at-least-once tolerance is structural here, not bolted on).
+    * documents arrive as micro-batches and each is appended to the
+    * persisted index ([[IndexMaintenance.streamAppends]]). The index would
+    * not need the shared applied-batch guard: a re-delivered batch's
+    * verbatim posting rows vanish under the read-time distinct anyway.
     */
   def streamCdcIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_scdc_").toString
-    val docs = Tables.documents(s, d).persist()
-    init(docs.filter(col("doc_id") < 200), root)
-    val staged = graft.Tmp.dir("graft_scdc_src_")
-    docs.filter(col("doc_id") >= 200 && col("doc_id") < 350)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    docs.filter(col("doc_id") >= 350)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = docs.schema
-    docs.unpersist()
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        graft.Tmp.dir("graft_scdc_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        append(batch, root)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Similarity.withPersisted(Tables.documents(s, d)) { docs =>
+      init(docs.filter(col("doc_id") < 200), root)
+      IndexMaintenance.streamAppends(root, docs.filter(col("doc_id") >= 200),
+        (col("doc_id") >= 350).cast("int"))(append(_, root))
+    }
     stats(s, root)
   }
 

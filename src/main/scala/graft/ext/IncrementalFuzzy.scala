@@ -83,21 +83,19 @@ object IncrementalFuzzy {
   def append(rows: DataFrame, root: String, maxDist: Int): Unit = {
     val s = rows.sparkSession
     rows.select(col("id"), col("s")).write.mode("append").parquet(s"$root/members")
-    val newStrs = distinctStrs(rows)
-      .join(s.read.parquet(s"$root/strs"), Seq("s"), "left_anti")
-      .persist()
-    if (newStrs.isEmpty) { newStrs.unpersist(); return }
-    val newKeys = postings(newStrs, maxDist).persist()
-    // probe BEFORE appending the new postings, against old ∪ new — the
-    // union keeps new-new pairs discoverable while the left side restricts
-    // generation to the new frontier
-    val oldKeys = s.read.parquet(s"$root/keys")
-    newStringPairs(newKeys, oldKeys.unionByName(newKeys), maxDist)
-      .write.mode("append").parquet(s"$root/pairs_str")
-    newKeys.write.mode("append").parquet(s"$root/keys")
-    newStrs.write.mode("append").parquet(s"$root/strs")
-    newKeys.unpersist()
-    newStrs.unpersist()
+    Similarity.withPersisted(distinctStrs(rows)
+        .join(s.read.parquet(s"$root/strs"), Seq("s"), "left_anti")) { newStrs =>
+      if (!newStrs.isEmpty) Similarity.withPersisted(postings(newStrs, maxDist)) { newKeys =>
+        // probe BEFORE appending the new postings, against old ∪ new — the
+        // union keeps new-new pairs discoverable while the left side
+        // restricts generation to the new frontier
+        val oldKeys = s.read.parquet(s"$root/keys")
+        newStringPairs(newKeys, oldKeys.unionByName(newKeys), maxDist)
+          .write.mode("append").parquet(s"$root/pairs_str")
+        newKeys.write.mode("append").parquet(s"$root/keys")
+        newStrs.write.mode("append").parquet(s"$root/strs")
+      }
+    }
   }
 
   /** The maintained member-level pair set (id_a, id_b, dist), id_a < id_b
@@ -149,46 +147,17 @@ object IncrementalFuzzy {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming micro-
-    * batches (`maxFilesPerTrigger=1` + `foreachBatch`) — a continuously
+    * batches ([[IndexMaintenance.streamAppends]]) — a continuously
     * ingested entity feed keeping its fuzzy-match index current; batch
     * boundaries must be invisible in the final pair set.
     */
   def streamFuzzyIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sfuzzy_").toString
-    val rows = customerRows(s, d).persist()
-    init(rows.filter(col("id") < 500), root, maxDist = 1)
-    val staged = graft.Tmp.dir("graft_sfuzzy_src_")
-    rows.filter(col("id") >= 500 && col("id") < 1000)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    rows.filter(col("id") >= 1000)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = rows.schema
-    rows.unpersist()
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", graft.Tmp.dir("graft_sfuzzy_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // At-least-once guard: a batch whose append fully committed but
-        // whose checkpoint write failed is RE-DELIVERED after restart —
-        // the marker (written only after append returns) makes that
-        // re-delivery a no-op instead of a double append. A batch that
-        // died MID-append re-runs with no marker; the read-time set
-        // semantics of [[pairs]] absorb whatever the first attempt
-        // half-wrote, so either way replay ≡ exactly-once.
-        val marker = new java.io.File(s"$root/_applied_batch_$batchId")
-        if (!marker.exists()) {
-          append(batch, root, maxDist = 1)
-          marker.createNewFile()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Similarity.withPersisted(customerRows(s, d)) { rows =>
+      init(rows.filter(col("id") < 500), root, maxDist = 1)
+      IndexMaintenance.streamAppends(root, rows.filter(col("id") >= 500),
+        (col("id") >= 1000).cast("int"))(append(_, root, maxDist = 1))
+    }
     pairs(s, root)
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
   }
@@ -202,9 +171,10 @@ object IncrementalFuzzy {
     * deterministic SET (members verbatim, distinct strings, their
     * postings, verified string pairs), `distinct + rewrite` is exactly
     * equivalence-preserving — the gate proves pairs() is hash-identical
-    * across a compaction. Each table is materialized (localCheckpoint)
-    * BEFORE its directory is swapped, so the rewrite never reads its own
-    * output; the swap is delete-then-rename of the table directory —
+    * across a compaction. Each table is written aside first and swapped
+    * in only after that write committed ([[IndexMaintenance.swapIn]]), so
+    * the rewrite never reads its own output; the swap is
+    * delete-then-rename of the table directory —
     * index-level atomicity at 100 TB would ride the versioned-lake
     * publish path (`a23_fuzzy_index_sql`) instead of raw dirs.
     */

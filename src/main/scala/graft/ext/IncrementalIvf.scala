@@ -69,6 +69,12 @@ object IncrementalIvf {
   /** Multi-probe top-3 for the standard query batch over the maintained
     * index — identical plan shape to [[Similarity.annIvfMultiprobe]]:
     * probe table broadcast, candidates one equi-join on cell id.
+    *
+    * EAGER: this overload runs the whole query before it returns (see
+    * [[Similarity.finishGate]]) and returns a lineage-truncated frame, a
+    * scan of the checkpointed result. Transforms composed on it do not
+    * reach the index read, and its plan shows only that scan; the
+    * `reuse = false` overload returns the live plan.
     */
   def query(s: SparkSession, root: String, nprobe: Int = 4): DataFrame =
     query(s, root, nprobe, reuse = true)
@@ -120,33 +126,11 @@ object IncrementalIvf {
     */
   def streamIvfIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sivf_").toString
-    val staged = graft.Tmp.dir("graft_sivf_src_")
-    val schema = Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+    Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
       init(vecs.filter(col("vec_id") < 250), root)
-      vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
-        .coalesce(1).write.parquet(s"$staged/chunk=0")
-      vecs.filter(col("vec_id") >= 375)
-        .coalesce(1).write.parquet(s"$staged/chunk=1")
-      vecs.schema
+      IndexMaintenance.streamAppends(root, vecs.filter(col("vec_id") >= 250),
+        (col("vec_id") >= 375).cast("int"))(append(_, root))
     }
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", graft.Tmp.dir("graft_sivf_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new java.io.File(s"$root/_applied_batch_$batchId")
-        if (!marker.exists()) {
-          append(batch, root)
-          marker.createNewFile()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
     query(s, root)
   }
 

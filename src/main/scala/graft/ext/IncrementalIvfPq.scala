@@ -191,34 +191,11 @@ object IncrementalIvfPq {
     */
   def streamIvfPqIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sivfpq_").toString
-    val staged = graft.Tmp.dir("graft_sivfpq_src_")
-    val schema = Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+    Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
       init(vecs.filter(col("vec_id") < 250), root)
-      vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
-        .coalesce(1).write.parquet(s"$staged/chunk=0")
-      vecs.filter(col("vec_id") >= 375)
-        .coalesce(1).write.parquet(s"$staged/chunk=1")
-      vecs.schema
+      IndexMaintenance.streamAppends(root, vecs.filter(col("vec_id") >= 250),
+        (col("vec_id") >= 375).cast("int"))(append(_, root))
     }
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        graft.Tmp.dir("graft_sivfpq_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new java.io.File(s"$root/_applied_batch_$batchId")
-        if (!marker.exists()) {
-          append(batch, root)
-          marker.createNewFile()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
     query(s, root)
   }
 

@@ -111,28 +111,28 @@ object IncrementalLsh {
     val (minNew, maxNew) = (bounds.getLong(0), bounds.getLong(1))
     require(minNew > maxOld,
       s"IncrementalLsh.append: new ids must exceed all ingested ids ($minNew <= $maxOld)")
-    val newSigs = signatures(newDocs).persist()
-    newSigs.write.mode("append").parquet(s"$root/sigs")
-    // distinct: signatures are a deterministic function of (doc_id, text),
-    // so the only possible duplicates are verbatim rows from a replayed
-    // half-committed append (crash after the sigs write, before the
-    // watermark) — dedup here keeps the bucket cap and the verify joins
-    // exact under at-least-once redelivery; on clean state it is a no-op
-    val all = s.read.parquet(s"$root/sigs").distinct()
-    val touched = Dedup.bandBuckets(
-      newSigs.select(col("doc_id").as("rep_id"), col("sig")))
-      .select(col("band_idx"), col("band_hash")).distinct()
-    val allBuckets = Dedup.bandBuckets(
-      all.select(col("doc_id").as("rep_id"), col("sig")))
-      .join(touched, Seq("band_idx", "band_hash"), "left_semi")
-    val cand = Dedup.cappedBucketPairs(
-      allBuckets, Seq("band_idx", "band_hash"), maxBucket)
-      // rep_a < rep_b and new ids are the highest, so "pair involves a new
-      // doc" ⟺ rep_b is new; old-old pairs in touched buckets are already
-      // stored and must not re-verify or duplicate
-      .filter(col("rep_b") > maxOld)
-    verify(cand, all).write.mode("append").parquet(s"$root/pairs")
-    newSigs.unpersist()
+    Similarity.withPersisted(signatures(newDocs)) { newSigs =>
+      newSigs.write.mode("append").parquet(s"$root/sigs")
+      // distinct: signatures are a deterministic function of (doc_id, text),
+      // so the only possible duplicates are verbatim rows from a replayed
+      // half-committed append (crash after the sigs write, before the
+      // watermark) — dedup here keeps the bucket cap and the verify joins
+      // exact under at-least-once redelivery; on clean state it is a no-op
+      val all = s.read.parquet(s"$root/sigs").distinct()
+      val touched = Dedup.bandBuckets(
+        newSigs.select(col("doc_id").as("rep_id"), col("sig")))
+        .select(col("band_idx"), col("band_hash")).distinct()
+      val allBuckets = Dedup.bandBuckets(
+        all.select(col("doc_id").as("rep_id"), col("sig")))
+        .join(touched, Seq("band_idx", "band_hash"), "left_semi")
+      val cand = Dedup.cappedBucketPairs(
+        allBuckets, Seq("band_idx", "band_hash"), maxBucket)
+        // rep_a < rep_b and new ids are the highest, so "pair involves a new
+        // doc" ⟺ rep_b is new; old-old pairs in touched buckets are already
+        // stored and must not re-verify or duplicate
+        .filter(col("rep_b") > maxOld)
+      verify(cand, all).write.mode("append").parquet(s"$root/pairs")
+    }
     writeIdWatermark(s, root, maxNew)
   }
 
@@ -166,7 +166,7 @@ object IncrementalLsh {
   /** The maintained near-dup pair table. Verified pairs are deterministic
     * per (doc_a, doc_b), so the read-time distinct restores set semantics
     * if a replayed half-committed append double-appended a batch's pairs
-    * (see the foreachBatch marker in [[streamLshIndex]] for the
+    * (see [[IndexMaintenance.appliedOnce]] for the
     * common-case guard); on clean state it deduplicates an
     * already-distinct set.
     */
@@ -189,8 +189,8 @@ object IncrementalLsh {
   }
 
   /** Gate: the SAME maintenance driven by Structured Streaming — documents
-    * arrive as micro-batches (`maxFilesPerTrigger=1`) and `foreachBatch`
-    * appends each batch to the persisted index, the canonical shape of a
+    * arrive as micro-batches ([[IndexMaintenance.streamAppends]]), each
+    * appended to the persisted index in arrival order, the canonical shape of a
     * continuously-ingested corpus keeping its near-dup index current
     * (crawl ids grow monotonically, satisfying the append contract). The
     * final maintained pair table must equal brute-force Jaccard over
@@ -198,38 +198,12 @@ object IncrementalLsh {
     */
   def streamLshIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_slsh_").toString
-    val docs = Dedup.plantedDocs(s).persist()
-    init(docs.filter(col("doc_id") < 100), root)
-    val staged = graft.Tmp.dir("graft_slsh_src_")
-    // two arrival files in id order (ids grow with arrival time in a crawl)
-    docs.filter(col("doc_id") >= 1000 && col("doc_id") < 1010)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    docs.filter(col("doc_id") >= 1010)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = docs.schema
-    docs.unpersist()
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", graft.Tmp.dir("graft_slsh_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // at-least-once guard (same contract as IncrementalFuzzy's gate):
-        // a fully-committed batch re-delivered after a checkpoint-write
-        // failure must be a no-op — without the marker the re-run would
-        // trip the monotone-id require and kill the query on restart
-        val marker = new java.io.File(s"$root/_applied_batch_$batchId")
-        if (!marker.exists()) {
-          append(batch, root)
-          marker.createNewFile()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Similarity.withPersisted(Dedup.plantedDocs(s)) { docs =>
+      init(docs.filter(col("doc_id") < 100), root)
+      // two arrival chunks in id order (ids grow with arrival time in a crawl)
+      IndexMaintenance.streamAppends(root, docs.filter(col("doc_id") >= 1000),
+        (col("doc_id") >= 1010).cast("int"))(append(_, root))
+    }
     pairs(s, root)
   }
 

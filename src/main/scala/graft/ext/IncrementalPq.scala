@@ -133,40 +133,17 @@ object IncrementalPq {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming with the
-    * at-least-once replay guard (applied-batch markers) — batch
+    * at-least-once replay guard of [[IndexMaintenance.streamAppends]] — batch
     * boundaries invisible in the query results.
     */
   def streamPqIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_spq_").toString
-    val vecs = Tables.embeddings(s, d).persist()
-    init(vecs.filter(col("vec_id") < 250), root)
-    val staged = graft.Tmp.dir("graft_spq_src_")
-    vecs.filter(col("vec_id") >= 250 && col("vec_id") < 375)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    vecs.filter(col("vec_id") >= 375)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = vecs.schema
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", graft.Tmp.dir("graft_spq_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new java.io.File(s"$root/_applied_batch_$batchId")
-        if (!marker.exists()) {
-          append(batch, root)
-          marker.createNewFile()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    val out = query(s, root, vecs)
-    vecs.unpersist()
-    out
+    Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+      init(vecs.filter(col("vec_id") < 250), root)
+      IndexMaintenance.streamAppends(root, vecs.filter(col("vec_id") >= 250),
+        (col("vec_id") >= 375).cast("int"))(append(_, root))
+    }
+    query(s, root, Tables.embeddings(s, d))
   }
 
   val defs: Map[String, QueryFn] = Map(

@@ -100,19 +100,19 @@ object IncrementalSimhash {
     */
   def append(docs: DataFrame, root: String): Unit = {
     val s = docs.sparkSession
-    val batchSk = Dedup.simhashSketches(docs).persist()
-    batchSk.write.mode("append").parquet(s"$root/members")
-    val newSks = batchSk.select(col("simhash")).distinct()
-      .join(s.read.parquet(s"$root/sks"), Seq("simhash"), "left_anti")
-      .persist()
-    if (newSks.isEmpty) { newSks.unpersist(); batchSk.unpersist(); return }
-    val newChunks = chunkPostings(newSks).persist()
-    val oldChunks = s.read.parquet(s"$root/chunks")
-    newSketchPairs(newChunks, oldChunks.unionByName(newChunks))
-      .write.mode("append").parquet(s"$root/pairs_sk")
-    newChunks.write.mode("append").parquet(s"$root/chunks")
-    newSks.write.mode("append").parquet(s"$root/sks")
-    newChunks.unpersist(); newSks.unpersist(); batchSk.unpersist()
+    Similarity.withPersisted(Dedup.simhashSketches(docs)) { batchSk =>
+      batchSk.write.mode("append").parquet(s"$root/members")
+      Similarity.withPersisted(batchSk.select(col("simhash")).distinct()
+          .join(s.read.parquet(s"$root/sks"), Seq("simhash"), "left_anti")) { newSks =>
+        if (!newSks.isEmpty) Similarity.withPersisted(chunkPostings(newSks)) { newChunks =>
+          val oldChunks = s.read.parquet(s"$root/chunks")
+          newSketchPairs(newChunks, oldChunks.unionByName(newChunks))
+            .write.mode("append").parquet(s"$root/pairs_sk")
+          newChunks.write.mode("append").parquet(s"$root/chunks")
+          newSks.write.mode("append").parquet(s"$root/sks")
+        }
+      }
+    }
   }
 
   /** Compact the index state (see [[IndexMaintenance]]): every table is a
@@ -195,36 +195,11 @@ object IncrementalSimhash {
     */
   def streamSimhashIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_ssim_").toString
-    val docs = Dedup.plantedDocs(s).persist()
-    init(docs.filter(col("doc_id") < 50), root)
-    val staged = graft.Tmp.dir("graft_ssim_src_")
-    docs.filter(col("doc_id") >= 50 && col("doc_id") < 1010)
-      .coalesce(1).write.parquet(s"$staged/chunk=0")
-    docs.filter(col("doc_id") >= 1010)
-      .coalesce(1).write.parquet(s"$staged/chunk=1")
-    val schema = docs.schema
-    docs.unpersist()
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/chunk=*")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", graft.Tmp.dir("graft_ssim_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // re-delivered fully-committed batches are no-ops; a mid-append
-        // crash re-runs and pairs()'s set semantics absorb the partial
-        // first attempt (same contract as the LSH/fuzzy streaming gates)
-        val marker = new java.io.File(s"$root/_applied_batch_$batchId")
-        if (!marker.exists()) {
-          append(batch, root)
-          marker.createNewFile()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Similarity.withPersisted(Dedup.plantedDocs(s)) { docs =>
+      init(docs.filter(col("doc_id") < 50), root)
+      IndexMaintenance.streamAppends(root, docs.filter(col("doc_id") >= 50),
+        (col("doc_id") >= 1010).cast("int"))(append(_, root))
+    }
     pairs(s, root)
   }
 

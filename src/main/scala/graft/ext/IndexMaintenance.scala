@@ -1,15 +1,20 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.streaming.Streams
 
 /** Shared maintenance mechanics for the incremental-index family
-  * ([[IncrementalFuzzy]], [[IncrementalLsh]], [[IncrementalSimhash]],
-  * [[IncrementalIvf]]): append-only maintenance accumulates one small
+  * ([[IncrementalCdc]], [[IncrementalFuzzy]], [[IncrementalIvf]],
+  * [[IncrementalIvfPq]], [[IncrementalLsh]], [[IncrementalPq]],
+  * [[IncrementalSimhash]]): append-only maintenance accumulates one small
   * file batch per append, and every index state table is a DETERMINISTIC
   * function of the corpus — so `distinct + coalesced rewrite` is an
   * equivalence-preserving compaction for all of them, and a
   * swap-rewrite (write aside, delete, rename) is the shared primitive
-  * both compaction and targeted rewrites (erasure) build on.
+  * both compaction and targeted rewrites (erasure) build on. Every
+  * module's streaming gate drives its `append` through [[streamAppends]].
   *
   * Single-writer ops: compaction/erasure run at maintenance cadence under
   * the same exclusive-writer assumption as the appends themselves; a
@@ -78,6 +83,51 @@ object IndexMaintenance {
       }
       ()
     } finally { pool.shutdown() }
+  }
+
+  /** Drive an index's `append` from Structured Streaming, the continuous
+    * ingest shape: `rows` is staged as one file per `chunk` value (an int
+    * column) in one ordered write ([[Streams.writeChunksOrdered]]), then
+    * drained one file per trigger, in chunk order, and every micro-batch
+    * goes to `append` at most once ([[appliedOnce]]). Each call drains
+    * through a fresh checkpoint and the markers key on the batch id
+    * alone, so an index root takes one `streamAppends` call: a second
+    * one would skip the batch ids the first applied.
+    */
+  def streamAppends(root: String, rows: DataFrame, chunk: Column)(
+      append: DataFrame => Unit): Unit = {
+    val staged = graft.Tmp.dir("graft_index_src_").toString
+    Streams.writeChunksOrdered(rows, chunk, staged)
+    drainChunks(rows.sparkSession, root, staged, rows.schema)(append)
+  }
+
+  /** The drain half of [[streamAppends]] over an already staged `staged`
+    * directory of `chunk=N` files.
+    */
+  private[graft] def drainChunks(
+      s: SparkSession, root: String, staged: String, schema: StructType)(
+      append: DataFrame => Unit): Unit =
+    Streams.drainBatches(
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$staged/chunk=*"),
+      graft.Tmp.dir("graft_index_ckpt_").toString)(appliedOnce(root)(append))
+
+  /** The per-batch function of [[streamAppends]]. Structured Streaming is
+    * at-least-once into `foreachBatch`: a batch whose append committed but
+    * whose checkpoint write failed is re-delivered after a restart. A
+    * marker file per batch id under `root`, written only after `append`
+    * returns, makes that re-delivery a no-op instead of a double append
+    * (which would trip [[IncrementalLsh]]'s monotone-id `require`). A batch that
+    * died mid-append has no marker and runs again; every index reads its
+    * state with set semantics, which absorb the half-written first try.
+    */
+  private[graft] def appliedOnce(root: String)(
+      append: DataFrame => Unit): (DataFrame, Long) => Unit = { (batch, id) =>
+    val marker = new java.io.File(s"$root/_applied_batch_$id")
+    if (!marker.exists()) {
+      append(batch)
+      marker.createNewFile()
+    }
   }
 
   /** Compact `tables` under `root`: deduplicate and rewrite each as

@@ -452,6 +452,10 @@ object Similarity {
     *
     * Output: the final codebook posexploded to scalar (cid, n, dim, val)
     * rows (the value matrix hash needs scalar columns).
+    *
+    * EAGER: this overload trains before it returns (see [[finishGate]])
+    * and returns a lineage-truncated frame, a scan of the checkpointed
+    * codebook rows; the `reuse = false` overload returns the live plan.
     */
   def kmeansTrain(s: SparkSession, d: String): DataFrame =
     kmeansTrain(s, d, reuse = true)

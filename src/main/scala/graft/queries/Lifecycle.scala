@@ -2903,8 +2903,7 @@ object Lifecycle {
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ck)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(300000)
-    require(!q.isActive, "the AvailableNow drain must terminate")
+    graft.streaming.Streams.awaitDrained(q)
     val streamed = sel(s.read.schema(
       s.table(s"$cat.tables.cdf__changes").schema).parquet(out), "stream")
     incr.unionByName(init).unionByName(streamed)
@@ -2964,35 +2963,31 @@ object Lifecycle {
     s.sql(s"INSERT INTO $cat.tables.msrc SELECT * FROM a38_ins_src")
 
     val ck = scratch("graft_a38_ck_")
-    val q = s.readStream.option("keyColumns", "o_orderkey")
-      .option("maxVersionsPerTrigger", "2")
-      .table(s"$cat.tables.msrc__changes")
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // per key, the LAST change in the epoch decides its final state
-        val latest = batch.groupBy("o_orderkey")
-          .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*),
-            col("change_version")).as("r"))
-          .select("r.*")
-        val ups = latest.filter(col("change") =!= "deleted")
-          .drop("change", "change_version")
-        val dels = latest.filter(col("change") === "deleted")
-          .select("o_orderkey")
-        if (Lake.latestVersion(s, root, "a38_mirror").isEmpty)
-          Lake.writeTableSnapshot(ups, root, "a38_mirror")
-        else if (!ups.isEmpty)
-          graft.lake.CopyOnWrite.mergeInto(s, root, "a38_mirror", ups,
-            Seq("o_orderkey"),
-            matchedSet = Seq("o_totalprice" -> col("s.o_totalprice")),
-            insertNotMatched = true)
-        if (Lake.versions(s, root, "a38_mirror").nonEmpty && !dels.isEmpty) {
-          graft.lake.MergeOnRead.deleteByKeys(s, root, "a38_mirror", dels)
-          ()
-        }
+    graft.streaming.Streams.drainBatches(
+        s.readStream.option("keyColumns", "o_orderkey")
+          .option("maxVersionsPerTrigger", "2")
+          .table(s"$cat.tables.msrc__changes"), ck) { (batch, _) =>
+      // per key, the LAST change in the epoch decides its final state
+      val latest = batch.groupBy("o_orderkey")
+        .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*),
+          col("change_version")).as("r"))
+        .select("r.*")
+      val ups = latest.filter(col("change") =!= "deleted")
+        .drop("change", "change_version")
+      val dels = latest.filter(col("change") === "deleted")
+        .select("o_orderkey")
+      if (Lake.latestVersion(s, root, "a38_mirror").isEmpty)
+        Lake.writeTableSnapshot(ups, root, "a38_mirror")
+      else if (!ups.isEmpty)
+        graft.lake.CopyOnWrite.mergeInto(s, root, "a38_mirror", ups,
+          Seq("o_orderkey"),
+          matchedSet = Seq("o_totalprice" -> col("s.o_totalprice")),
+          insertNotMatched = true)
+      if (Lake.versions(s, root, "a38_mirror").nonEmpty && !dels.isEmpty) {
+        graft.lake.MergeOnRead.deleteByKeys(s, root, "a38_mirror", dels)
+        ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(300000)
-    require(!q.isActive, "the AvailableNow mirror sync must terminate")
+    }
     val epochs = new java.io.File(s"$ck/offsets").listFiles()
       .count(_.getName.forall(_.isDigit))
     require(epochs >= 2,

@@ -89,7 +89,7 @@ object Streams {
     * Timestamps sit in the past so any file staged afterwards (watermark
     * sentinels) sorts after every chunk.
     */
-  private def writeChunksOrdered(
+  private[graft] def writeChunksOrdered(
       df: DataFrame, chunkExpr: org.apache.spark.sql.Column, dir: String): Unit = {
     val s = df.sparkSession
     df.withColumn("chunk", chunkExpr)
@@ -138,9 +138,36 @@ object Streams {
         checkpoint.getOrElse(graft.Tmp.dir("graft_ckpt_").toString))
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    awaitDrained(q)
     s.table(name)
   }
+
+  /** Run `df` to completion under `Trigger.AvailableNow`, handing every
+    * micro-batch and its batch id to `fn` — the `foreachBatch` twin of
+    * [[drain]], and the one place a query of this engine calls
+    * `foreachBatch`.
+    */
+  def drainBatches(df: DataFrame, checkpoint: String)(
+      fn: (DataFrame, Long) => Unit): Unit =
+    awaitDrained(df.writeStream
+      .foreachBatch(fn)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start())
+
+  private val DrainTimeoutMs = 10L * 60 * 1000
+
+  /** Wait for an `AvailableNow` query to finish, at most `DrainTimeoutMs`:
+    * a query that is still active then is stopped and fails its caller
+    * instead of hanging it. A failed query rethrows its error here.
+    */
+  private[graft] def awaitDrained(
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    if (!q.awaitTermination(DrainTimeoutMs)) {
+      q.stop()
+      throw new IllegalStateException(
+        s"AvailableNow query ${q.id} still active after ${DrainTimeoutMs / 1000} s")
+    }
 
   /** Continuous grouped aggregation (B4's streaming shape): per event_type
     * running totals in update/complete-mode state.
@@ -190,7 +217,7 @@ object Streams {
       .option("checkpointLocation", graft.Tmp.dir("graft_obs_ck_").toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    awaitDrained(q)
     val batches = q.recentProgress.toSeq.flatMap { p =>
       Option(p.observedMetrics.get("metrics")).map { m =>
         (p.batchId, m.getAs[Long]("n_rows"),
@@ -232,48 +259,41 @@ object Streams {
     val root = graft.Tmp.dir("graft_late_").toString
     val latenessUs = 7L * 24 * 3600 * 1000000 // 7 event-time days
     val hwmPath = s"$root/hwm"
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(glob)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        val prev: Option[Long] =
-          if (new java.io.File(hwmPath).exists)
-            Some(ss.read.parquet(hwmPath).head.getLong(0))
-          else None
-        val isLate = prev match {
-          case Some(h) => col("ts_us") < lit(h - latenessUs)
-          case None => lit(false)
-        }
-        val tagged = batch
-          .select(col("event_id"), col("user_id"), col("ts_us"))
-          .withColumn("batch_id", lit(id))
-          .withColumn("disposition", when(isLate, "late").otherwise("on_time"))
-        val obs = org.apache.spark.sql.Observation()
-        // epoch-keyed DYNAMIC OVERWRITE, not append: a crash after this
-        // write commits but before the streaming checkpoint records the
-        // batch replays it — an append would duplicate the rows; an
-        // overwrite of exactly this batch's partitions converges (replays
-        // route identically because the hwm file is only advanced below)
-        tagged.observe(obs, max(col("ts_us")).as("mx"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "disposition")
-          .parquet(s"$root/routed")
-        val mx = obs.get("mx").asInstanceOf[Long]
-        val hwm = math.max(prev.getOrElse(Long.MinValue), mx)
-        import ss.implicits._
-        // overwrite AFTER the routed write committed: a crash between the
-        // two replays the batch against the OLD hwm — same routing, and
-        // the parquet commit protocol discards the orphaned attempt
-        Seq(hwm).toDF("hwm").coalesce(1).write.mode("overwrite").parquet(hwmPath)
-        ()
+    drainBatches(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(glob),
+        graft.Tmp.dir("graft_late_ck_").toString) { (batch, id) =>
+      val ss = batch.sparkSession
+      val prev: Option[Long] =
+        if (new java.io.File(hwmPath).exists)
+          Some(ss.read.parquet(hwmPath).head.getLong(0))
+        else None
+      val isLate = prev match {
+        case Some(h) => col("ts_us") < lit(h - latenessUs)
+        case None => lit(false)
       }
-      .option("checkpointLocation",
-        graft.Tmp.dir("graft_late_ck_").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      val tagged = batch
+        .select(col("event_id"), col("user_id"), col("ts_us"))
+        .withColumn("batch_id", lit(id))
+        .withColumn("disposition", when(isLate, "late").otherwise("on_time"))
+      val obs = org.apache.spark.sql.Observation()
+      // epoch-keyed DYNAMIC OVERWRITE, not append: a crash after this
+      // write commits but before the streaming checkpoint records the
+      // batch replays it — an append would duplicate the rows; an
+      // overwrite of exactly this batch's partitions converges (replays
+      // route identically because the hwm file is only advanced below)
+      tagged.observe(obs, max(col("ts_us")).as("mx"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", "disposition")
+        .parquet(s"$root/routed")
+      val mx = obs.get("mx").asInstanceOf[Long]
+      val hwm = math.max(prev.getOrElse(Long.MinValue), mx)
+      import ss.implicits._
+      // overwrite AFTER the routed write committed: a crash between the
+      // two replays the batch against the OLD hwm — same routing, and
+      // the parquet commit protocol discards the orphaned attempt
+      Seq(hwm).toDF("hwm").coalesce(1).write.mode("overwrite").parquet(hwmPath)
+    }
     s.read.parquet(s"$root/routed")
       .select(col("event_id"), col("user_id"), col("ts_us"),
         col("batch_id").cast("long").as("batch_id"),
@@ -572,7 +592,7 @@ object Streams {
       .option("checkpointLocation", graft.Tmp.dir("graft_ckpt_").toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    awaitDrained(q)
     s.read.parquet(s"$root/streams/events")
       .groupBy(col("year"), col("month"), col("day"))
       .agg(count(lit(1)).as("cnt"), Q.moneySum(col("value")).as("total"))
@@ -592,17 +612,10 @@ object Streams {
     */
   def streamToCatalogTable(
       df: DataFrame, root: String, name: String, sinkId: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        graft.lake.CopyOnWrite.appendEpoch(batch, root, name, sinkId, epochId)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+      checkpoint: String): Unit =
+    drainBatches(df, checkpoint) { (batch, epochId) =>
+      graft.lake.CopyOnWrite.appendEpoch(batch, root, name, sinkId, epochId)
+    }
 
   /** The `s_stream_catalog_sink` gate: 4 interleaved micro-batches stream
     * into a versioned table (one snapshot version per epoch, every append
@@ -614,11 +627,10 @@ object Streams {
   def streamCatalogSink(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_scat_").toString
     val (glob, schema) = stageInterleavedEventChunks(s, d, nChunks = 4)
-    val q = streamToCatalogTable(
+    streamToCatalogTable(
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob),
       root, "ev_cat", "sinkA",
       graft.Tmp.dir("graft_ckpt_").toString)
-    q.awaitTermination()
     val vs = graft.lake.Lake.versions(s, root, "ev_cat")
     require(vs.size >= 4, s"one version per micro-batch epoch (got ${vs.size})")
     require(vs.drop(1).forall(v =>
@@ -666,25 +678,16 @@ object Streams {
   def streamUpsertWarehouse(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_supsert_").toString
     val (glob, schema) = stageInterleavedEventChunks(s, d, nChunks = 4)
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(glob)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", graft.Tmp.dir("graft_ckpt_").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // merge resolves within-batch duplicates itself (latest by
-        // orderCols), so the raw batch goes straight in — no extra
-        // pre-reduce shuffle per micro-batch
-        graft.warehouse.Warehouse.mergeIntoTable(
-          batch.sparkSession, root, "user_latest", batch,
-          keys = Seq("user_id"), orderCols = Seq("ts_us", "event_id"))
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drainBatches(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob),
+        graft.Tmp.dir("graft_ckpt_").toString) { (batch, _) =>
+      // merge resolves within-batch duplicates itself (latest by
+      // orderCols), so the raw batch goes straight in — no extra
+      // pre-reduce shuffle per micro-batch
+      graft.warehouse.Warehouse.mergeIntoTable(
+        batch.sparkSession, root, "user_latest", batch,
+        keys = Seq("user_id"), orderCols = Seq("ts_us", "event_id"))
+    }
     graft.lake.Lake.readTableFeed(s, root, "user_latest")
   }
 
@@ -710,26 +713,17 @@ object Streams {
     val lakeRoot = graft.Tmp.dir("graft_fan_lake_").toString
     val whRoot = graft.Tmp.dir("graft_fan_wh_").toString
     val (glob, schema) = stageInterleavedEventChunks(s, d, nChunks = 4)
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(glob)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", graft.Tmp.dir("graft_ckpt_").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.write.mode(SaveMode.Append).parquet(s"$lakeRoot/events_raw")
-          graft.warehouse.Warehouse.mergeIntoTable(
-            batch.sparkSession, whRoot, "user_latest", batch,
-            keys = Seq("user_id"), orderCols = Seq("ts_us", "event_id"))
-          ()
-        } finally batch.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+    drainBatches(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob),
+        graft.Tmp.dir("graft_ckpt_").toString) { (batch, _) =>
+      batch.persist()
+      try {
+        batch.write.mode(SaveMode.Append).parquet(s"$lakeRoot/events_raw")
+        graft.warehouse.Warehouse.mergeIntoTable(
+          batch.sparkSession, whRoot, "user_latest", batch,
+          keys = Seq("user_id"), orderCols = Seq("ts_us", "event_id"))
+      } finally batch.unpersist()
+    }
     val lakeAgg = s.read.parquet(s"$lakeRoot/events_raw")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), Q.moneySum(col("value")).as("value_total"))
@@ -786,56 +780,51 @@ object Streams {
     val ticks = graft.Tmp.dir("graft_cdc_ticks_")
     writeChunksOrdered(s.range(4).toDF("id"), col("id").cast("int"), ticks.toString)
     val schema = s.read.parquet(s"$ticks/chunk=0").schema
-    val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(s"$ticks/chunk=*")
-      .writeStream
-      .option("checkpointLocation", graft.Tmp.dir("graft_cdc_ck_").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        val newV = Lake.writeTableSnapshot(gen(id), root, "cdc_src")
-        val cursorPath = s"$root/cursor"
-        val cursor: Int =
-          if (new java.io.File(cursorPath).exists)
-            s.read.parquet(cursorPath).head.getInt(0)
-          else 0
-        val (changed, applied) =
-          if (cursor == 0) {
-            // first consumption: the whole base snapshot is "inserted"
-            val base = Lake.readTableFeed(s, root, "cdc_src", Some(newV))
-            (base.select(col("o_orderkey"), lit("inserted").as("change")), base)
-          } else {
-            val ch = Lake.tableChanges(s, root, "cdc_src", cursor, Seq("o_orderkey"))
-              .select(col("o_orderkey"), col("change"))
-            val cur = Lake.readTableFeed(s, root, "cdc_src", Some(newV))
-            (ch, cur.join(
-              ch.filter(col("change") =!= "deleted").select(col("o_orderkey")),
-              Seq("o_orderkey"), "left_semi"))
-          }
-        val mirrorOld: DataFrame = Lake.latestVersion(s, root, "cdc_mirror") match {
-          case Some(_) => Lake.readTableFeed(s, root, "cdc_mirror")
-          case None => applied.limit(0)
+    drainBatches(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .parquet(s"$ticks/chunk=*"),
+        graft.Tmp.dir("graft_cdc_ck_").toString) { (_, id) =>
+      val newV = Lake.writeTableSnapshot(gen(id), root, "cdc_src")
+      val cursorPath = s"$root/cursor"
+      val cursor: Int =
+        if (new java.io.File(cursorPath).exists)
+          s.read.parquet(cursorPath).head.getInt(0)
+        else 0
+      val (changed, applied) =
+        if (cursor == 0) {
+          // first consumption: the whole base snapshot is "inserted"
+          val base = Lake.readTableFeed(s, root, "cdc_src", Some(newV))
+          (base.select(col("o_orderkey"), lit("inserted").as("change")), base)
+        } else {
+          val ch = Lake.tableChanges(s, root, "cdc_src", cursor, Seq("o_orderkey"))
+            .select(col("o_orderkey"), col("change"))
+          val cur = Lake.readTableFeed(s, root, "cdc_src", Some(newV))
+          (ch, cur.join(
+            ch.filter(col("change") =!= "deleted").select(col("o_orderkey")),
+            Seq("o_orderkey"), "left_semi"))
         }
-        val mirrorNew = mirrorOld
-          .join(changed.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti")
-          .unionByName(applied)
-        Lake.writeTableSnapshot(mirrorNew, root, "cdc_mirror")
-        import s.implicits._
-        // one job for all three change-kind counts, not three scans
-        val byKind = changed.groupBy(col("change")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val nIns = byKind.getOrElse("inserted", 0L)
-        val nUpd = byKind.getOrElse("updated", 0L)
-        val nDel = byKind.getOrElse("deleted", 0L)
-        val chk = Lake.readTableFeed(s, root, "cdc_mirror")
-          .agg(Q.moneySum(col("o_totalprice")).as("c"), count(lit(1)).as("n")).head
-        Seq((id, nIns, nUpd, nDel, chk.getLong(1), chk.getDouble(0)))
-          .toDF("tick", "inserted", "updated", "deleted", "mirror_rows", "mirror_total")
-          .write.mode(SaveMode.Append).parquet(s"$root/stats")
-        Seq(newV).toDF("v").coalesce(1).write.mode(SaveMode.Overwrite).parquet(cursorPath)
-        ()
+      val mirrorOld: DataFrame = Lake.latestVersion(s, root, "cdc_mirror") match {
+        case Some(_) => Lake.readTableFeed(s, root, "cdc_mirror")
+        case None => applied.limit(0)
       }
-      .start()
-    q.awaitTermination()
+      val mirrorNew = mirrorOld
+        .join(changed.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti")
+        .unionByName(applied)
+      Lake.writeTableSnapshot(mirrorNew, root, "cdc_mirror")
+      import s.implicits._
+      // one job for all three change-kind counts, not three scans
+      val byKind = changed.groupBy(col("change")).agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val nIns = byKind.getOrElse("inserted", 0L)
+      val nUpd = byKind.getOrElse("updated", 0L)
+      val nDel = byKind.getOrElse("deleted", 0L)
+      val chk = Lake.readTableFeed(s, root, "cdc_mirror")
+        .agg(Q.moneySum(col("o_totalprice")).as("c"), count(lit(1)).as("n")).head
+      Seq((id, nIns, nUpd, nDel, chk.getLong(1), chk.getDouble(0)))
+        .toDF("tick", "inserted", "updated", "deleted", "mirror_rows", "mirror_total")
+        .write.mode(SaveMode.Append).parquet(s"$root/stats")
+      Seq(newV).toDF("v").coalesce(1).write.mode(SaveMode.Overwrite).parquet(cursorPath)
+    }
     s.read.parquet(s"$root/stats")
   }
 
@@ -896,26 +885,18 @@ object Streams {
       SummaryRewrite.create(s, "mv_stream_users", base, s"$root/mv",
         keys = Seq("user_id"),
         sums = Seq("value" -> Some("decimal(18,2)")))
-      val q = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(glob)
-        .filter(pmod(col("event_id"), lit(4)) =!= 0) // seed already applied
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", graft.Tmp.dir("graft_ckpt_").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val rows = batch.persist()
+      drainBatches(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob)
+            .filter(pmod(col("event_id"), lit(4)) =!= 0), // seed already applied
+          graft.Tmp.dir("graft_ckpt_").toString) { (batch, _) =>
+        if (!batch.isEmpty) {
+          val rows = batch.persist()
+          try {
             rows.write.mode("append").parquet(base)
             SummaryRewrite.refreshIncremental(rows.sparkSession, "mv_stream_users", rows)
-            rows.unpersist()
-          }
-          ()
+          } finally rows.unpersist()
         }
-        .start()
-      q.awaitTermination()
+      }
       val agg = s.read.parquet(base)
         .groupBy(col("user_id"))
         .agg(
@@ -958,21 +939,13 @@ object Streams {
       .filter(col("user_id") % 13 === 0).distinct()
     writeChunksOrdered(subjects, pmod(col("user_id"), lit(3)).cast("int"), reqDir)
     val schema = subjects.schema
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$reqDir/chunk=*")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", graft.Tmp.dir("graft_ckpt_").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.lake.Lake.eraseKeys(
-          batch.sparkSession, root, "events", "user_id", batch)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drainBatches(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(s"$reqDir/chunk=*"),
+        graft.Tmp.dir("graft_ckpt_").toString) { (batch, _) =>
+      graft.lake.Lake.eraseKeys(
+        batch.sparkSession, root, "events", "user_id", batch)
+    }
     graft.lake.Lake.readStreamFeed(s, root, "events")
       .groupBy(col("year"), col("month"), col("day"))
       .agg(count(lit(1)).as("remaining"))
@@ -1597,7 +1570,7 @@ object Streams {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      awaitDrained(q)
     }
     runPass()
     runPass() // restart on the same checkpoint: must be a no-op
@@ -1665,7 +1638,7 @@ object Streams {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    awaitDrained(q)
     s.read.format("graft-stats-csv").load(out)
       .filter(col("user_id") >= 40 && col("user_id") <= 90)
   }
@@ -1684,9 +1657,13 @@ object Streams {
     * files, not by shuffle fan-out) at an eighth of the state-store I/O.
     * The production deployment sizes this knob UP for real volume — the
     * invariant under test (streaming/batch parity) is unaffected either
-    * way. Restored after the gate body (which contains every `start()`/
-    * `awaitTermination()`), so downstream batch materialization of the
-    * returned frame runs at the session default.
+    * way. Restored after the gate body (which contains every drain), so
+    * downstream batch materialization of the returned frame runs at the
+    * session default. AQE cannot coalesce a stateful operator's shuffle
+    * (its partition count fixes the state-store layout), so the
+    * byte-sized AQE settings do not make this redundant: at 8 session
+    * partitions the 37 `s_*` gates ran slower without it
+    * (plans/pr3/stream_driver.md); at 4 it changes nothing.
     */
   def withReducedShuffle(fn: QueryFn): QueryFn = (s, d) => {
     val prev = s.conf.get("spark.sql.shuffle.partitions")

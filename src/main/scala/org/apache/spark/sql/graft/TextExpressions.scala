@@ -48,14 +48,22 @@ object TextKernels {
     chars
   }
 
-  /** Content-defined chunks of `text` — the exact value of the interpreted
-    * HOF chain it replaces (graft.ext.Dedup.withCdcChunks), computed in one
-    * allocation-light pass: codes[i] is the code point at 1-based position
-    * i; a cut lands after position i (8 ≤ i ≤ len) when the 8-char rolling
-    * polynomial Σ_{j=0..7} codes[i−j]·31^j is ≡ 0 (mod 32); boundaries are
+  /** Content-defined chunks of `text`, computed in one allocation-light
+    * pass: codes[i] is the code point at 1-based position i; a cut lands
+    * after position i (8 ≤ i ≤ len) when the 8-char rolling polynomial
+    * Σ_{j=0..7} codes[i−j]·31^j is ≡ 0 (mod 32); boundaries are
     * [0] ++ cuts ++ [len unless already a cut]; chunk k is the code-point
-    * substring (bnds[k], bnds[k+1]]. Matches the HOF on every edge: text
-    * shorter than 8 chars is one chunk, empty text yields one empty chunk.
+    * substring (bnds[k], bnds[k+1]]. Text shorter than 8 chars is one
+    * chunk, empty text yields one empty chunk.
+    *
+    * Codes are CODE POINTS, on any text: this is the DuckDB oracle's
+    * definition (`Dedup.cdcChunksSql`, whose `ascii` returns the code
+    * point of the first character), and the value of the interpreted HOF
+    * chain it replaced (graft.ext.Dedup.withCdcChunks), which read
+    * `ascii(substring(text, i, 1))`: Spark 4.1's `ascii` also returns the
+    * first character's code point, not its first UTF-8 byte. PropertySpec
+    * pins the cuts on non-ASCII text against a plain evaluation of the
+    * polynomial, and Spark's `ascii` against the code points.
     */
   def cdcChunks(text: UTF8String): ArrayData = {
     val cps = text.toString.codePoints().toArray

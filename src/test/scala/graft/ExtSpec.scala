@@ -212,6 +212,43 @@ class ExtSpec extends SparkSpec {
     assert(e.getMessage.contains("must exceed"))
   }
 
+  test("streamAppends: a batch id delivered twice is appended once") {
+    import graft.ext.{IncrementalLsh, IndexMaintenance}
+    val root = java.nio.file.Files.createTempDirectory("ilsh_spec6_").toString
+    IncrementalLsh.init(Seq((1L, "a b c d e")).toDF("doc_id", "text"), root)
+    var appends = 0
+    val perBatch = IndexMaintenance.appliedOnce(root) { batch =>
+      appends += 1
+      IncrementalLsh.append(batch, root)
+    }
+    val batch = Seq((2L, "a b c d f")).toDF("doc_id", "text")
+    perBatch(batch, 0L)
+    // the re-delivery after a lost checkpoint write: a second append of
+    // the same ids would also trip the monotone-id require
+    perBatch(batch, 0L)
+    assert(appends === 1)
+    perBatch(Seq((3L, "a b c d g")).toDF("doc_id", "text"), 1L)
+    assert(appends === 2)
+    assert(spark.read.parquet(s"$root/sigs").count() === 3)
+  }
+
+  test("streamAppends: chunks drain in chunk order when the highest ids are written first") {
+    import graft.ext.{IncrementalLsh, IndexMaintenance}
+    def docs(ids: Range) = ids.map(i =>
+      (i.toLong, (0 until 6).map(k => s"w${i * 7 + k}").mkString(" "))).toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("ilsh_spec7_").toString
+    val staged = java.nio.file.Files.createTempDirectory("ilsh_spec7_src_").toString
+    IncrementalLsh.init(docs(0 until 10), root)
+    // chunk 1 holds the highest ids and lands on disk first, so its file
+    // is the older one; IncrementalLsh.append rejects any batch whose ids
+    // do not exceed every ingested id, so a drain out of chunk order fails
+    graft.streaming.Streams.writeChunksOrdered(docs(20 until 30), lit(1), staged)
+    graft.streaming.Streams.writeChunksOrdered(docs(10 until 20), lit(0), staged)
+    IndexMaintenance.drainChunks(spark, root, staged, docs(0 until 1).schema)(
+      IncrementalLsh.append(_, root))
+    assert(spark.read.parquet(s"$root/sigs").select("doc_id").distinct().count() === 30)
+  }
+
   test("incremental LSH: shingle-less doc ids are still spent; empty appends rejected") {
     import graft.ext.IncrementalLsh
     val root = java.nio.file.Files.createTempDirectory("ilsh_spec4_").toString

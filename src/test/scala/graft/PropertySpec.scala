@@ -64,6 +64,40 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("CDC chunking on non-ASCII text cuts where the code-point polynomial says") {
+    // 2-, 3- and 4-byte UTF-8 characters (the emoji is two UTF-16 units)
+    // among ASCII: the cuts are positions in CODE POINTS
+    val alphabet = Vector("a", "b", " ", "é", "ß", "ж", "中", "😀")
+    val rnd = new scala.util.Random(977)
+    val texts = (0 until 30).map(_ =>
+      Seq.fill(20 + rnd.nextInt(200))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    val p31 = Seq.iterate(1L, 8)(_ * 31)
+    def cutsOf(codes: Array[Long]): Seq[Int] =
+      (8 to codes.length).filter(i =>
+        (0 until 8).map(j => codes(i - 1 - j) * p31(j)).sum % 32 == 0)
+        .filter(_ < codes.length)
+    def codePoints(t: String): Array[Long] = t.codePoints().toArray.map(_.toLong)
+    val out = Dedup.withCdcChunks(
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"),
+      "text", "ch").orderBy("doc_id").select("ch").as[Seq[String]].collect()
+    texts.zip(out).foreach { case (text, ch) =>
+      assert(ch.mkString === text)
+      val cuts = ch.map(c => c.codePointCount(0, c.length)).scanLeft(0)(_ + _)
+        .drop(1).dropRight(1)
+      assert(cuts === cutsOf(codePoints(text)), text)
+    }
+    // the case is not ASCII in disguise: hashing first UTF-8 bytes instead
+    // of code points would cut elsewhere
+    assert(texts.exists(t => cutsOf(t.codePoints().toArray.map(cp =>
+      new String(Character.toChars(cp)).getBytes("UTF-8")(0).toLong)) !=
+      cutsOf(codePoints(t))))
+    // and Spark's `ascii`, which the replaced HOF chain read, returns the
+    // code point of the first character, not its first byte
+    val asciis = alphabet.toDF("c").select(ascii(col("c")).cast("long"))
+      .as[Long].collect().toSeq
+    assert(asciis === alphabet.map(c => c.codePointAt(0).toLong))
+  }
+
   test("shingles UDF matches the naive sliding-window spec on generated texts") {
     def spec(text: String): Seq[String] = {
       val words = text.split(" ", -1)

@@ -29,6 +29,12 @@ object SparkSpec {
     val s = GraftSession.builder(master, partitions).appName(app).getOrCreate()
     require(s.catalog.functionExists("graft_dot"),
       "the SparkContext was created without GraftSession's extensions conf")
+    // Spark sizes its JVM-wide codegen cache from `SQLConf.get` when the
+    // CodeGenerator object loads. A suite whose first Spark call runs on
+    // its own thread pool (no active session there) would size it from
+    // the defaults, 100 entries; load it here, with `s` active.
+    SparkSession.setActiveSession(s)
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.getClass
     s
   }
 
