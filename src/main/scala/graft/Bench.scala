@@ -43,7 +43,8 @@ object Bench {
     val loadBefore = osLoad1()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.getOrCreate(
+      GraftSession.builder(s"local[$cpus]", cpus))
     spark.sparkContext.setLogLevel("WARN")
 
     // task CPU accumulator: local[n] runs executors in-process, but task CPU
@@ -57,6 +58,9 @@ object Bench {
         }
       }
     })
+
+    val jobCounter = new GraftSession.JobCounter
+    spark.sparkContext.addSparkListener(jobCounter)
 
     // warmup: touch every table + exercise agg/join/window codegen paths
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).schema)
@@ -76,12 +80,15 @@ object Bench {
     // codegen compiles per gate, summed over its passes: a retry finds
     // its classes cached, so the sum is what the gate compiled
     val compiles = scala.collection.mutable.Map.empty[String, Long]
+    // Spark jobs per gate, summed over its passes like the compiles
+    val jobs = scala.collection.mutable.Map.empty[String, Long]
     /** (wall_s, proc_cpu_s, task_cpu_s); wall −1.0 marks failure. */
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
       val cpu0 = processCpuSec()
       val task0 = taskCpuNanos.get()
       val compiles0 = GraftSession.codegenCompiles()
+      val jobs0 = jobCounter.jobs
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable =>
@@ -94,6 +101,7 @@ object Bench {
       val cpu = { val c1 = processCpuSec(); if (cpu0 < 0 || c1 < 0) -1.0 else c1 - cpu0 }
       val task = (taskCpuNanos.get() - task0) / 1e9
       compiles(name) = compiles.getOrElse(name, 0L) + GraftSession.codegenCompiles() - compiles0
+      jobs(name) = jobs.getOrElse(name, 0L) + jobCounter.jobs - jobs0
       // a failed query must not masquerade as a fast success
       if (ok) (wall, cpu, task) else (-1.0, cpu, task)
     }
@@ -163,8 +171,9 @@ object Bench {
     val qs = jmap(_._1)
     val cpuJson = jmap(_._2)
     val taskCpuJson = jmap(_._3)
-    val compilesJson = results.map { case (k, _) => "\"" + k + "\":" + compiles.getOrElse(k, 0L) }
-      .mkString("{", ",", "}")
+    def counts(m: scala.collection.Map[String, Long]): String =
+      results.map { case (k, _) => "\"" + k + "\":" + m.getOrElse(k, 0L) }
+        .mkString("{", ",", "}")
     val retriedJson = results.collect { case (k, (_, true)) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     // -1.0 marks a failed query; it must not distort the aggregate, so the
@@ -180,7 +189,8 @@ object Bench {
     // (before warmup), load1_after here.
     val loadAfter = osLoad1()
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""cpu":$cpuJson,"task_cpu":$taskCpuJson,"codegen_compiles":$compilesJson,""" +
+      s""""cpu":$cpuJson,"task_cpu":$taskCpuJson,"codegen_compiles":${counts(compiles)},""" +
+      s""""jobs":${counts(jobs)},""" +
       s""""cpu_total":$cpuTotal,"task_cpu_total":$taskCpuTotal,""" +
       s""""failed":$failedJson,"failed_count":${failed.size},"retried":$retriedJson,""" +
       s""""load1_before":$loadBefore,"load1_after":$loadAfter,"sf":"$sfDir"}"""

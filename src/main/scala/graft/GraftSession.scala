@@ -96,6 +96,33 @@ object GraftSession {
       .config(Tables.MoneyDecimalConf,
         sys.env.getOrElse("SPARK_GRAFT_MONEY_DECIMAL", "false"))
 
+  /** `b.getOrCreate()`, then Spark's `CodeGenerator` loaded with the new
+    * session active. Spark sizes its JVM-wide codegen cache from
+    * `SQLConf.get` on whichever thread first loads that class; loaded
+    * first on a thread with no active session (say, a caller's own pool
+    * running `Seq(...).toDF`), the cache gets Spark's default 100 entries
+    * and the 6000 set above is lost. Every entry point builds its session
+    * here.
+    */
+  def getOrCreate(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
+    SparkSession.setActiveSession(s)
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.getClass
+    s
+  }
+
+  /** Counts the Spark jobs started while it is a listener of the context.
+    * Read it after `ListenerBusSync.drain`: events still queued are not
+    * counted yet.
+    */
+  final class JobCounter extends org.apache.spark.scheduler.SparkListener {
+    private val n = new java.util.concurrent.atomic.AtomicLong(0L)
+    def jobs: Long = n.get
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      n.incrementAndGet(); ()
+    }
+  }
+
   private def compileTimes = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 
   /** Janino compiles in this JVM so far. A codegen cache hit does not

@@ -58,7 +58,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = GraftSession.builder("local[4]", "4").getOrCreate()
+    val spark = GraftSession.getOrCreate(
+      GraftSession.builder("local[4]", "4"))
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 /** Loaders for the driver testdata (`/root/testdata/sf*`, see TESTDATA.md).
   *
   * The reference leaves all schemas implicit (SURVEY.md §1.4); here the
-  * parquet footers carry the schema, so `spark.read.parquet` is enough and
-  * the vectorized reader + column pruning + predicate pushdown all apply.
+  * parquet footers carry the schema. `Lake.readParquet` reads it from one
+  * footer on the driver and hands it to the read, so loading a table
+  * starts no Spark job, and the vectorized reader + column pruning +
+  * predicate pushdown all apply.
   *
   * `events.ts` has shipped under TWO physical encodings across testdata
   * generations: parquet INT64 TIMESTAMP(NANOS) (read as a raw long under
@@ -95,11 +97,11 @@ object Tables {
     name match {
       case "events" =>
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = spark.read.parquet(path(dir, name))
+        val raw = graft.lake.Lake.readParquet(spark, path(dir, name))
         moneyProfile(spark, name,
           raw.withColumn("ts_us", tsUsCol(raw.schema("ts").dataType)))
       case _ =>
-        moneyProfile(spark, name, spark.read.parquet(path(dir, name)))
+        moneyProfile(spark, name, graft.lake.Lake.readParquet(spark, path(dir, name)))
     }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")

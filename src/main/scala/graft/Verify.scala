@@ -7,8 +7,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.getOrCreate(
+      GraftSession.builder(s"local[$cpus]", cpus))
     spark.sparkContext.setLogLevel("WARN")
+    val jobs = new GraftSession.JobCounter
+    spark.sparkContext.addSparkListener(jobs)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (driver never sets this): comma-separated
     // exact keys to dump instead of the full registry
@@ -28,6 +31,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
     // the codegen working set of a full registry run, which sizes
     // GraftSession's cache: every compile is a cache miss, so below the
     // cap each one is a distinct class
@@ -37,7 +41,7 @@ object Verify {
     val metaspace = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.stream
       .filter(_.getName == "Metaspace").mapToLong(_.getUsage.getUsed).sum / mb
     println(f"[verify] codegen_compiles=${GraftSession.codegenCompiles()} " +
-      f"heap_used_mb=$heap%.0f metaspace_used_mb=$metaspace%.0f")
+      f"heap_used_mb=$heap%.0f metaspace_used_mb=$metaspace%.0f spark_jobs=${jobs.jobs}")
     spark.stop()
     // outputs are written; reclaim every scratch dir this session created
     Tmp.purge()

@@ -89,7 +89,7 @@ object BloomSidecar {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     if (cols.isEmpty) return
     val fpp = props.get(FppProp).map(_.toDouble).getOrElse(0.03)
-    val f = stage.getFileSystem(spark.sessionState.newHadoopConf())
+    val f = Lake.fs(spark, stage.toString)
     val hasData = f.listStatus(stage).exists { st =>
       val n = st.getPath.getName
       st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
@@ -99,7 +99,7 @@ object BloomSidecar {
     val expected = StatsSidecar.readSidecar(f, stage)
       .map(_.values.map(_.rows).filter(_ > 0).maxOption.getOrElse(1024L))
       .getOrElse(1024L).max(1024L)
-    val df = spark.read.parquet(stage.toString)
+    val df = Lake.readParquet(spark, stage.toString)
     val eligible = cols.filter(c => df.schema.fields.exists(fd =>
       fd.name == c && (isLongFamily(fd.dataType) || fd.dataType == StringType)))
     if (eligible.isEmpty) return
@@ -157,16 +157,15 @@ object BloomSidecar {
       case _ => None
     }
     if (constraints.isEmpty) return files
-    val conf = spark.sessionState.newHadoopConf()
     val byDir = files.groupBy(fp => new Path(fp).getParent)
     val bloomPaths = byDir.keys.toSeq.flatMap { dir =>
       val p = new Path(dir, sidecarName)
-      if (p.getFileSystem(conf).exists(p)) Some(p.toString) else None
+      if (Lake.fs(spark, p.toString).exists(p)) Some(p.toString) else None
     }
     if (bloomPaths.isEmpty) return files
     import spark.implicits._
     val cons = constraints.toArray
-    val excluded: Set[(String, String)] = spark.read.parquet(bloomPaths: _*)
+    val excluded: Set[(String, String)] = Lake.readParquet(spark, bloomPaths: _*)
       .select(col("file"), col("col"),
         col("bloom"), col("_metadata.file_path").as("sp"))
       .as[(String, String, Array[Byte], String)]

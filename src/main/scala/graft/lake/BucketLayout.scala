@@ -51,8 +51,7 @@ object BucketLayout {
       }
     }
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import Lake.fs
 
   /** The bucket id expression — MUST stay `pmod(hash(col), N)`:
     * `functions.hash` is Murmur3 with seed 42, exactly
@@ -108,9 +107,8 @@ object BucketLayout {
         st.isFile && nm.endsWith(".parquet") && !nm.startsWith("_") && !nm.startsWith(".")
       }.map(_.getPath.toString)
       if (files.isEmpty) return
-      val sample = spark.read.parquet(files.head)
-      if (!sample.columns.contains(c)) return
-      val perFile = spark.read.parquet(files: _*)
+      if (!Lake.parquetSchema(spark, files.head).fieldNames.contains(c)) return
+      val perFile = Lake.readParquet(spark, files: _*)
         .select(col("_metadata.file_path").as("f"), bucketId(c, n).as("b"))
         .groupBy("f").agg(min("b").as("mn"), max("b").as("mx"))
         .collect()

@@ -40,8 +40,7 @@ import org.apache.spark.sql.functions._
   */
 object CopyOnWrite {
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import Lake.fs
 
   private def norm(p: String): String = new Path(p).toUri.getPath
 
@@ -307,8 +306,8 @@ object CopyOnWrite {
             val del = MergeOnRead.deletesOf(spark, root, name, base)
             val eq = MergeOnRead.eqDeletesOf(spark, root, name, base)
             val declared = Lake.declaredSchema(spark, root, name, base)
-            val visible = declared.map(Lake.visibleSchema)
-              .getOrElse(spark.read.parquet(files.head).schema)
+            val visible = Lake.visibleSchema(
+              Lake.declaredOrFooter(spark, declared, files.head))
             // the cluster_by write policy applies per epoch: each
             // appended file covers a narrow key slice, so stats pruning
             // holds on streaming tables between compactions
@@ -501,8 +500,8 @@ object CopyOnWrite {
     // yields the source keys' distinct buckets (≤ N ints, whatever the
     // source size) and only those buckets' files are scanned — a small
     // MERGE into a 100 TB bucketed table probes its buckets, not the table
-    val targetSchema = declared.map(Lake.visibleSchema)
-      .getOrElse(spark.read.parquet(files.head).schema)
+    val targetSchema = Lake.visibleSchema(
+      Lake.declaredOrFooter(spark, declared, files.head))
     val probeFiles = BucketLayout.filesForKeys(spark, files, srcKeys, targetSchema)
     val touched =
       if (probeFiles.isEmpty) Nil

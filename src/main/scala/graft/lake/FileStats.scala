@@ -76,7 +76,7 @@ object FileStats {
   def buildStats(spark: SparkSession, dataPath: String, statsPath: String, cols: Seq[String]): Unit = {
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
-    spark.read.parquet(dataPath)
+    Lake.readParquet(spark, dataPath)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
@@ -95,14 +95,14 @@ object FileStats {
     // inputFiles and _metadata.file_path render the same file with
     // different URI forms (file:/ vs file:///) — compare scheme-free paths
     def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    val indexed = spark.read.parquet(statsPath)
+    val indexed = Lake.readParquet(spark, statsPath)
       .select("file").collect().map(r => norm(r.getString(0))).toSet
-    val allFiles = spark.read.parquet(dataPath).inputFiles
+    val allFiles = Lake.readParquet(spark, dataPath).inputFiles
     val newFiles = allFiles.filterNot(f => indexed.contains(norm(f)))
     if (newFiles.isEmpty) return 0
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
-    spark.read.parquet(newFiles: _*)
+    Lake.readParquet(spark, newFiles: _*)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
@@ -114,7 +114,7 @@ object FileStats {
     * kept). Exposed for the skip-ratio assertions in LakeSpec.
     */
   def candidateFiles(spark: SparkSession, statsPath: String, c: String, lo: Long, hi: Long): Seq[String] = {
-    val stats = spark.read.parquet(statsPath)
+    val stats = Lake.readParquet(spark, statsPath)
     stats.filter(
       col(s"${c}_min").isNull || col(s"${c}_max").isNull ||
         !(col(s"${c}_min") > hi || col(s"${c}_max") < lo))
@@ -127,7 +127,7 @@ object FileStats {
   def readRange(spark: SparkSession, statsPath: String, c: String, lo: Long, hi: Long): DataFrame = {
     val files = candidateFiles(spark, statsPath, c, lo, hi)
     require(files.nonEmpty, s"no file can contain $c in [$lo, $hi]")
-    spark.read.parquet(files: _*)
+    Lake.readParquet(spark, files: _*)
       .filter(col(c) >= lo && col(c) <= hi)
   }
 }
@@ -174,7 +174,7 @@ object BloomIndex {
       spark: SparkSession, dataPath: String, indexPath: String, c: String,
       expectedPerFile: Long = 1L << 20, fpp: Double = 0.01): Unit = {
     val agg = udaf(new BloomAgg(expectedPerFile, fpp))
-    spark.read.parquet(dataPath)
+    Lake.readParquet(spark, dataPath)
       .filter(col(c).isNotNull)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(agg(col(c).cast("long")).as("bloom"))
@@ -194,7 +194,7 @@ object BloomIndex {
       spark: SparkSession, indexPath: String, keys: Seq[Long]): DataFrame = {
     import spark.implicits._
     val ks = keys.toArray
-    spark.read.parquet(indexPath)
+    Lake.readParquet(spark, indexPath)
       .select(col("file"), col("bloom")).as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.filter { case (_, bytes) =>
@@ -222,7 +222,7 @@ object BloomIndex {
       c: String, keys: Seq[Long]): DataFrame = {
     val files = candidateFiles(spark, indexPath, keys)
     if (files.isEmpty)
-      spark.read.parquet(dataPath).filter(lit(false))
-    else spark.read.parquet(files: _*).filter(col(c).isin(keys: _*))
+      Lake.readParquet(spark, dataPath).filter(lit(false))
+    else Lake.readParquet(spark, files: _*).filter(col(c).isin(keys: _*))
   }
 }

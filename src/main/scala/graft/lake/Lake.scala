@@ -2,9 +2,14 @@ package graft.lake
 
 import java.time.LocalDate
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The partitioned parquet data lake (SURVEY.md §2.A6-A9).
   *
@@ -268,8 +273,85 @@ object Lake {
     Some(z)
   }
 
-  private def fs(spark: SparkSession, path: String) =
+  /** The filesystem of `path`, looked up through the context's Hadoop conf
+    * (`sessionState.newHadoopConf()` would copy the whole conf per call).
+    */
+  def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The data schema `spark.read.parquet(paths: _*)` infers, resolved on
+    * the driver: one footer read instead of Spark's one-task inference job.
+    * Partition columns are not part of it; a read discovers them from
+    * directory names either way.
+    * The footer is that of the file inference reads, the least path by
+    * string among the data files Spark's listing finds under `paths`
+    * (summary files, which Spark does not write, are not consulted). It
+    * is converted by Spark's own `readSchemaFromFooter` under a converter
+    * built from the session conf at call time, so `nanosAsLong`, Spark's
+    * row-metadata key and NTZ inference apply as they do in inference,
+    * and the result is nullable as inference makes it. Where no such file
+    * can be named (no data file, a missing or glob path, a streaming
+    * sink's metadata log) Spark infers, and raises its own errors.
+    */
+  def parquetSchema(spark: SparkSession, paths: String*): StructType =
+    firstDataFile(spark, paths) match {
+      case Some(file) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        nullable(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+          .asInstanceOf[StructType]
+      case None => spark.read.parquet(paths: _*).schema
+    }
+
+  /** `spark.read.parquet(paths: _*)` under its [[parquetSchema]]. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(parquetSchema(spark, paths: _*)).parquet(paths: _*)
+
+  /** A version's raw schema: the declared one if the table evolved, else
+    * the footer schema of `file`, one of its data files.
+    */
+  private[graft] def declaredOrFooter(
+      spark: SparkSession, declared: Option[StructType], file: => String): StructType =
+    declared.getOrElse(parquetSchema(spark, file))
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The file parquet inference would read under `paths`, if it can be
+    * named from a listing. Names are skipped as Spark's listing skips them
+    * (`HadoopFSUtils.shouldFilterOutPathName`). A directory's children are
+    * visited with a subdirectory keyed `name/`: everything under it sorts
+    * as that prefix does, so the first data file found is the least path.
+    */
+  private def firstDataFile(spark: SparkSession, paths: Seq[String]): Option[FileStatus] = {
+    def skipped(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    def first(f: FileSystem, dir: Path): Option[FileStatus] =
+      f.listStatus(dir).filterNot(s => skipped(s.getPath.getName))
+        .sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
+        .iterator
+        .flatMap(s => if (s.isDirectory) first(f, s.getPath) else Some(s))
+        .nextOption()
+    if (paths.isEmpty || paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else try {
+      val roots = paths.map { p => val f = fs(spark, p); (f, f.getFileStatus(new Path(p))) }
+      val sinkLog = roots match {
+        case Seq((f, st)) => st.isDirectory && f.exists(new Path(st.getPath, "_spark_metadata"))
+        case _ => false
+      }
+      if (sinkLog) None
+      else roots.flatMap { case (f, st) => if (st.isDirectory) first(f, st.getPath) else Some(st) }
+        .minByOption(_.getPath.toString)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Append a batch into date partitions (A6/A8, kafka_consumer_datalake.py:
     * 33-46). `eventTimeCol` partitions by event time; `None` mirrors the
@@ -303,7 +385,7 @@ object Lake {
   def readStreamFeed(
       spark: SparkSession, root: String, name: String,
       from: Option[LocalDate] = None, to: Option[LocalDate] = None): DataFrame = {
-    val df = spark.read.parquet(streamPath(root, name))
+    val df = readParquet(spark, streamPath(root, name))
     val dt = make_date(col("year"), col("month"), col("day"))
     val lo = from.map(d => dt >= lit(d.toString).cast("date"))
     val hi = to.map(d => dt <= lit(d.toString).cast("date"))
@@ -889,7 +971,7 @@ object Lake {
         val df = spark.read.schema(raw).parquet(files: _*)
         if (withMeta) df.select(col("*"), col("_metadata")) else df
       case None =>
-        val df = spark.read.parquet(files: _*)
+        val df = readParquet(spark, files: _*)
         if (withMeta) df.select(col("*"), col("_metadata")) else df
     }
   }
@@ -1080,9 +1162,8 @@ object Lake {
       name: String): (Int, org.apache.spark.sql.types.StructType) = {
     val base = latestVersion(spark, root, name).getOrElse(
       throw new IllegalStateException(s"no versions for table feed $name"))
-    val raw = declaredSchema(spark, root, name, base).getOrElse(
-      spark.read.parquet(
-        snapshotFiles(spark, root, name, base).head).schema)
+    val raw = declaredOrFooter(spark, declaredSchema(spark, root, name, base),
+      snapshotFiles(spark, root, name, base).head)
     (base, raw)
   }
 
@@ -1195,7 +1276,7 @@ object Lake {
         case None => files
       }
       MergeOnRead.readWithDeletes(spark, read, del, eq, declared)
-    } else spark.read.parquet(resolveSnapshotDir(spark, root, name, v))
+    } else readParquet(spark, resolveSnapshotDir(spark, root, name, v))
   }
 
   /** COMPACT a table: re-publish the latest snapshot's RESOLVED content —
@@ -1598,8 +1679,8 @@ object Lake {
     val specs = layouts.flatten.map(l => (l._1, l._2)).distinct
     if (specs.size != 1 || !keys.contains(specs.head._1)) return None
     val n = specs.head._2
-    val schema = decls.head.map(visibleSchema).getOrElse(
-      spark.read.parquet(layouts.head.get._3.keys.head).schema)
+    val schema = visibleSchema(
+      declaredOrFooter(spark, decls.head, layouts.head.get._3.keys.head))
     val sides = layouts.flatten.map(l => groupedByBucket(spark, l._3, n))
     val out = org.apache.spark.sql.graft.BucketedMerge
       .merge3(spark, sides(0), sides(1), sides(2), schema, keys)
@@ -1684,8 +1765,7 @@ object Lake {
       (cA, nA, mapA) <- BucketLayout.layoutOf(spark, root, name, vOld)
       (cB, nB, mapB) <- BucketLayout.layoutOf(spark, root, name, vNew)
       if cA == cB && nA == nB && keys.contains(cA)
-      schema = dA.map(visibleSchema).getOrElse(
-        spark.read.parquet(mapA.keys.head).schema)
+      schema = visibleSchema(declaredOrFooter(spark, dA, mapA.keys.head))
       // the bucketed kernel classifies `updated` by UnsafeRow BYTE equality
       // of the value projection; MapType's binary encoding is not canonical
       // per logical value (a rewrite may reorder entries), so a map-bearing
@@ -2026,8 +2106,7 @@ object Lake {
             org.apache.spark.sql.sources.In(
               c, sample.map(_.get(i)).distinct.toArray)
           }
-          val schema = visibleSchema(decl.getOrElse(
-            spark.read.parquet(shared.head).schema))
+          val schema = visibleSchema(declaredOrFooter(spark, decl, shared.head))
           val byStats = StatsSidecar.candidateFiles(spark, shared, schema, filters)
           val byBucket = BucketLayout.filterCandidates(spark, byStats, schema, filters)
           val bloomCols = tableProperties(spark, root, name)
@@ -2191,7 +2270,7 @@ object Lake {
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val tmp = new Path(p.getParent, s".compact_${p.getName}")
-    spark.read.parquet(partDir).repartition(nOut)
+    readParquet(spark, partDir).repartition(nOut)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val aside = new Path(p.getParent, s".old_${p.getName}")
     f.delete(aside, true)
@@ -2232,7 +2311,7 @@ object Lake {
     val f = fs(spark, tablePath(root, name))
     policyWriter(spark, root, name, df).parquet(staged.toString)
     val audit = graft.governance.Quality
-      .evaluate(spark.read.parquet(staged.toString), checks)
+      .evaluate(readParquet(spark, staged.toString), checks)
       .collect()
     val failed = audit.filter(!_.getBoolean(3)).map(_.getString(0)).toSeq
     if (failed.nonEmpty) {

@@ -59,8 +59,7 @@ object MergeOnRead {
     */
   val eqDeletesName = "_eq_deletes"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import Lake.fs
 
   /** Test-only stall point between a delete's base probe and its CAS
     * commit — the lost-update window. Lets ConcurrencySpec land a
@@ -93,7 +92,7 @@ object MergeOnRead {
       spark: SparkSession, root: String, name: String,
       version: Int): Option[DataFrame] = {
     if (!hasDeletes(spark, root, name, version)) None
-    else Some(spark.read.parquet(
+    else Some(Lake.readParquet(spark,
       s"${Lake.resolveSnapshotDir(spark, root, name, version)}/$deletesName"))
   }
 
@@ -109,7 +108,7 @@ object MergeOnRead {
       spark: SparkSession, root: String, name: String,
       version: Int): Option[DataFrame] = {
     if (!hasEqDeletes(spark, root, name, version)) None
-    else Some(spark.read.parquet(
+    else Some(Lake.readParquet(spark,
       s"${Lake.resolveSnapshotDir(spark, root, name, version)}/$eqDeletesName"))
   }
 
@@ -259,8 +258,8 @@ object MergeOnRead {
         throw new IllegalStateException(s"no versions for table feed $name"))
       val files = Lake.snapshotFiles(spark, root, name, base)
       val declared = Lake.declaredSchema(spark, root, name, base)
-      val tableCols = declared.map(Lake.visibleSchema)
-        .getOrElse(spark.read.parquet(files.head).schema).fieldNames.toSet
+      val tableCols = Lake.visibleSchema(
+        Lake.declaredOrFooter(spark, declared, files.head)).fieldNames.toSet
       require(keys.columns.forall(tableCols.contains),
         s"deleteByKeys: key columns ${keys.columns.mkString(",")} must all " +
           s"exist in $name's schema")

@@ -15,8 +15,7 @@ object Retention {
 
   case class Pruned(path: String, deleted: Boolean)
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import Lake.fs
 
   /** Delete day partitions older than `cutoff` (exclusive) for a stream feed
     * (C1, data_retention.py:13-51). Empty month/year parents are pruned too.

@@ -354,7 +354,7 @@ object StatsSidecar {
     val out = files.map { file =>
       val p = new Path(file)
       byDir.getOrElseUpdate(p.getParent.toString, {
-        val f = p.getFileSystem(spark.sessionState.newHadoopConf())
+        val f = Lake.fs(spark, p.toString)
         readSidecar(f, p.getParent)
       }).flatMap(_.get(p.getName))
     }
@@ -385,7 +385,7 @@ object StatsSidecar {
     val dirs = Lake.snapshotFiles(spark, root, name, v)
       .map(f => new Path(f).getParent).distinct
     val stamped = dirs.flatMap { dir =>
-      val f = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      val f = Lake.fs(spark, dir.toString)
       if (!force && f.exists(new Path(dir, sidecarName))) None
       else {
         // backfilled files may come from ANY writer — string bounds are
@@ -548,7 +548,7 @@ object StatsSidecar {
       val p = new Path(file)
       val dir = p.getParent
       val dirOk = dirAdmitted.getOrElseUpdate(dir.toString, {
-        val f = p.getFileSystem(spark.sessionState.newHadoopConf())
+        val f = Lake.fs(spark, p.toString)
         readGroup(f, dir) match {
           case Some(g) => filters.forall(mightMatch(_, g, schema))
           case None => true // no envelope: fall through to per-file
@@ -557,7 +557,7 @@ object StatsSidecar {
       dirOk && {
         // LEVEL 2: per-file evaluation, admitted dirs only
         val dirStats = byDir.getOrElseUpdate(dir.toString, {
-          val f = p.getFileSystem(spark.sessionState.newHadoopConf())
+          val f = Lake.fs(spark, p.toString)
           readSidecar(f, dir)
         })
         dirStats.flatMap(_.get(p.getName)) match {

@@ -22,7 +22,8 @@ object BpeTrainBench {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rounds = args.lift(1).map(_.toInt).getOrElse(50)
-    val spark = graft.GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = graft.GraftSession.getOrCreate(
+      graft.GraftSession.builder("local[32]", "32"))
     spark.sparkContext.setLogLevel("ERROR")
 
     val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -38,7 +38,8 @@ object ExplainDump {
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else graft.SparkEntry.queries.keySet.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = graft.GraftSession.getOrCreate(
+      graft.GraftSession.builder(s"local[$cpus]", cpus))
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -18,7 +18,8 @@ object GateProfile {
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = graft.GraftSession.getOrCreate(
+      graft.GraftSession.builder(s"local[$cpus]", cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     case class Agg(var taskCpuNs: Long = 0L, var shufWrite: Long = 0L,

@@ -12,7 +12,8 @@ package graft.tools
 object LedgerBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = graft.GraftSession.builder("local[8]", "8").appName("graft-ledger-bench").getOrCreate()
+    val spark = graft.GraftSession.getOrCreate(
+      graft.GraftSession.builder("local[8]", "8").appName("graft-ledger-bench"))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val root = graft.Tmp.dir("graft_ledbench_").toString

@@ -17,7 +17,8 @@ import graft.warehouse.SummaryRewrite
 object MvRefreshBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = graft.GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = graft.GraftSession.getOrCreate(
+      graft.GraftSession.builder("local[32]", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val root = graft.Tmp.dir("mvscale_").toString
 

@@ -51,7 +51,8 @@ object ScaleUp {
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.getOrCreate(
+      GraftSession.builder(s"local[$cpus]", cpus))
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     run(spark, src, dst, factor)

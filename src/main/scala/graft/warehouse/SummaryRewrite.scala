@@ -125,7 +125,7 @@ object SummaryRewrite {
       mins: Seq[String] = Nil,
       maxs: Seq[String] = Nil,
       counts: Seq[String] = Nil): MvDef = {
-    val base = spark.read.parquet(basePath)
+    val base = graft.lake.Lake.readParquet(spark, basePath)
     val measures =
       sums.map { case (c, ct) =>
         Measure("sum", c, ct.map(DataType.fromDDL), s"mv_sum_$c")
@@ -260,7 +260,7 @@ object SummaryRewrite {
       spark, lakeRoot, table, mv.rowKeys, start = mv.asOfVersion, end = to,
       preimages = true)
     val base = graft.lake.Lake.readTableFeed(spark, lakeRoot, table, Some(to))
-    val current = spark.read.parquet(mv.mvPath)
+    val current = graft.lake.Lake.readParquet(spark, mv.mvPath)
     // the distinct group keys the change set touches, bounded: one extra
     // row tells "too many" apart from "exactly the bound"
     val affected = changes.select(mv.keys.map(col): _*).distinct()
@@ -409,7 +409,7 @@ object SummaryRewrite {
       sb
     }
     try {
-      val current = spark.read.parquet(mv.mvPath)
+      val current = graft.lake.Lake.readParquet(spark, mv.mvPath)
       val mergeCols = mv.measures.map { m =>
         (m.kind match {
           case "sum" | "cnt" => sum(col(m.mvCol))
@@ -524,7 +524,7 @@ object SummaryRewrite {
       else {
         // fresh relation per rewrite: unique exprIds even if the same view
         // serves two aggregates in one plan (e.g. a self-join of rollups)
-        val mvPlan = session.read.parquet(mv.mvPath).queryExecution.analyzed
+        val mvPlan = graft.lake.Lake.readParquet(session, mv.mvPath).queryExecution.analyzed
         val byName: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
 
         def mvMeasure(fn: AggregateFunction): Option[Expression] = {

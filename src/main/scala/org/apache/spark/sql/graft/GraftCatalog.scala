@@ -225,8 +225,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def tableDir(ident: Identifier): Path =
     new Path(s"$root/${ident.namespace().mkString("/")}/${ident.name()}")
 
-  private def fs(p: Path) =
-    p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+  private def fs(p: Path) = graft.lake.Lake.fs(SparkSession.active, p.toString)
 
   /** (version, commitMillis) pairs of a table, ascending by version. */
   private def snapshots(ident: Identifier): Seq[(Int, Long)] = {
@@ -274,9 +273,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // not yet carry — hand the VISIBLE shape to the parquet table so
       // scans null-fill (rename/drop-mapped versions never scan through
       // this delegate — newScanBuilder routes them to the resolving
-      // fallback — but its schema() is still the catalog's answer)
-      graft.lake.Lake.declaredSchema(spark, root, ident.name(), version)
-        .map(graft.lake.Lake.visibleSchema),
+      // fallback — but its schema() is still the catalog's answer).
+      // Always a schema: without one the table infers it in a Spark job.
+      Some(graft.lake.Lake.declaredSchema(spark, root, ident.name(), version)
+        .map(graft.lake.Lake.visibleSchema)
+        .getOrElse(graft.lake.Lake.parquetSchema(spark, paths: _*))),
       classOf[ParquetFileFormat])
   }
 
@@ -907,7 +908,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                     morStaging.add(tmp)
                     ParquetTable(s"${delegate.name}-mor-resolved", spark,
                       CaseInsensitiveStringMap.empty(), Seq(tmp.toString),
-                      None, classOf[ParquetFileFormat])
+                      Some(graft.lake.Lake.parquetSchema(spark, tmp.toString)),
+                      classOf[ParquetFileFormat])
                       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
                   }
                   override def toBatch: org.apache.spark.sql.connector.read.Batch =
@@ -1369,11 +1371,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val files = graft.lake.Lake.snapshotFiles(spark, root, name, v)
         val ownDir = new Path(graft.lake.Lake.resolveSnapshotDir(
           spark, root, name, v))
-        val conf = spark.sessionState.newHadoopConf()
         val own = files.count(f => new Path(f).getParent ==
-          ownDir.getFileSystem(conf).makeQualified(ownDir))
+          fs(ownDir).makeQualified(ownDir))
         val bytes = files.map { f =>
-          val p = new Path(f); p.getFileSystem(conf).getFileStatus(p).getLen
+          val p = new Path(f); fs(p).getFileStatus(p).getLen
         }.sum
         val rawRows = graft.lake.StatsSidecar.statsForFiles(spark, files)
           .map(_.map(_.rows).sum).getOrElse(-1L)

@@ -108,7 +108,7 @@ object GraftChangeFeed {
           chunk.reduce(_ unionByName _).write.parquet(p)
           p
       }.toSeq
-      spark.read.parquet(parts: _*)
+      graft.lake.Lake.readParquet(spark, parts: _*)
     }
   }
 
@@ -295,7 +295,7 @@ class GraftChangeFeedStream(
     val e = end.asInstanceOf[VersionOffset].v
     if (e <= s) return Array.empty
     val dir = scratchDir(s, e)
-    val f = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val f = graft.lake.Lake.fs(spark, dir.toString)
     if (!f.exists(new Path(dir, "_SUCCESS"))) {
       changesBetween(spark, root, name, keyCols, s, e, preimages)
         .select(required.fieldNames.toIndexedSeq.map(col): _*)
@@ -317,7 +317,7 @@ class GraftChangeFeedStream(
     val e = end.asInstanceOf[VersionOffset].v
     try {
       val base = new Path(s"$checkpointLocation/graft_cdf")
-      val f = base.getFileSystem(spark.sessionState.newHadoopConf())
+      val f = graft.lake.Lake.fs(spark, base.toString)
       if (f.exists(base)) f.listStatus(base).foreach { st =>
         // dir names: <start>_<end>_<shapeHash> (pre-r15 dirs: <start>_<end>)
         st.getPath.getName.split("_") match {

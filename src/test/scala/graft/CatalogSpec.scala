@@ -558,4 +558,17 @@ class CatalogSpec extends SparkSpec {
     assert(spark.table(s"$cat.tables.widen_eq").schema("k").dataType ===
       org.apache.spark.sql.types.LongType)
   }
+
+  test("catalog schemas and table_changes plans start no Spark job") {
+    Lake.writeTableSnapshot(snap(5), root, "nojob")
+    Lake.writeTableSnapshot(snap(8), root, "nojob")
+    assert(SparkSpec.jobsDuring(spark) {
+      spark.table(s"$cat.tables.nojob").schema
+      spark.sql(s"SELECT * FROM $cat.tables.nojob VERSION AS OF 1").schema
+      spark.sql(
+        s"SELECT * FROM table_changes('$cat.tables.nojob', 1, 'n_nationkey')").schema
+    } === 0)
+    assert(spark.sql(
+      s"SELECT * FROM table_changes('$cat.tables.nojob', 1, 'n_nationkey')").count() === 3)
+  }
 }

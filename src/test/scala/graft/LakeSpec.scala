@@ -1531,4 +1531,24 @@ class LakeSpec extends SparkSpec {
       (5L, "updated", 2), (250L, "deleted", 3), (7L, "deleted", 4),
       (400L, "inserted", v5), (1L, "updated", v6)))
   }
+
+  test("building table and lake reads starts no Spark job") {
+    import graft.lake.MergeOnRead
+    val sf = "/root/testdata/sf0.001"
+    assert(SparkSpec.jobsDuring(spark) {
+      Tables.all.foreach(t => Tables.load(spark, sf, t))
+    } === 0, "Tables.load must not infer a schema in a Spark job")
+    val root = scratch()
+    Lake.writeTableSnapshot(
+      (1 to 60).map(i => (i.toLong, i % 6, s"r$i")).toDF("k", "u", "x").repartition(3),
+      root, "nojob_t")
+    MergeOnRead.deleteByKeys(spark, root, "nojob_t", Seq(1).toDF("u"))
+    MergeOnRead.deleteWhere(spark, root, "nojob_t", col("k") <= 5)
+    assert(MergeOnRead.hasAnyDeletes(spark, root, "nojob_t", 3))
+    assert(SparkSpec.jobsDuring(spark) {
+      Lake.readTableFeed(spark, root, "nojob_t")
+      Lake.readTableFeed(spark, root, "nojob_t", Some(1))
+    } === 0, "planning a merge-on-read read must not start a job")
+    assert(Lake.readTableFeed(spark, root, "nojob_t").count() === 60 - 10 - 4)
+  }
 }

@@ -26,16 +26,22 @@ object SparkSpec {
     * every rule twice (an audited read would log twice).
     */
   def build(master: String, partitions: String, app: String): SparkSession = {
-    val s = GraftSession.builder(master, partitions).appName(app).getOrCreate()
+    val s = GraftSession.getOrCreate(GraftSession.builder(master, partitions).appName(app))
     require(s.catalog.functionExists("graft_dot"),
       "the SparkContext was created without GraftSession's extensions conf")
-    // Spark sizes its JVM-wide codegen cache from `SQLConf.get` when the
-    // CodeGenerator object loads. A suite whose first Spark call runs on
-    // its own thread pool (no active session there) would size it from
-    // the defaults, 100 entries; load it here, with `s` active.
-    SparkSession.setActiveSession(s)
-    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.getClass
     s
+  }
+
+  /** The Spark jobs `f` starts on `spark`'s context, counted once the
+    * listener bus has delivered every event.
+    */
+  def jobsDuring(spark: SparkSession)(f: => Unit): Long = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusSync.drain(sc)
+    val counter = new GraftSession.JobCounter
+    sc.addSparkListener(counter)
+    try { f; org.apache.spark.graft.ListenerBusSync.drain(sc); counter.jobs }
+    finally sc.removeSparkListener(counter)
   }
 
   /** Runs `f` in a fresh production-configured session on the JVM's

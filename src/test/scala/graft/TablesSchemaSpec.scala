@@ -92,6 +92,61 @@ class TablesSchemaSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", prior)
   }
 
+  test("the driver-side schema resolver gives the schema Spark infers") {
+    import graft.lake.{Lake, MergeOnRead}
+    import spark.implicits._
+    // a read under the resolved schema has the inferred read's schema,
+    // partition columns (discovered from directory names) included
+    def same(paths: String*): Unit = assert(
+      Lake.readParquet(spark, paths: _*).schema === spark.read.parquet(paths: _*).schema,
+      s"resolved schema differs from inference on ${paths.mkString(", ")}")
+    // every testdata table; `events.ts` is read under nanosAsLong
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    Tables.all.foreach { t =>
+      val p = Tables.path(sf, t)
+      assert(Lake.parquetSchema(spark, p) === spark.read.parquet(p).schema, t)
+    }
+    // a lake version with both delete sidecars, its data files, a
+    // partitioned stream feed, and the files after a metadata-only ADD COLUMN
+    val root = java.nio.file.Files.createTempDirectory("resolver_spec_").toString
+    Lake.writeTableSnapshot(
+      (1 to 40).map(i => (i.toLong, i % 4, s"r$i", Seq(i.toDouble))).toDF("k", "u", "x", "a")
+        .repartition(3), root, "rs")
+    MergeOnRead.deleteByKeys(spark, root, "rs", Seq(2).toDF("u"))
+    MergeOnRead.deleteWhere(spark, root, "rs", $"k" <= 5)
+    val v = Lake.latestVersion(spark, root, "rs").get
+    val dir = Lake.resolveSnapshotDir(spark, root, "rs", v)
+    assert(MergeOnRead.hasDeletes(spark, root, "rs", v) &&
+      MergeOnRead.hasEqDeletes(spark, root, "rs", v))
+    same(s"$dir/${MergeOnRead.deletesName}")
+    same(s"$dir/${MergeOnRead.eqDeletesName}")
+    same(Lake.snapshotFiles(spark, root, "rs", v): _*)
+    same(Lake.snapshotFiles(spark, root, "rs", v).reverse: _*)
+    same(Lake.resolveSnapshotDir(spark, root, "rs", 1))
+    Lake.appendStream(Seq((1L, "2024-01-01 10:00:00"), (2L, "2024-02-03 10:00:00"))
+      .toDF("id", "ts").withColumn("ts", $"ts".cast("timestamp")),
+      root, "feed", eventTimeCol = Some("ts"))
+    same(s"$root/streams/feed")
+    val added = Lake.addColumn(spark, root, "rs",
+      StructField("extra", StringType))
+    same(Lake.snapshotFiles(spark, root, "rs", added): _*)
+    assert(Lake.readTableFeed(spark, root, "rs").schema.fieldNames.last === "extra")
+  }
+
+  test("an empty or missing directory raises the error Spark raises") {
+    import graft.lake.Lake
+    val empty = java.nio.file.Files.createTempDirectory("resolver_empty_")
+    java.nio.file.Files.createFile(empty.resolve("_SUCCESS"))
+    for (p <- Seq(empty.toString, empty.resolve("missing").toString)) {
+      val spark0 = intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(p))
+      val ours = intercept[org.apache.spark.sql.AnalysisException](
+        Lake.readParquet(spark, p))
+      assert(ours.getCondition === spark0.getCondition)
+      assert(ours.getMessage === spark0.getMessage)
+    }
+  }
+
   test("no raw ts arithmetic outside Tables.tsUsCol (source audit)") {
     // the audit the round-6 breakage called for: every `ts DIV 1000` (the
     // nanos-encoding assumption) must live in exactly one place — tsUsCol
