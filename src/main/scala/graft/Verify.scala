@@ -34,8 +34,10 @@ object Verify {
     org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
     // the codegen working set of a full registry run, which sizes
     // GraftSession's cache: every compile is a cache miss, so below the
-    // cap each one is a distinct class
-    System.gc()
+    // cap each one is a distinct class. The heap is read after three full
+    // collections, as perfbench reads heap_live_mb: after one or two the
+    // reading still swings by several MB between runs
+    (1 to 3).foreach { _ => System.gc(); Thread.sleep(300) }
     val mb = 1048576.0
     val heap = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / mb
     val metaspace = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.stream

@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** FILE-GRANULAR copy-on-write mutations over the versioned snapshot
@@ -119,7 +119,7 @@ object CopyOnWrite {
       spark: SparkSession, root: String, name: String, expectedLatest: Int,
       rewritten: DataFrame, carried: Seq[String],
       retentionVersions: Int,
-      carriedDeletes: Option[DataFrame] = None,
+      carriedDeletes: Option[MergeOnRead.Sidecar] = None,
       declared: Option[org.apache.spark.sql.types.StructType] = None,
       markers: Seq[String] = Nil): Option[Int] = {
     val tdir = Lake.tablePath(root, name)
@@ -135,14 +135,16 @@ object CopyOnWrite {
     Lake.policyWriter(spark, root, name,
       BucketLayout.applyPolicy(spark, root, name, rewritten))
       .parquet(stage.toString)
-    carriedDeletes.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(stage, MergeOnRead.deletesName).toString))
+    carriedDeletes.foreach(
+      MergeOnRead.stageSidecar(spark, root, name, stage, MergeOnRead.deletesName, _))
     val f = fs(spark, tdir)
     // commit-scoped markers (the streaming sinks' epoch-receipt
     // FRONTIER): staged BEFORE the rename, so they exist in the version
     // dir exactly when the commit is visible — never a window where the
-    // version is live but unmarked
-    markers.foreach(m => f.create(new Path(stage, m), true).close())
+    // version is live but unmarked. Every COW commit also states that it
+    // kept the row liveness of what it carries ([[Lake.livenessKeptName]])
+    (markers :+ Lake.livenessKeptName)
+      .foreach(m => f.create(new Path(stage, m), true).close())
     // an evolved base's declared schema carries forward (one-hop): the
     // rewritten files hold the column physically, the carried ones do not
     declared.foreach { s =>
@@ -211,7 +213,7 @@ object CopyOnWrite {
       // markers here
       commitCow(spark, root, name, base, rewritten, big.map(_._1),
         retentionVersions,
-        carriedDeletes(spark, root, del, eq, small.map(_._1), big.map(_._1),
+        carriedDeletes(spark, root, base, del, eq, small.map(_._1), big.map(_._1),
           declared),
         declared = if (big.nonEmpty) declared else None)
     }
@@ -263,7 +265,7 @@ object CopyOnWrite {
           slice.coalesce(parts)
         }
       commitCow(spark, root, name, base, shaped, carried, retentionVersions,
-        carriedDeletes(spark, root, del, eq, scope, carried, declared),
+        carriedDeletes(spark, root, base, del, eq, scope, carried, declared),
         declared = if (carried.nonEmpty) declared else None)
     }
   }
@@ -320,7 +322,7 @@ object CopyOnWrite {
             // receipts survive pruning of older dirs no matter which
             // operation committed last
             commitCow(spark, root, name, base, aligned, files, retentionVersions,
-              carriedDeletes(spark, root, del, eq, Nil, files, declared),
+              carriedDeletes(spark, root, base, del, eq, Nil, files, declared),
               declared = declared,
               markers = Seq(s"_epoch_${sinkId}_$epochId"))
         }
@@ -397,7 +399,7 @@ object CopyOnWrite {
       else MergeOnRead.readWithDeletes(spark, touched, del, eq, declared)
         .filter(!coalesce(pred, lit(false)))
     commitCow(spark, root, name, base, survivors, carried, retentionVersions,
-      carriedDeletes(spark, root, del, eq, touched, carried, declared),
+      carriedDeletes(spark, root, base, del, eq, touched, carried, declared),
       declared = if (carried.nonEmpty) declared else None)
   }
 
@@ -409,23 +411,28 @@ object CopyOnWrite {
     * rewrite may legitimately write rows that reuse a deleted key, which
     * a value match would swallow — so they fold to POSITIONS over the
     * carried files (one key-column-pruned scan). The committed version
-    * therefore always carries a position-only sidecar.
+    * therefore always carries a position-only sidecar. With nothing to
+    * drop or fold (no touched file, no equality sidecar) the base's
+    * position sidecar is copied as it is, without a job.
     */
   private def carriedDeletes(
-      spark: SparkSession, root: String,
+      spark: SparkSession, root: String, base: Int,
       del: Option[DataFrame], eq: Option[DataFrame],
       touched: Seq[String], carried: Seq[String],
       declared: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[DataFrame] = {
+      : Option[MergeOnRead.Sidecar] = {
     val touchedRels = touched.map(relToRoot(root, _))
-    val posCarried = del.map { d =>
-      if (touchedRels.isEmpty) d else d.filter(!col("file").isin(touchedRels: _*))
-    }
     val eqFolded = eq.filter(_ => carried.nonEmpty)
       .map(e => MergeOnRead.eqToPositions(spark, carried, e, declared))
-    (posCarried, eqFolded) match {
-      case (Some(p), Some(q)) => Some(p.unionByName(q).distinct())
-      case (p, q) => p.orElse(q)
+    if (touchedRels.isEmpty && eqFolded.isEmpty) del.map(_ => MergeOnRead.Carry(base))
+    else {
+      val posCarried = del.map { d =>
+        if (touchedRels.isEmpty) d else d.filter(!col("file").isin(touchedRels: _*))
+      }
+      ((posCarried, eqFolded) match {
+        case (Some(p), Some(q)) => Some(p.unionByName(q).distinct())
+        case (p, q) => p.orElse(q)
+      }).map(MergeOnRead.Write)
     }
   }
 
@@ -462,7 +469,7 @@ object CopyOnWrite {
         t.select(cols.toIndexedSeq: _*)
       }
     commitCow(spark, root, name, base, rewritten, carried, retentionVersions,
-      carriedDeletes(spark, root, del, eq, touched, carried, declared),
+      carriedDeletes(spark, root, base, del, eq, touched, carried, declared),
       declared = if (carried.nonEmpty) declared else None)
   }
 
@@ -558,7 +565,7 @@ object CopyOnWrite {
         survivors.unionByName(inserts)
       }
     commitCow(spark, root, name, base, rewritten, carried, retentionVersions,
-      carriedDeletes(spark, root, del, eq, touched, carried, declared),
+      carriedDeletes(spark, root, base, del, eq, touched, carried, declared),
       declared = if (carried.nonEmpty) declared else None)
   }
 }

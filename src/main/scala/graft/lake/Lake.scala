@@ -870,6 +870,16 @@ object Lake {
     */
   val manifestName = "_manifest"
 
+  /** Name of the receipt every copy-on-write commit ([[CopyOnWrite]])
+    * stages into its version before the rename, as it stages the `_epoch_*`
+    * receipts: the commit kept the merge-on-read row liveness of every file
+    * it carries (their sidecar entries are copied, or folded from equality
+    * to positions, never added or dropped), and the files it wrote have no
+    * sidecar entry. [[versionChanges]] reads it for the step the commit
+    * made. Never carried to another version.
+    */
+  val livenessKeptName = "_liveness_kept"
+
   /** Name of the optional per-version DECLARED-SCHEMA sidecar: a JSON
     * StructType written by metadata-only schema evolution
     * ([[addColumn]]). A version carrying `_schema` is read with that
@@ -1169,8 +1179,10 @@ object Lake {
 
   /** Stage + CAS-commit a METADATA-ONLY evolution: the new raw `_schema`,
     * a manifest carrying every base file by reference, and the base's
-    * sidecars (position verbatim; equality through `eqTransform`, identity
-    * except for a rename of its key column). Zero jobs over table data.
+    * sidecars, copied file by file. Only an equality sidecar that
+    * `eqTransform` changes (a rename or widening of its key column; any
+    * other evolution returns its input) is rewritten, by one small job over
+    * the sidecar. Zero jobs over table data.
     */
   private def stageMetadataOnly(
       spark: SparkSession, root: String, name: String, base: Int,
@@ -1181,10 +1193,14 @@ object Lake {
     val stage = new Path(
       s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
     val f = fs(spark, tdir)
-    MergeOnRead.deletesOf(spark, root, name, base).foreach(
-      _.write.parquet(new Path(stage, MergeOnRead.deletesName).toString))
-    MergeOnRead.eqDeletesOf(spark, root, name, base).map(eqTransform).foreach(
-      _.write.parquet(new Path(stage, MergeOnRead.eqDeletesName).toString))
+    if (MergeOnRead.hasDeletes(spark, root, name, base))
+      MergeOnRead.stageSidecar(spark, root, name, stage, MergeOnRead.deletesName,
+        MergeOnRead.Carry(base))
+    MergeOnRead.eqDeletesOf(spark, root, name, base).foreach { e =>
+      val t = eqTransform(e)
+      MergeOnRead.stageSidecar(spark, root, name, stage, MergeOnRead.eqDeletesName,
+        if (t eq e) MergeOnRead.Carry(base) else MergeOnRead.Write(t))
+    }
     val so = f.create(new Path(stage, schemaName), true)
     try so.write(newRaw.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally so.close()
@@ -1903,6 +1919,16 @@ object Lake {
     * schema's recorded mapping ([[alignToRaw]]), so a METADATA-ONLY
     * evolution commit (add/rename/widen/drop) emits an EMPTY change set
     * without opening one carried data file.
+    *
+    * The sidecar leg ([[sharedLivenessDelta]]) costs jobs whenever either
+    * version carries a sidecar. A step `(a, a + 1)` onto a version holding
+    * the [[livenessKeptName]] receipt skips it: that copy-on-write commit
+    * claimed slot `a + 1` by CAS against base `a`, kept the liveness of
+    * every shared file and wrote its added files without sidecar entries,
+    * so the step is the dropped files (their deletes applied) against the
+    * added files read plain. Every other step (no receipt: older tables,
+    * merge-on-read deletes, `Txn` commits, clones; or endpoints further
+    * apart) takes the sidecar leg.
     */
   def versionChanges(
       spark: SparkSession, root: String, name: String,
@@ -1946,9 +1972,13 @@ object Lake {
         val dropped = filesA.filterNot(p => sharedNorm.contains(norm(p)))
         val added = filesB.filterNot(p => sharedNorm.contains(norm(p)))
         val posA = MergeOnRead.deletesOf(spark, root, name, vOld)
-        val posB = MergeOnRead.deletesOf(spark, root, name, vNew)
         val eqA = MergeOnRead.eqDeletesOf(spark, root, name, vOld)
-        val eqB = MergeOnRead.eqDeletesOf(spark, root, name, vNew)
+        val keptLiveness = vNew == vOld + 1 && {
+          val dir = new Path(s"${tablePath(root, name)}/version=v$vNew")
+          fs(spark, dir.toString).exists(new Path(dir, livenessKeptName))
+        }
+        lazy val posB = MergeOnRead.deletesOf(spark, root, name, vNew)
+        lazy val eqB = MergeOnRead.eqDeletesOf(spark, root, name, vNew)
         def side(files: Seq[String], pos: Option[DataFrame],
             eq: Option[DataFrame], decl: Option[org.apache.spark.sql.types.StructType],
             emptyShape: Option[org.apache.spark.sql.types.StructType]) =
@@ -1969,7 +1999,8 @@ object Lake {
           if (declA == declB) Some(side(dropped, posA, eqA, declA, declA))
           else declB.flatMap(rb =>
             alignToRaw(side(dropped, posA, eqA, declA, declA.orElse(declB)), rb))
-        oldAligned.map { oldSide =>
+        if (keptLiveness) oldAligned.map((_, side(added, None, None, declB, declB)))
+        else oldAligned.map { oldSide =>
           // equality sidecars written pre-evolution carry OLD spellings
           // and types; remap + cast them forward so the sidecar delta
           // compare and the liveness probes run in the new schema's terms
@@ -2044,8 +2075,13 @@ object Lake {
     * decided against the FULL sidecars of both sides, because a row can be
     * dead on both sides through different mechanisms (position-deleted in
     * one, value-deleted in the other — the eq→pos folding every mutation
-    * applies). Returns `(aliveOnlyInOld, aliveOnlyInNew)` image rows; both
-    * None when the sidecars agree (the common case — zero jobs).
+    * applies). Returns `(aliveOnlyInOld, aliveOnlyInNew)` image rows, or
+    * both None when neither version carries a sidecar (no job) or both
+    * deltas come out empty. Finding the latter takes jobs whenever a
+    * version carries a sidecar, even when the two agree: the position
+    * delta is an `exceptAll` collected to name its files, and each
+    * equality delta is tested for emptiness and sampled. [[versionChanges]]
+    * never calls this for a step onto a [[livenessKeptName]] version.
     */
   private def sharedLivenessDelta(
       spark: SparkSession, root: String, name: String,

@@ -96,6 +96,30 @@ object MergeOnRead {
       s"${Lake.resolveSnapshotDir(spark, root, name, version)}/$deletesName"))
   }
 
+  /** A sidecar a commit stages: rows a Spark job writes, or the base
+    * version's sidecar of the same name, kept unchanged and copied file by
+    * file through [[Lake.fs]] with no job.
+    */
+  private[lake] sealed trait Sidecar
+  private[lake] final case class Write(rows: DataFrame) extends Sidecar
+  private[lake] final case class Carry(baseVersion: Int) extends Sidecar
+
+  /** Stage `sidecar` as `stage/<sidecarName>`. */
+  private[lake] def stageSidecar(
+      spark: SparkSession, root: String, name: String, stage: Path,
+      sidecarName: String, sidecar: Sidecar): Unit = {
+    val to = new Path(stage, sidecarName)
+    sidecar match {
+      case Write(rows) => rows.write.mode(SaveMode.Overwrite).parquet(to.toString)
+      case Carry(v) =>
+        val from = new Path(Lake.resolveSnapshotDir(spark, root, name, v), sidecarName)
+        val f = fs(spark, from.toString)
+        if (!org.apache.hadoop.fs.FileUtil.copy(
+            f, from, f, to, false, spark.sparkContext.hadoopConfiguration))
+          throw new java.io.IOException(s"could not carry $from into $to")
+    }
+  }
+
   /** Does this version carry an equality-delete sidecar? */
   def hasEqDeletes(
       spark: SparkSession, root: String, name: String, version: Int): Boolean = {
@@ -229,8 +253,8 @@ object MergeOnRead {
       // sidecar (if any) carries VERBATIM — value-keyed matching stays
       // sound because no freshly-written row can reuse a deleted key
       commitMor(spark, root, name, base, files,
-        pos = Some(cumulative),
-        eq = eqDeletesOf(spark, root, name, base),
+        pos = Some(Write(cumulative)),
+        eq = Option.when(hasEqDeletes(spark, root, name, base))(Carry(base)),
         retentionVersions, declared)
     }
 
@@ -264,18 +288,18 @@ object MergeOnRead {
         s"deleteByKeys: key columns ${keys.columns.mkString(",")} must all " +
           s"exist in $name's schema")
       val newKeys = keys.distinct()
-      val basePos = deletesOf(spark, root, name, base)
+      val basePos = Option.when(hasDeletes(spark, root, name, base))(Carry(base))
       val (eqOut, posOut) = eqDeletesOf(spark, root, name, base) match {
         case Some(e) if e.columns.sorted.sameElements(keys.columns.sorted) =>
           (newKeys.unionByName(e).distinct(), basePos)
         case Some(e) =>
           val folded = eqToPositions(spark, files, e, declared)
-          (newKeys,
-            Some(basePos.map(_.unionByName(folded).distinct()).getOrElse(folded)))
+          (newKeys, Some(Write(deletesOf(spark, root, name, base)
+            .map(_.unionByName(folded).distinct()).getOrElse(folded))))
         case None => (newKeys, basePos)
       }
       commitMor(spark, root, name, base, files,
-        pos = posOut, eq = Some(eqOut), retentionVersions, declared)
+        pos = posOut, eq = Some(Write(eqOut)), retentionVersions, declared)
     }
 
   /** Stage sidecars + a full-carry manifest and CAS-commit — the common
@@ -285,17 +309,15 @@ object MergeOnRead {
     */
   private def commitMor(
       spark: SparkSession, root: String, name: String, base: Int,
-      files: Seq[String], pos: Option[DataFrame], eq: Option[DataFrame],
+      files: Seq[String], pos: Option[Sidecar], eq: Option[Sidecar],
       retentionVersions: Int,
       declared: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[Int] = {
     val tdir = Lake.tablePath(root, name)
     val stage = new Path(
       s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    pos.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(stage, deletesName).toString))
-    eq.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(stage, eqDeletesName).toString))
+    pos.foreach(stageSidecar(spark, root, name, stage, deletesName, _))
+    eq.foreach(stageSidecar(spark, root, name, stage, eqDeletesName, _))
     val f = fs(spark, tdir)
     // an evolved base's declared schema carries forward (one-hop)
     declared.foreach { s =>

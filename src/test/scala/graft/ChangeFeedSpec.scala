@@ -495,4 +495,75 @@ class ChangeFeedSpec extends SparkSpec {
     val opened = ch.inputFiles.length
     assert(opened === 2, s"expected dropped+added only, opened $opened")
   }
+
+  /** Keys that differ between two versions, by a plain read of each. */
+  private def fullDiff(name: String, a: Int, b: Int): Set[(Long, String)] = {
+    def read(v: Int) = Lake.readTableFeed(spark, root, name, Some(v)).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+    val (o, n) = (read(a), read(b))
+    (o.keySet ++ n.keySet).flatMap { k =>
+      (o.get(k), n.get(k)) match {
+        case (None, Some(_)) => Some(k -> "inserted")
+        case (Some(_), None) => Some(k -> "deleted")
+        case (Some(x), Some(y)) if x != y => Some(k -> "updated")
+        case _ => None
+      }
+    }
+  }
+
+  private def sqlChanges(name: String, from: Int): Set[(Long, String)] =
+    spark.sql(s"SELECT k, change FROM table_changes('$cat.tables.$name', $from, 'k')")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
+
+  /** v1: 300 rows over three files. */
+  private def seedKeyed(name: String): Unit = Lake.writeTableSnapshot(
+    (1 to 300).map(i => (i.toLong, s"r$i")).toDF("k", "v").repartition(3), root, name)
+
+  test("an epoch append after a key DELETE diffs its step with no sidecar jobs") {
+    import graft.lake.{CopyOnWrite, MergeOnRead}
+    seedKeyed("cfkept_plain")
+    CopyOnWrite.appendEpoch(Seq((1001L, "n"), (1002L, "n")).toDF("k", "v"),
+      root, "cfkept_plain", "s", 0L)
+    // the same step onto a version with an equality sidecar: the append
+    // folds it to positions over the carried files, and reuses key 5
+    seedKeyed("cfkept_eq")
+    val vDel = MergeOnRead.deleteByKeys(spark, root, "cfkept_eq", Seq(5L, 6L).toDF("k"))
+    val vApp = CopyOnWrite.appendEpoch(Seq((5L, "again"), (1001L, "n")).toDF("k", "v"),
+      root, "cfkept_eq", "s", 0L)
+    assert(sqlChanges("cfkept_eq", vDel) === fullDiff("cfkept_eq", vDel, vApp))
+    assert(sqlChanges("cfkept_eq", vDel) === Set(5L -> "inserted", 1001L -> "inserted"))
+    val plainJobs = SparkSpec.jobsDuring(spark)(sqlChanges("cfkept_plain", 1))
+    val sidecarJobs = SparkSpec.jobsDuring(spark)(sqlChanges("cfkept_eq", vDel))
+    assert(sidecarJobs <= plainJobs,
+      s"the step onto a sidecar version started $sidecarJobs jobs, a plain one $plainJobs")
+  }
+
+  test("steps without the liveness receipt, or not adjacent, keep the sidecar diff") {
+    import graft.lake.{CopyOnWrite, MergeOnRead}
+    def kept(name: String, v: Int) = {
+      val dir = new org.apache.hadoop.fs.Path(s"${Lake.tablePath(root, name)}/version=v$v")
+      Lake.fs(spark, dir.toString).exists(new org.apache.hadoop.fs.Path(dir, Lake.livenessKeptName))
+    }
+    seedKeyed("cfnokept")
+    val vDel = MergeOnRead.deleteByKeys(spark, root, "cfnokept", Seq(5L, 6L).toDF("k"))
+    val vApp = CopyOnWrite.appendEpoch(Seq((1001L, "n")).toDF("k", "v"),
+      root, "cfnokept", "s", 0L)
+    val vMor = MergeOnRead.deleteWhere(spark, root, "cfnokept", col("k") === 7L)
+    assert(!kept("cfnokept", vDel) && kept("cfnokept", vApp) && !kept("cfnokept", vMor))
+    // a merge-on-read delete step emits its deleted row
+    assert(sqlChanges("cfnokept", vApp) === Set(7L -> "deleted"))
+    // non-adjacent endpoints onto a receipt version: the keys the
+    // intermediate delete removed are in the net diff
+    val net = spark.sql(s"SELECT k, change FROM table_diff('$cat.tables.cfnokept', 1, $vApp, 'k')")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
+    assert(net === fullDiff("cfnokept", 1, vApp))
+    assert(net === Set(5L -> "deleted", 6L -> "deleted", 1001L -> "inserted"))
+    // a version written before the receipt existed diffs as it did
+    val dir = new org.apache.hadoop.fs.Path(s"${Lake.tablePath(root, "cfnokept")}/version=v$vApp")
+    Lake.fs(spark, dir.toString).delete(new org.apache.hadoop.fs.Path(dir, Lake.livenessKeptName), false)
+    assert(!kept("cfnokept", vApp))
+    assert(Lake.versionChanges(spark, root, "cfnokept", vDel, vApp, Seq("k"))
+      .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("change")).toSet ===
+      Set(1001L -> "inserted"))
+  }
 }

@@ -1551,4 +1551,36 @@ class LakeSpec extends SparkSpec {
     } === 0, "planning a merge-on-read read must not start a job")
     assert(Lake.readTableFeed(spark, root, "nojob_t").count() === 60 - 10 - 4)
   }
+
+  test("commits that keep a base sidecar unchanged copy it without a Spark job") {
+    import graft.lake.{CopyOnWrite, MergeOnRead}
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val root = scratch()
+    def seed(name: String): Unit = Lake.writeTableSnapshot(
+      (1 to 60).map(i => (i.toLong, s"r$i")).toDF("k", "x").repartition(3), root, name)
+    def append(name: String): Int = CopyOnWrite.appendEpoch(
+      Seq((101L, "n")).toDF("k", "x"), root, name, "s", 0L)
+    seed("carry_plain")
+    seed("carry_t")
+    MergeOnRead.deleteWhere(spark, root, "carry_t", col("k") <= 3)
+    // each commit below starts as many jobs on a base with a position
+    // sidecar as on a sidecar-free base: the sidecar is copied
+    val appendPlain = SparkSpec.jobsDuring(spark)(append("carry_plain"))
+    val appendCarry = SparkSpec.jobsDuring(spark)(append("carry_t"))
+    assert(appendCarry === appendPlain)
+    val delPlain = SparkSpec.jobsDuring(spark)(
+      MergeOnRead.deleteByKeys(spark, root, "carry_plain", Seq(10L).toDF("k")))
+    val delCarry = SparkSpec.jobsDuring(spark)(
+      MergeOnRead.deleteByKeys(spark, root, "carry_t", Seq(10L).toDF("k")))
+    assert(delCarry === delPlain)
+    // a metadata-only evolution copies both sidecars
+    assert(SparkSpec.jobsDuring(spark)(Lake.addColumn(spark, root, "carry_t",
+      StructField("note", StringType, nullable = true))) === 0)
+    val v = Lake.latestVersion(spark, root, "carry_t").get
+    assert(MergeOnRead.hasDeletes(spark, root, "carry_t", v) &&
+      MergeOnRead.hasEqDeletes(spark, root, "carry_t", v))
+    val keys = Lake.readTableFeed(spark, root, "carry_t", Some(v))
+      .collect().map(_.getAs[Long]("k")).toSet
+    assert(keys === ((4L to 60L).toSet - 10L + 101L))
+  }
 }
