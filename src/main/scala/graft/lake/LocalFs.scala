@@ -22,7 +22,7 @@ import org.apache.hadoop.io.nativeio.NativeIO
   * subclass sets the same POSIX bits through NIO and answers link status
   * from `getFileStatus` unless the path is a symbolic link; every other
   * case (native IO present, a sticky or set-id bit, no POSIX view, a real
-  * link) takes the stock call. [[GraftSession]] installs it for `file:`.
+  * link) takes the stock call. [[graft.GraftSession]] installs it for `file:`.
   */
 class ForklessRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -31,7 +31,8 @@ class ForklessRawLocalFileSystem extends RawLocalFileSystem {
     if (NativeIO.isAvailable || (bits & ~0x1ff) != 0) super.setPermission(p, permission)
     else {
       val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-      // OWNER_READ .. OTHERS_EXECUTE is the enum order, i.e. 0400 >> i
+      // 0x1ff is octal 0777; the enum runs OWNER_READ (0400 = 0x100) down
+      // to OTHERS_EXECUTE (0001), so constant i is bit 0x100 >> i
       PosixFilePermission.values.zipWithIndex.foreach { case (perm, i) =>
         if ((bits & (0x100 >> i)) != 0) perms.add(perm)
       }
