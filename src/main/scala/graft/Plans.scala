@@ -933,13 +933,10 @@ object Plans {
           .createOrReplaceTempView("plan_r12_src")
         spark.sql(s"INSERT INTO $cname.tables.plan_st SELECT * FROM plan_r12_src")
       } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-      val counter = org.apache.spark.sql.graft.GraftCatalog.lastStatsPrune
 
-      counter.set((-1, -1))
       val rangeScan = spark.sql(
         s"SELECT * FROM $cname.tables.plan_st WHERE k BETWEEN 100 AND 199")
-      rangeScan.queryExecution.executedPlan
-      val (rk, rt) = counter.get()
+      val (rk, rt) = lake.FilePruner.lastCounts(rangeScan.queryExecution.executedPlan)
       section("a35 stats-pruned catalog scan — the file list shrinks at PLAN time",
         rangeScan,
         Seq(
@@ -995,11 +992,9 @@ object Plans {
 
       val mid = spark.sql(
         s"SELECT u FROM $cname.tables.plan_st WHERE k = 1234").head().getLong(0)
-      counter.set((-1, -1))
       val pointScan = spark.sql(
         s"SELECT * FROM $cname.tables.plan_st WHERE u = $mid")
-      pointScan.queryExecution.executedPlan
-      val (bk, bt) = counter.get()
+      val (bk, bt) = lake.FilePruner.lastCounts(pointScan.queryExecution.executedPlan)
       section("a36 bloom-narrowed scan — point lookup on an UNCLUSTERED column",
         pointScan,
         Seq(
@@ -1032,13 +1027,10 @@ object Plans {
         spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
         spark.conf.set("spark.sql.shuffle.partitions", oldParts)
       }
-      val counter = org.apache.spark.sql.graft.GraftCatalog.lastStatsPrune
 
-      counter.set((-1, -1))
       val zk = spark.sql(
         s"SELECT * FROM $cname.tables.plan_z WHERE k BETWEEN 4000 AND 4999")
-      zk.queryExecution.executedPlan
-      val (zka, zkt) = counter.get()
+      val (zka, zkt) = lake.FilePruner.lastCounts(zk.queryExecution.executedPlan)
       section("a39 zorder — a k-only range predicate prunes the interleaved layout",
         zk,
         Seq(
@@ -1047,11 +1039,9 @@ object Plans {
           "the scan's file index holds only the admitted files"
             -> (_.contains(s"InMemoryFileIndex($zka paths)"))))
 
-      counter.set((-1, -1))
       val zu = spark.sql(
         s"SELECT * FROM $cname.tables.plan_z WHERE u BETWEEN 40000 AND 44999")
-      zu.queryExecution.executedPlan
-      val (zua, zut) = counter.get()
+      val (zua, zut) = lake.FilePruner.lastCounts(zu.queryExecution.executedPlan)
       section("a39 zorder — a u-only range predicate prunes too (the dimension " +
         "lexicographic cluster_by cannot serve)",
         zu,
@@ -1092,11 +1082,9 @@ object Plans {
       // the bucket LAYOUT is also a point-lookup index: an equality on the
       // bucket column admits one bucket's files — min/max stats cannot
       // help here (every hash-bucket file spans ~the whole key domain)
-      counter.set((-1, -1))
       val bpoint = spark.sql(
         s"SELECT * FROM $cname.tables.plan_bt WHERE k = 4321")
-      bpoint.queryExecution.executedPlan
-      val (bpa, bpTotal) = counter.get()
+      val (bpa, bpTotal) = lake.FilePruner.lastCounts(bpoint.queryExecution.executedPlan)
       section("a40 bucket-pruned point scan — the layout IS the index",
         bpoint,
         Seq(
@@ -1323,7 +1311,7 @@ object Plans {
       val zschema = Lake.readTableFeed(spark, root, "zb", Some(1)).schema
       def zadmitted(c: String): Int = StatsSidecar.candidateFiles(
         spark, zfiles, zschema,
-        Seq(GreaterThanOrEqual(c, 0L), LessThanOrEqual(c, 127L))).size
+        Seq(GreaterThanOrEqual(c, 0L), LessThanOrEqual(c, 127L))).files.size
       val (admA, admB) = (zadmitted("a"), zadmitted("b"))
       val onKey = BucketLayout.filterCandidates(spark, zfiles, zschema,
         Seq(EqualTo("k", 7L))).size

@@ -38,6 +38,11 @@ object BloomSidecar {
   val ColumnsProp = "bloom_filter_columns"
   val FppProp = "bloom_fpp"
 
+  /** The bloom-indexed columns a table's properties name. */
+  def columns(props: Map[String, String]): Seq[String] =
+    props.get(ColumnsProp)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+
   private class LongBloomAgg(expected: Long, fpp: Double)
       extends Aggregator[java.lang.Long, BloomFilter, Array[Byte]] {
     override def zero: BloomFilter = BloomFilter.create(expected, fpp)
@@ -85,8 +90,7 @@ object BloomSidecar {
   def stamp(
       spark: SparkSession, root: String, name: String, stage: Path): Unit = {
     val props = Lake.tableProperties(spark, root, name)
-    val cols = props.get(ColumnsProp)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val cols = columns(props)
     if (cols.isEmpty) return
     val fpp = props.get(FppProp).map(_.toDouble).getOrElse(0.03)
     val f = Lake.fs(spark, stage.toString)
@@ -121,14 +125,11 @@ object BloomSidecar {
       .parquet(new Path(stage, sidecarName).toString)
   }
 
-  /** `(excludedByBloom, probed)` of the most recent probe — observability. */
-  val lastProbe =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
-
-  /** Narrow a (stats-admitted) file list further: a file is EXCLUDED when
-    * some equality/IN conjunct on a bloom-indexed column finds the file's
-    * bloom and NONE of the conjunct's values might be contained. Missing
-    * blooms keep the file. Executor-side probe, O(excluded) driver state.
+  /** Narrow a file list ([[FilePruner]]'s stats- and bucket-admitted
+    * files) further: a file is EXCLUDED when some equality/IN conjunct on
+    * a bloom-indexed column finds the file's bloom and NONE of the
+    * conjunct's values might be contained. Missing blooms keep the file.
+    * Executor-side probe, O(excluded) driver state.
     */
   def filterCandidates(
       spark: SparkSession, files: Seq[String], schema: StructType,
@@ -191,11 +192,9 @@ object BloomSidecar {
           }
         }
       }.collect().toSet
-    val kept = files.filterNot { fp =>
+    files.filterNot { fp =>
       val p = new Path(fp)
       excluded.contains((p.getParent.toString, p.getName))
     }
-    lastProbe.set((files.size - kept.size, files.size))
-    kept
   }
 }

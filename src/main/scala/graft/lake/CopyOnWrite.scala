@@ -72,35 +72,21 @@ object CopyOnWrite {
   }
 
   /** Distinct files (of `files`) holding at least one row where `pred` IS
-    * TRUE. The scan itself is STATS-PRUNED first: translatable conjuncts
-    * of `pred` are evaluated against each file's min/max sidecar
-    * ([[StatsSidecar]]) so a selective mutation probes only candidate
+    * TRUE. The scan itself is PRUNED first ([[FilePruner]]): translatable
+    * conjuncts of `pred` are evaluated against each file's stats, bucket
+    * and bloom sidecars, so a selective mutation probes only candidate
     * files — `UPDATE ... WHERE k = 5` on a 100 TB table opens the files
     * whose key range covers 5, not the table. Sound on merge-on-read
-    * bases too: stats cover the RAW file contents, and a file the stats
+    * bases too: the sidecars cover the RAW file contents, and a file they
     * exclude holds no matching raw row, so carrying it (with its sidecar
     * entries folded per the usual rules) is exactly what the unpruned
     * probe would have done. Filter-pushed, column-pruned; collects file
     * names only.
     */
   private def touchedFiles(
-      spark: SparkSession, files: Seq[String], pred: Column,
-      declared: Option[org.apache.spark.sql.types.StructType],
-      rootName: Option[(String, String)] = None): Seq[String] = {
-    val candidates = {
-      val base = Lake.readFiles(spark, files, declared) // lazy: analysis only
-      val v1 = org.apache.spark.sql.graft.ExprFilters.toV1(base, pred)
-      val byStats = StatsSidecar.candidateFiles(spark, files, base.schema, v1)
-      // bloom file indexes narrow equality probes on unclustered columns;
-      // a bucketed layout answers bucket-column equality by hash alone
-      val byBucket = BucketLayout.filterCandidates(spark, byStats, base.schema, v1)
-      rootName.fold(byBucket) { case (root, name) =>
-        val bloomCols = Lake.tableProperties(spark, root, name)
-          .get(BloomSidecar.ColumnsProp)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        BloomSidecar.filterCandidates(spark, byBucket, base.schema, v1, bloomCols)
-      }
-    }
+      spark: SparkSession, root: String, name: String, files: Seq[String],
+      pred: Column, declared: Option[org.apache.spark.sql.types.StructType]): Seq[String] = {
+    val candidates = FilePruner.admitFor(spark, root, name, files, declared, pred).admitted
     if (candidates.isEmpty) Nil
     else Lake.readFiles(spark, candidates, declared, withMeta = true)
       .filter(pred)
@@ -241,7 +227,7 @@ object CopyOnWrite {
       throw new IllegalStateException(s"no versions for table feed $name"))
     val files = Lake.snapshotFiles(spark, root, name, base)
     val declared = Lake.declaredSchema(spark, root, name, base)
-    val scope = touchedFiles(spark, files, pred, declared, Some((root, name)))
+    val scope = touchedFiles(spark, root, name, files, pred, declared)
     if (scope.size < 2) Some(base)
     else {
       val scopeSet = scope.map(norm).toSet
@@ -390,7 +376,7 @@ object CopyOnWrite {
     val del = MergeOnRead.deletesOf(spark, root, name, base)
     val eq = MergeOnRead.eqDeletesOf(spark, root, name, base)
     val declared = Lake.declaredSchema(spark, root, name, base)
-    val touched = touchedFiles(spark, files, pred, declared, Some((root, name)))
+    val touched = touchedFiles(spark, root, name, files, pred, declared)
     val touchedSet = touched.map(norm).toSet
     val carried = files.filterNot(p => touchedSet.contains(norm(p)))
     val survivors =
@@ -450,7 +436,7 @@ object CopyOnWrite {
     val del = MergeOnRead.deletesOf(spark, root, name, base)
     val eq = MergeOnRead.eqDeletesOf(spark, root, name, base)
     val declared = Lake.declaredSchema(spark, root, name, base)
-    val touched = touchedFiles(spark, files, pred, declared, Some((root, name)))
+    val touched = touchedFiles(spark, root, name, files, pred, declared)
     val touchedSet = touched.map(norm).toSet
     val carried = files.filterNot(p => touchedSet.contains(norm(p)))
     val assign = set.toMap

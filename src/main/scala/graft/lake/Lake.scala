@@ -2143,12 +2143,7 @@ object Lake {
               c, sample.map(_.get(i)).distinct.toArray)
           }
           val schema = visibleSchema(declaredOrFooter(spark, decl, shared.head))
-          val byStats = StatsSidecar.candidateFiles(spark, shared, schema, filters)
-          val byBucket = BucketLayout.filterCandidates(spark, byStats, schema, filters)
-          val bloomCols = tableProperties(spark, root, name)
-            .get(BloomSidecar.ColumnsProp)
-            .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-          BloomSidecar.filterCandidates(spark, byBucket, schema, filters, bloomCols)
+          FilePruner.admit(spark, root, name, shared, schema, filters).admitted
         }
       }
       if (probe.isEmpty) metaRead(Seq(shared.head)).limit(0)

@@ -224,19 +224,10 @@ object MergeOnRead {
       // positions to delete: filter-pushed scan emitting ONLY (file, pos) —
       // a row already in the base sidecar that re-matches pred duplicates
       // an existing entry verbatim, so the union dedups structurally. The
-      // scan is STATS-PRUNED like the COW probe: files whose min/max
-      // sidecar excludes every translatable conjunct of `pred` hold no
-      // matching raw row and need not be opened
-      val probeFiles = {
-        val base0 = Lake.readFiles(spark, files, declared) // lazy: analysis only
-        val v1 = org.apache.spark.sql.graft.ExprFilters.toV1(base0, pred)
-        val byStats = StatsSidecar.candidateFiles(spark, files, base0.schema, v1)
-        val byBucket = BucketLayout.filterCandidates(spark, byStats, base0.schema, v1)
-        val bloomCols = Lake.tableProperties(spark, root, name)
-          .get(BloomSidecar.ColumnsProp)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        BloomSidecar.filterCandidates(spark, byBucket, base0.schema, v1, bloomCols)
-      }
+      // scan is PRUNED like the COW probe: files whose sidecars exclude
+      // every translatable conjunct of `pred` hold no matching raw row and
+      // need not be opened
+      val probeFiles = FilePruner.admitFor(spark, root, name, files, declared, pred).admitted
       val matched =
         (if (probeFiles.isEmpty)
            Lake.readFiles(spark, Seq(files.head), declared, withMeta = true).limit(0)

@@ -516,29 +516,21 @@ object StatsSidecar {
 
   // ------------------------------------------------------------- pruning
 
+  /** [[candidateFiles]]' answer: the admitted files (input order
+    * preserved) and the version dirs whose envelope excluded the filters
+    * (`dirsSkipped` of `dirsSeen`) — a skipped dir's per-file sidecar was
+    * never read.
+    */
+  final case class Candidates(files: Seq[String], dirsSkipped: Int, dirsSeen: Int)
+
   /** Prune a snapshot's resolved file list against pushed v1 data
     * filters: one sidecar read per distinct version dir, conservative
-    * everywhere stats are missing. Returns the admitted subset (order
-    * preserved).
+    * everywhere stats are missing.
     */
-  /** `(admitted, total)` of the most recent [[candidateFiles]] decision —
-    * observability for specs and gates (pruning is invisible in results,
-    * by the conservative contract).
-    */
-  val lastPrune =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
-
-  /** `(dirsSkippedWhole, dirsTotal)` of the most recent [[candidateFiles]]
-    * decision — observability for the TWO-LEVEL contract: a skipped dir's
-    * per-file sidecar was never read.
-    */
-  val lastGroupPrune =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
-
   def candidateFiles(
       spark: SparkSession, files: Seq[String], schema: StructType,
-      filters: Seq[Filter]): Seq[String] = {
-    if (filters.isEmpty) return files
+      filters: Seq[Filter]): Candidates = {
+    if (filters.isEmpty) return Candidates(files, 0, 0)
     // LEVEL 1: one tiny envelope read per distinct dir — a dir whose
     // envelope excludes the filters drops ALL its files without its
     // per-file sidecar ever being read or parsed (O(groups) planning)
@@ -566,10 +558,7 @@ object StatsSidecar {
         }
       }
     }
-    lastGroupPrune.set(
-      (dirAdmitted.valuesIterator.count(_ == false), dirAdmitted.size))
-    lastPrune.set((admitted.size, files.size))
-    admitted
+    Candidates(admitted, dirAdmitted.valuesIterator.count(_ == false), dirAdmitted.size)
   }
 
   /** Convert an EXTERNAL v1-Filter literal into the column's stat

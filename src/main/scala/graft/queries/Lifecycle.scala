@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.governance.{DifferentialPrivacy, FeedCatalog, Permissions}
-import graft.lake.{Lake, Retention}
+import graft.lake.{FilePruner, Lake, Retention}
 import graft.warehouse.Warehouse
 import Q.QueryFn
 
@@ -2593,8 +2593,9 @@ object Lifecycle {
     * range-clustered on o_orderkey into a catalog table, runs a range, a
     * point, and a string-equality scan, REQUIRES each to have admitted
     * the expected file subset (the decision is invisible in results, by
-    * design — the counter is the observability), and hash-verifies the
-    * union against DuckDB running the same slices on the raw table.
+    * design — the recorded admission is the observability), and
+    * hash-verifies the union against DuckDB running the same slices on
+    * the raw table.
     */
   def statsPruning(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a35_")
@@ -2609,15 +2610,13 @@ object Lifecycle {
     s.conf.set(s"spark.sql.catalog.$cat",
       classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val counter = org.apache.spark.sql.graft.GraftCatalog.lastStatsPrune
 
     def slice(gen: String, where: String, suffix: String = " VERSION AS OF 1"): DataFrame =
       s.sql(s"SELECT '$gen' AS gen, o_orderkey, o_orderstatus, o_totalprice " +
         s"FROM $cat.tables.ord_sp$suffix WHERE $where")
     def prunePin(df: DataFrame, maxKept: Int, label: String): DataFrame = {
-      counter.set((-1, -1))
-      df.queryExecution.executedPlan // planning alone decides the file list
-      val (kept, total) = counter.get()
+      // planning alone decides the file list
+      val (kept, total) = FilePruner.lastCounts(df.queryExecution.executedPlan)
       require(total == 8, s"$label: expected 8 files in the snapshot, saw $total")
       require(kept <= maxKept,
         s"$label: stats must admit <= $maxKept of 8 range-clustered files, admitted $kept")
@@ -2791,13 +2790,11 @@ object Lifecycle {
         |   ORDER BY abs(l_partkey - (SELECT avg(l_partkey) FROM a36_src)),
         |            l_partkey LIMIT 1) AS b""".stripMargin).head()
     val (pk, pk2) = (mids.getLong(0), mids.getLong(1))
-    val counter = org.apache.spark.sql.graft.GraftCatalog.lastStatsPrune
 
     // the bloomed point lookup admits a strict subset; a miss admits none
-    counter.set((-1, -1))
-    s.sql(s"SELECT * FROM $cat.tables.li_bloom WHERE l_partkey = $pk")
-      .queryExecution.executedPlan
-    val (kept, total) = counter.get()
+    val (kept, total) = FilePruner.lastCounts(
+      s.sql(s"SELECT * FROM $cat.tables.li_bloom WHERE l_partkey = $pk")
+        .queryExecution.executedPlan)
     // a bloom prunes only when files DON'T each contain every value: at
     // toy scale (sf0.001) the partkey domain saturates every file, so
     // enforce the pin only when distinct values far exceed rows per file
@@ -2808,20 +2805,21 @@ object Lifecycle {
     require(total >= 4 && (kept < total || !sparse),
       s"bloom lookup must prune ($kept/$total admitted; " +
         s"$distinctParts distinct over $srcRows rows)")
-    counter.set((-1, -1))
-    s.sql(s"SELECT * FROM $cat.tables.li_bloom WHERE l_partkey = -42")
-      .queryExecution.executedPlan
-    require(counter.get()._1 == 0,
-      s"a value no file contains must admit zero files (${counter.get()})")
+    val miss = FilePruner.lastCounts(
+      s.sql(s"SELECT * FROM $cat.tables.li_bloom WHERE l_partkey = -42")
+        .queryExecution.executedPlan)
+    require(miss._1 == 0,
+      s"a value no file contains must admit zero files ($miss)")
 
     // zero-scan equality DELETE on the bloomed column, then a COW UPDATE
     // keyed on it — the mutation probe rides the same bloom
     s.sql(s"DELETE FROM $cat.tables.li_bloom WHERE l_partkey = $pk")
-    graft.lake.BloomSidecar.lastProbe.set((-1, -1))
-    s.sql(s"UPDATE $cat.tables.li_bloom SET l_quantity = 0 WHERE l_partkey = $pk2")
-    require(graft.lake.BloomSidecar.lastProbe.get()._1 > 0 || !sparse,
+    val probe = FilePruner.recorded(
+      s.sql(s"UPDATE $cat.tables.li_bloom SET l_quantity = 0 WHERE l_partkey = $pk2"))
+      .lastOption
+    require(probe.exists(_.skippedByBloom > 0) || !sparse,
       s"the UPDATE probe must exclude files via the bloom " +
-        s"(${graft.lake.BloomSidecar.lastProbe.get()})")
+        s"(${probe.map(a => (a.skippedByBloom, a.total))})")
 
     def slice(gen: String, where: String): DataFrame = s.sql(
       s"SELECT '$gen' AS gen, l_orderkey, l_partkey, l_quantity " +
@@ -3037,20 +3035,15 @@ object Lifecycle {
       s.conf.set("spark.sql.shuffle.partitions", oldParts)
     }
 
-    val counter = org.apache.spark.sql.graft.GraftCatalog.lastStatsPrune
     val kmax = src.agg(max("k")).head().getLong(0)
     val klo = kmax / 2
     val khi = klo + kmax / 16
-    counter.set((-1, -1))
     val qk = s.sql(s"SELECT k, u FROM $cat.tables.zt WHERE k BETWEEN $klo AND $khi")
-    qk.queryExecution.executedPlan
-    val (ka, kt) = counter.get()
+    val (ka, kt) = FilePruner.lastCounts(qk.queryExecution.executedPlan)
     require(kt >= 8 && ka * 2 <= kt,
       s"zorder must prune a 1/16 range on k: admitted $ka of $kt files")
-    counter.set((-1, -1))
     val qu = s.sql(s"SELECT k, u FROM $cat.tables.zt WHERE u BETWEEN 40000 AND 42000")
-    qu.queryExecution.executedPlan
-    val (ua, ut) = counter.get()
+    val (ua, ut) = FilePruner.lastCounts(qu.queryExecution.executedPlan)
     require(ut >= 8 && ua * 2 <= ut,
       s"zorder must prune on u ALONE — the dimension lexicographic " +
         s"clustering cannot serve: admitted $ua of $ut files")
@@ -3587,7 +3580,7 @@ object Lifecycle {
     val schema = Lake.readTableFeed(s, root, "zb", Some(1)).schema
     def admits(c: String, lo: Long, hi: Long): Int =
       StatsSidecar.candidateFiles(s, files, schema,
-        Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))).length
+        Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))).files.length
     val b = o.agg(max("o_orderkey"), min("o_datekey"), max("o_datekey")).head()
     val (okHi, dLo, dHi) = (b.getLong(0) / 5, b.getLong(1), b.getLong(2))
     require(admits("o_orderkey", 1L, okHi) < files.length,

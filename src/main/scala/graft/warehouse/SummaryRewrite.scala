@@ -279,14 +279,10 @@ object SummaryRewrite {
           case (k, i) => k -> affected.map(_.get(i)).distinct.toSeq
         }
         // prune the re-aggregation read to files that can hold an affected
-        // group — the sidecar stats/bucket layout make the refresh
+        // group — the stats/bucket/bloom sidecars make the refresh
         // O(changed groups' files) when writes cluster on the group key
-        val keepOnly = refreshCandidateFiles(spark, lakeRoot, table, to, base, lists)
-        pruneStat = keepOnly match {
-          case Some(keep) => (keep.size,
-            graft.lake.Lake.snapshotFiles(spark, lakeRoot, table, to).size)
-          case None => (-1, -1)
-        }
+        val pruning = refreshCandidateFiles(spark, lakeRoot, table, to, base, lists)
+        pruneStat = pruning.fold((-1, -1))(a => (a.admitted.size, a.total))
         // exact TUPLE membership via a broadcast null-safe semi/anti join
         // against the affected key set (≤ RefreshAffectedKeysMax rows):
         // composite keys with k distinct values per column re-aggregate
@@ -298,7 +294,7 @@ object SummaryRewrite {
         def tupleCond(side: org.apache.spark.sql.DataFrame) =
           mv.keys.map(k => side(k) <=> aff(k)).reduce(_ && _)
         val pruned = graft.lake.Lake.readTableFeedPruned(
-          spark, lakeRoot, table, Some(to), keepOnly).alias("gb")
+          spark, lakeRoot, table, Some(to), pruning.map(_.admitted)).alias("gb")
         val reaggBase = pruned.join(
           org.apache.spark.sql.functions.broadcast(aff), tupleCond(pruned), "left_semi")
         val curAliased = current.alias("gc")
@@ -342,24 +338,22 @@ object SummaryRewrite {
   private[graft] def refreshStats(name: String): (Int, Int, Long) =
     refreshStatsByView.getOrDefault(name, (-1, -1, -1L))
 
-  /** Stats/bucket-admitted files for the refresh's per-column IN filters;
-    * None (read everything) when a list is null-bearing or untranslatable —
-    * pruning is an IO optimization, never a row filter.
+  /** The refresh's file admission for its per-column IN filters, when it
+    * admits a strict subset; None (read everything) when a list is
+    * null-bearing or untranslatable — pruning is an IO optimization,
+    * never a row filter.
     */
   private def refreshCandidateFiles(
       spark: SparkSession, lakeRoot: String, table: String, version: Int,
       base: org.apache.spark.sql.DataFrame,
-      lists: Seq[(String, Seq[Any])]): Option[Seq[String]] = try {
+      lists: Seq[(String, Seq[Any])]): Option[graft.lake.FilePruner.Admission] = try {
     if (lists.exists(_._2.contains(null))) return None
     val v1 = lists.map { case (k, vs) =>
       org.apache.spark.sql.sources.In(k, vs.toArray)
     }
     val all = graft.lake.Lake.snapshotFiles(spark, lakeRoot, table, version)
-    val byStats = graft.lake.StatsSidecar.candidateFiles(
-      spark, all, base.schema, v1)
-    val admitted = graft.lake.BucketLayout.filterCandidates(
-      spark, byStats, base.schema, v1)
-    if (admitted.size < all.size) Some(admitted) else None
+    Some(graft.lake.FilePruner.admit(spark, lakeRoot, table, all, base.schema, v1))
+      .filter(a => a.admitted.size < a.total)
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The view's defining rollup of `df` — shared by [[create]] and

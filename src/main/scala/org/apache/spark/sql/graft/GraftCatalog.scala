@@ -87,9 +87,10 @@ trait GraftMutableTable {
 }
 
 object GraftCatalog {
-  /** `(admitted, total)` of the most recent stats-pruned catalog scan
-    * build — observability for specs and the correctness gate (the prune
-    * decision itself is invisible in results, by design).
+  /** `(admitted, total)` of the most recent catalog scan that pruned,
+    * set at plan time. It exists only for the benchmark driver, which
+    * reads it across its own operations; it is process-global, so engine
+    * code and specs read [[graft.lake.FilePruner.recorded]] instead.
     */
   val lastStatsPrune =
     new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
@@ -337,32 +338,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               override def needConversion: Boolean = false
               override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
                 val spark = SparkSession.active
-                // stats-based FILE pruning survives the fallback too: the
-                // pushed filters are already v1 — evaluate them against
-                // the per-file sidecar and read only admitted files (the
-                // sidecar anti-joins key on value or on (file, pos) of
-                // files actually read, so fewer files changes nothing).
-                // Mapping versions degrade gracefully: visible-name
-                // filters miss old files' physical-name stats → candidate
+                // FILE pruning survives the fallback too: the pushed
+                // filters are already v1 — admit files against the
+                // sidecars and read only those (the delete anti-joins key
+                // on value or on (file, pos) of files actually read, so
+                // fewer files changes nothing). Mapping versions degrade
+                // gracefully: visible-name filters miss old files'
+                // physical-name stats → candidate
                 val keepOnly =
-                  if (filters.isEmpty || spark.conf
-                      .get("spark.graft.sql.statsPruning", "true") == "false") None
+                  if (filters.isEmpty) None
                   else {
-                    val all = graft.lake.Lake.snapshotFiles(
-                      spark, root, ident.name(), version)
-                    val byStats = graft.lake.StatsSidecar.candidateFiles(
-                      spark, all, tableSchema, filters.toIndexedSeq)
-                    val bloomCols = graft.lake.Lake
-                      .tableProperties(spark, root, ident.name())
-                      .get(graft.lake.BloomSidecar.ColumnsProp)
-                      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-                      .getOrElse(Nil)
-                    val byBloom = graft.lake.BloomSidecar.filterCandidates(
-                      spark, byStats, tableSchema, filters.toIndexedSeq, bloomCols)
-                    val admitted = graft.lake.BucketLayout.filterCandidates(
-                      spark, byBloom, tableSchema, filters.toIndexedSeq)
-                    GraftCatalog.lastStatsPrune.set((admitted.size, all.size))
-                    if (admitted.size < all.size) Some(admitted) else None
+                    val a = admitScan(ident,
+                      graft.lake.Lake.snapshotFiles(spark, root, ident.name(), version),
+                      tableSchema, filters.toIndexedSeq)
+                    Option.when(a.admitted.size < a.total)(a.admitted)
                   }
                 val resolved = graft.lake.Lake.readTableFeedPruned(
                   spark, root, ident.name(), Some(version), keepOnly)
@@ -377,6 +366,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             }).asInstanceOf[T]
         }
     }
+
+  /** The catalog's file admission for a scan being planned — shared by
+    * the parquet data scan and the merge-on-read fallback — published to
+    * [[GraftCatalog.lastStatsPrune]], its only writer.
+    */
+  private def admitScan(
+      ident: Identifier, files: Seq[String], schema: StructType,
+      filters: Seq[Filter]): graft.lake.FilePruner.Admission = {
+    val a = graft.lake.FilePruner.admit(
+      SparkSession.active, root, ident.name(), files, schema, filters)
+    GraftCatalog.lastStatsPrune.set((a.admitted.size, a.total))
+    a
+  }
 
   private def hasMorDeletes(ident: Identifier, version: Int): Boolean =
     graft.lake.MergeOnRead.hasAnyDeletes(
@@ -396,17 +398,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   /** The read-side scan builder for a plain (no MOR sidecar, no field
     * mapping) snapshot: wraps the delegate `ParquetTable`'s builder with
-    * STATS-BASED FILE PRUNING — pushed data filters are evaluated against
-    * the per-file min/max sidecar ([[graft.lake.StatsSidecar]], stamped
-    * at commit) and, when they admit a strict subset, the scan is rebuilt
-    * over only the admitted files. Spark's parquet scan skips ROW GROUPS
-    * from footers it has already opened; this skips the FOOTER OPENS — at
-    * a million files per snapshot, the difference between a million
-    * object-store GETs and a driver-side sidecar read per version dir.
+    * FILE PRUNING — pushed data filters are evaluated against the
+    * per-file stats, bucket and bloom sidecars stamped at commit
+    * ([[graft.lake.FilePruner]]) and, when they admit a strict subset, the
+    * scan is rebuilt over only the admitted files. Spark's parquet scan
+    * skips ROW GROUPS from footers it has already opened; this skips the
+    * FOOTER OPENS — at a million files per snapshot, the difference
+    * between a million object-store GETs and a driver-side sidecar read
+    * per version dir.
     * Pruning is conservative (missing stats → candidate) and purely an
     * IO optimization: the rebuilt scan keeps every pushed filter, so a
-    * false admit costs one footer read, never a wrong row.
-    * `spark.graft.sql.statsPruning=false` is the escape hatch.
+    * false admit costs one footer read, never a wrong row. The unpruned
+    * reference for parity checks is the library read
+    * (`Lake.readTableFeed`), which never prunes files.
     */
   private final class StatsPruningScanBuilder(
       ident: Identifier, version: Int, tableSchema: StructType,
@@ -593,49 +597,31 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           }
         case _ => ()
       }
-      val scan = buildDataScan()
-      // a verified bucket layout is REPORTED to the planner (storage-
-      // partitioned joins: two co-bucketed tables joined on the bucket key
-      // skip both exchanges) — only under the V2 bucketing conf, and never
-      // for a pushed aggregate (its scan isn't row-shaped)
-      if (aggPushed) scan
-      else BucketReportingScan.maybeWrap(SparkSession.active, scan,
-        graft.lake.BucketLayout.layoutForFiles(SparkSession.active,
-          graft.lake.Lake.snapshotFiles(
-            SparkSession.active, root, ident.name(), version)))
-    }
-
-    private def buildDataScan(): Scan = {
-      val dataFilters = pushedData
       // a pushed-down aggregate answers from footers of the listed files —
       // only safe to combine with pruning when no filters exist, and
-      // Spark only pushes aggregates when none do; keep the guard anyway
-      if (aggPushed || dataFilters.isEmpty) return inner.build()
+      // Spark only pushes aggregates when none do; keep the guard anyway.
+      // Its scan isn't row-shaped, so no bucket layout is reported either
+      if (aggPushed) return inner.build()
+      val all = graft.lake.Lake.snapshotFiles(spark, root, ident.name(), version)
+      // a verified bucket layout is REPORTED to the planner (storage-
+      // partitioned joins: two co-bucketed tables joined on the bucket key
+      // skip both exchanges) — only under the V2 bucketing conf
+      BucketReportingScan.maybeWrap(spark, buildDataScan(all),
+        graft.lake.BucketLayout.layoutForFiles(spark, all))
+    }
+
+    private def buildDataScan(all: Seq[String]): Scan = {
+      val dataFilters = pushedData
       val v1 = dataFilters.flatMap(e =>
         org.apache.spark.sql.execution.datasources.DataSourceStrategy
           .translateFilter(e, supportNestedPredicatePushdown = true))
       if (v1.isEmpty) return inner.build()
-      val all = graft.lake.Lake.snapshotFiles(spark, root, ident.name(), version)
-      val statsAdmitted = graft.lake.StatsSidecar.candidateFiles(
-        spark, all, tableSchema, v1)
-      // bloom file indexes narrow equality/IN lookups on columns min/max
-      // stats can't prune (opt-in via bloom_filter_columns)
-      val bloomCols = graft.lake.Lake
-        .tableProperties(spark, root, ident.name())
-        .get(graft.lake.BloomSidecar.ColumnsProp)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      val bloomAdmitted = graft.lake.BloomSidecar.filterCandidates(
-        spark, statsAdmitted, tableSchema, v1, bloomCols)
-      // a bucketed layout answers equality probes on the bucket column by
-      // hash alone — the layout IS the index
-      val admitted = graft.lake.BucketLayout.filterCandidates(
-        spark, bloomAdmitted, tableSchema, v1)
-      GraftCatalog.lastStatsPrune.set((admitted.size, all.size))
+      val admitted = admitScan(ident, all, tableSchema, v1).admitted
       if (admitted.size >= all.size) inner.build()
       else {
         // zero admitted files still needs a valid (empty-result) scan:
         // keep one file — every pushed filter survives, so it yields rows
-        // for no file the stats excluded, by the conservative contract
+        // for no file the sidecars excluded, by the conservative contract
         val keep = if (admitted.isEmpty) all.take(1) else admitted
         val b = parquetTable(ident, version, Some(keep),
             s" [stats-pruned ${keep.size}/${all.size} files]")
@@ -649,18 +635,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Scan-builder selection shared by the live table and time-traveled
     * [[FrozenTable]]: sidecar/mapping versions read through the resolving
-    * V1 fallback, plain versions through the stats-pruning parquet path
-    * (or the bare delegate when pruning is disabled).
+    * V1 fallback, plain versions through the pruning parquet path.
     */
   private def readScanBuilder(
       ident: Identifier, version: Int, schema: StructType,
-      delegate: ParquetTable, options: CaseInsensitiveStringMap): ScanBuilder =
+      options: CaseInsensitiveStringMap): ScanBuilder =
     if (hasMorDeletes(ident, version) || hasMapping(ident, version))
       morScanBuilder(ident, version, schema)
-    else if (SparkSession.active.conf
-        .get("spark.graft.sql.statsPruning", "true") != "false")
-      new StatsPruningScanBuilder(ident, version, schema, options)
-    else delegate.newScanBuilder(options)
+    else new StatsPruningScanBuilder(ident, version, schema, options)
 
   /** CHANGE-DATA-FEED table `<base>__changes` (A37): batch reads answer
     * "what changed between versions" through the V1 bridge over
@@ -795,7 +777,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
         TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      readScanBuilder(ident, version, schema(), delegate, options)
+      readScanBuilder(ident, version, schema(), options)
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
       new WriteBuilder with SupportsTruncate {
         private var overwrite = false
@@ -1103,7 +1085,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     override def capabilities(): util.Set[TableCapability] =
       util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      readScanBuilder(ident, version, schema(), delegate, options)
+      readScanBuilder(ident, version, schema(), options)
   }
 
   /** `VERSION AS OF n` (also accepts `vn`) — or a TAG NAME: `VERSION AS

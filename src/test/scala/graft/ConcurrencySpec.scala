@@ -827,7 +827,7 @@ class ConcurrencySpec extends SparkSpec {
       org.apache.spark.sql.functions.min("k")).head().getLong(0)
     val admitted = StatsSidecar.candidateFiles(
       spark, files, spark.read.parquet(files: _*).schema,
-      Seq(org.apache.spark.sql.sources.EqualTo("k", lo)))
+      Seq(org.apache.spark.sql.sources.EqualTo("k", lo))).files
     assert(admitted.size === 1, s"expected one admitted file, got $admitted")
   }
 

@@ -1022,7 +1022,7 @@ class LakeSpec extends SparkSpec {
     // (single-key in-bucket sort would leave both dimensions unprunable)
     def admitted(colName: String): Seq[String] =
       StatsSidecar.candidateFiles(spark, files, schema,
-        Seq(GreaterThanOrEqual(colName, 0L), LessThanOrEqual(colName, 127L)))
+        Seq(GreaterThanOrEqual(colName, 0L), LessThanOrEqual(colName, 127L))).files
     assert(admitted("a").length <= files.length * 3 / 4,
       s"a admitted ${admitted("a").length}/${files.length}")
     assert(admitted("b").length <= files.length * 3 / 4,
@@ -1056,14 +1056,14 @@ class LakeSpec extends SparkSpec {
     // single-dimension string clustering would leave v unprunable and
     // vice versa
     val onT = StatsSidecar.candidateFiles(spark, files, schema, Seq(
-      GreaterThanOrEqual("t", "t00"), LessThan("t", "t02"))).length
+      GreaterThanOrEqual("t", "t00"), LessThan("t", "t02"))).files.length
     val onV = StatsSidecar.candidateFiles(spark, files, schema, Seq(
-      GreaterThanOrEqual("v", 0L), LessThanOrEqual("v", 127L))).length
+      GreaterThanOrEqual("v", 0L), LessThanOrEqual("v", 127L))).files.length
     assert(onT <= files.length * 3 / 4, s"t admitted $onT/${files.length}")
     assert(onV <= files.length * 3 / 4, s"v admitted $onV/${files.length}")
     // pruned read stays exact
     val admitted = StatsSidecar.candidateFiles(spark, files, schema, Seq(
-      GreaterThanOrEqual("t", "t00"), LessThan("t", "t02")))
+      GreaterThanOrEqual("t", "t00"), LessThan("t", "t02"))).files
     val full = Lake.readTableFeed(spark, root, "zs", Some(1))
       .filter(col("t") < "t02")
     val pruned = spark.read.parquet(admitted: _*).filter(col("t") < "t02")
@@ -1130,7 +1130,7 @@ class LakeSpec extends SparkSpec {
     assert(files.length >= 12, s"z-splits must survive compaction, got ${files.length}")
     val schema = Lake.readTableFeed(spark, root, "bzc", Some(v)).schema
     def adm(c: String): Int = StatsSidecar.candidateFiles(spark, files, schema,
-      Seq(GreaterThanOrEqual(c, 0L), LessThanOrEqual(c, 127L))).length
+      Seq(GreaterThanOrEqual(c, 0L), LessThanOrEqual(c, 127L))).files.length
     assert(adm("a") <= files.length * 3 / 4, s"a admitted ${adm("a")}/${files.length}")
     assert(Lake.readTableFeed(spark, root, "bzc", Some(v)).count() === 16000)
   }
@@ -1437,7 +1437,7 @@ class LakeSpec extends SparkSpec {
     if (files.size >= 4) {
       val admitted = StatsSidecar.candidateFiles(spark, files, back.schema,
         Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("u", 40000L),
-          org.apache.spark.sql.sources.LessThanOrEqual("u", 44999L)))
+          org.apache.spark.sql.sources.LessThanOrEqual("u", 44999L))).files
       assert(admitted.size < files.size,
         s"compacted zorder files must tile u: ${admitted.size}/${files.size}")
     }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftCatalog
 
-import graft.lake.{Lake, StatsSidecar}
+import graft.lake.{FilePruner, Lake, StatsSidecar}
 
 /** A35 — stats-backed FILE pruning for catalog SQL scans: every commit
   * stamps a per-file min/max/null-count sidecar (`_filestats.json`,
@@ -14,7 +14,8 @@ import graft.lake.{Lake, StatsSidecar}
   * scan is built. Pins: pruning fires (and by how much), results stay
   * EXACTLY equal to the unpruned scan, conservatism everywhere stats are
   * missing, composition with COW carries / schema evolution / time
-  * travel, and the escape hatch.
+  * travel. Counts come from [[FilePruner.recorded]]: the admissions made
+  * on the test's own thread while the query planned.
   */
 class StatsPruningSpec extends SparkSpec {
 
@@ -38,40 +39,34 @@ class StatsPruningSpec extends SparkSpec {
       .repartitionByRange(files, col("k")).sortWithinPartitions("k")
   }
 
-  private def prune(): (Int, Int) = GraftCatalog.lastStatsPrune.get()
-
   test("commit stamps a stats sidecar and range scans open only candidate files") {
     Lake.writeTableSnapshot(clustered(4000, 8), root, "st")
     val vdir = new java.io.File(s"$root/tables/st/version=v1")
     assert(vdir.listFiles().exists(_.getName == StatsSidecar.sidecarName),
       "commit must stamp _filestats.json")
 
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    val narrow = spark.sql(
-      s"SELECT count(*) AS c, sum(k) AS s FROM $cat.tables.st WHERE k BETWEEN 1000 AND 1099")
-      .head()
-    assert(narrow.getLong(0) === 100 && narrow.getLong(1) === (1000L to 1099L).sum)
-    val (kept, total) = prune()
+    val (kept, total) = FilePruner.lastCounts {
+      val narrow = spark.sql(
+        s"SELECT count(*) AS c, sum(k) AS s FROM $cat.tables.st WHERE k BETWEEN 1000 AND 1099")
+        .head()
+      assert(narrow.getLong(0) === 100 && narrow.getLong(1) === (1000L to 1099L).sum)
+    }
     assert(total === 8, s"8 files expected, saw $total")
     assert(kept <= 2, s"a 100-key range over range-clustered files must " +
       s"admit at most 2 of 8 files, admitted $kept")
   }
 
   test("string equality and prefix predicates prune on UTF-8 byte order") {
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val (k1, t1) = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st WHERE name = 'user_000042'")
-      .head().getLong(0) === 1)
-    val (k1, t1) = prune()
+      .head().getLong(0) === 1))
     assert(t1 === 8 && k1 === 1, s"point string lookup admitted $k1/$t1")
 
     // NOTE: a LIKE pattern would keep its `_` single-char wildcard and
     // never simplify to StartsWith — use the function form
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val (k2, _) = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st WHERE startswith(name, 'user_0039')")
-      .head().getLong(0) === 100)
-    val (k2, _) = prune()
+      .head().getLong(0) === 100))
     assert(k2 <= 2, s"prefix predicate admitted $k2/8")
   }
 
@@ -82,10 +77,9 @@ class StatsPruningSpec extends SparkSpec {
         (col("id") * 1.5).cast("decimal(12,2)").as("price"))
         .repartitionByRange(8, col("k")).sortWithinPartitions("k"),
       root, "st_dec")
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.tables.st_dec " +
-      "WHERE price BETWEEN 1500.00 AND 1648.50").head().getLong(0) === 100)
-    val (kept, total) = prune()
+    val (kept, total) = FilePruner.lastCounts(
+      assert(spark.sql(s"SELECT count(*) AS c FROM $cat.tables.st_dec " +
+        "WHERE price BETWEEN 1500.00 AND 1648.50").head().getLong(0) === 100))
     assert(total === 8 && kept <= 2,
       s"a narrow decimal range over price-clustered files admitted $kept/$total")
     GraftCatalog.lastMetaAggregate.set(0)
@@ -99,10 +93,8 @@ class StatsPruningSpec extends SparkSpec {
   }
 
   test("empty candidate set still yields a correct empty result") {
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
-      s"SELECT count(*) AS c FROM $cat.tables.st WHERE k = -5").head().getLong(0) === 0)
-    val (kept, _) = prune()
+    val (kept, _) = FilePruner.lastCounts(assert(spark.sql(
+      s"SELECT count(*) AS c FROM $cat.tables.st WHERE k = -5").head().getLong(0) === 0))
     assert(kept === 0, "an out-of-domain point must admit zero files")
     assert(spark.sql(s"SELECT * FROM $cat.tables.st WHERE k > 100000").count() === 0)
   }
@@ -110,37 +102,35 @@ class StatsPruningSpec extends SparkSpec {
   test("IS NULL / IS NOT NULL prune on footer null counts") {
     // `cat` is null exactly when k % 10 == 0 — every file has nulls, so
     // IS NULL prunes nothing; a column with NO nulls prunes IS NULL fully
-    GraftCatalog.lastStatsPrune.set((0, 0))
     assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st WHERE cat IS NULL")
       .head().getLong(0) === 400)
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val counts = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st WHERE name IS NULL")
-      .head().getLong(0) === 0)
-    assert(prune()._1 === 0, "IS NULL on a null-free column must admit zero files")
+      .head().getLong(0) === 0))
+    assert(counts._1 === 0, s"IS NULL on a null-free column must admit zero files: $counts")
   }
 
   test("pruned and unpruned scans agree exactly, incl. doubles and dates") {
-    val q = s"SELECT sum(k) AS s, count(*) AS c, min(name) AS mn " +
-      s"FROM $cat.tables.st WHERE k > 3100 AND score < 50.0 AND d >= DATE'2026-02-01'"
-    val on = spark.sql(q).collect().toSeq
-    spark.conf.set("spark.graft.sql.statsPruning", "false")
-    try {
-      GraftCatalog.lastStatsPrune.set((0, 0))
-      val off = spark.sql(q).collect().toSeq
-      assert(on === off, "pruning must be invisible in results")
-      assert(prune() === ((0, 0)), "escape hatch must bypass the pruning builder")
-    } finally spark.conf.set("spark.graft.sql.statsPruning", "true")
+    def q(from: String) = s"SELECT sum(k) AS s, count(*) AS c, min(name) AS mn " +
+      s"FROM $from WHERE k > 3100 AND score < 50.0 AND d >= DATE'2026-02-01'"
+    val (kept, total) = FilePruner.lastCounts(
+      spark.sql(q(s"$cat.tables.st")).queryExecution.executedPlan)
+    assert(kept < total, s"the catalog read must prune: admitted $kept/$total")
+    val on = spark.sql(q(s"$cat.tables.st")).collect().toSeq
+    // the library read never prunes files: the unpruned reference
+    Lake.readTableFeed(spark, root, "st").createOrReplaceTempView("st_unpruned")
+    val off = spark.sql(q("st_unpruned")).collect().toSeq
+    assert(on === off, "pruning must be invisible in results")
   }
 
   test("the physical scan's file index holds only the admitted files") {
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    val plan = spark.sql(s"SELECT * FROM $cat.tables.st WHERE k = 500")
-      .queryExecution.executedPlan.toString
+    val df = spark.sql(s"SELECT * FROM $cat.tables.st WHERE k = 500")
     // planning alone (no execution) must already have pruned: the scan's
     // InMemoryFileIndex is built over the single admitted file, not the dir
-    assert(prune() === ((1, 8)), s"point scan admitted ${prune()}")
+    val counts = FilePruner.lastCounts(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(counts === ((1, 8)), s"point scan admitted $counts")
     assert(plan.contains("InMemoryFileIndex(1 paths)"), plan)
   }
 
@@ -148,19 +138,16 @@ class StatsPruningSpec extends SparkSpec {
     // file-granular UPDATE: one file rewritten into v2, seven carried by
     // manifest reference — the carried files' stats resolve from v1's
     // sidecar, the rewritten file's from v2's
-    StatsSidecar.lastPrune.set((-1, -1))
-    spark.sql(s"UPDATE $cat.tables.st SET score = 0.0 WHERE k = 17")
+    val probe = FilePruner.lastCounts(
+      spark.sql(s"UPDATE $cat.tables.st SET score = 0.0 WHERE k = 17"))
     // the mutation PROBE is stats-pruned too: only the one candidate file
     // was opened to find touched files
-    assert(StatsSidecar.lastPrune.get() === ((1, 8)),
-      s"COW probe admitted ${StatsSidecar.lastPrune.get()}")
+    assert(probe === ((1, 8)), s"COW probe admitted $probe")
     assert(Lake.hasManifest(spark, root, "st",
       Lake.versions(spark, root, "st").max), "UPDATE must ride the COW route")
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val (kept, total) = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st WHERE k BETWEEN 3900 AND 3999")
-      .head().getLong(0) === 100)
-    val (kept, total) = prune()
+      .head().getLong(0) === 100))
     assert(total === 8, s"v2 resolves 8 files, saw $total")
     assert(kept <= 2, s"carried-file stats must still prune: admitted $kept/8")
     // and the rewritten file's own (fresh) stats admit the updated key
@@ -205,10 +192,9 @@ class StatsPruningSpec extends SparkSpec {
 
   test("merge-on-read positional delete probes only candidate files") {
     Lake.writeTableSnapshot(clustered(2000, 4), root, "morp")
-    StatsSidecar.lastPrune.set((-1, -1))
-    graft.lake.MergeOnRead.deleteWhere(spark, root, "morp", col("k") === 100)
-    assert(StatsSidecar.lastPrune.get() === ((1, 4)),
-      s"MOR probe admitted ${StatsSidecar.lastPrune.get()}")
+    val probe = FilePruner.lastCounts(
+      graft.lake.MergeOnRead.deleteWhere(spark, root, "morp", col("k") === 100))
+    assert(probe === ((1, 4)), s"MOR probe admitted $probe")
     assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.morp WHERE k = 100")
       .head().getLong(0) === 0)
@@ -231,24 +217,20 @@ class StatsPruningSpec extends SparkSpec {
     // `morp` carries a position sidecar, so SQL reads it through the
     // V1Scan fallback — pushed filters are evaluated against the stats
     // sidecar there as well, and the delete anti-join still applies
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val range = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.morp WHERE k BETWEEN 600 AND 649")
-      .head().getLong(0) === 50)
-    assert(prune() === ((1, 4)), s"MOR fallback admitted ${prune()}")
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+      .head().getLong(0) === 50))
+    assert(range === ((1, 4)), s"MOR fallback admitted $range")
+    val point = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.morp WHERE k IN (100, 101)")
-      .head().getLong(0) === 1, "the MOR-deleted row must stay deleted")
-    assert(prune() === ((1, 4)), s"MOR point lookup admitted ${prune()}")
+      .head().getLong(0) === 1, "the MOR-deleted row must stay deleted"))
+    assert(point === ((1, 4)), s"MOR point lookup admitted $point")
   }
 
   test("time-traveled versions prune through the same path") {
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val (kept, total) = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st VERSION AS OF 1 WHERE k BETWEEN 10 AND 19")
-      .head().getLong(0) === 10)
-    val (kept, total) = prune()
+      .head().getLong(0) === 10))
     assert(total === 8 && kept <= 2, s"frozen scan admitted $kept/$total")
   }
 
@@ -258,11 +240,9 @@ class StatsPruningSpec extends SparkSpec {
       s"$root/tables/nostats/version=v1/${StatsSidecar.sidecarName}")
     assert(side.delete(), "test setup: drop the sidecar")
     StatsSidecar.clearCache()
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val (kept, total) = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.nostats WHERE k = 7")
-      .head().getLong(0) === 1)
-    val (kept, total) = prune()
+      .head().getLong(0) === 1))
     assert(kept === total, s"missing sidecar must admit every file ($kept/$total)")
   }
 
@@ -286,16 +266,14 @@ class StatsPruningSpec extends SparkSpec {
     Lake.widenColumn(spark, root, "wst", "k", org.apache.spark.sql.types.LongType)
     Lake.widenColumn(spark, root, "wst", "j", org.apache.spark.sql.types.DoubleType)
     // int -> long stays in the 'l' stat domain: old files still prune
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.tables.wst WHERE k = 7")
-      .head().getLong(0) === 1)
-    assert(prune() === ((1, 4)), s"int->long pruning admitted ${prune()}")
+    val long = FilePruner.lastCounts(assert(
+      spark.sql(s"SELECT count(*) AS c FROM $cat.tables.wst WHERE k = 7").head().getLong(0) === 1))
+    assert(long === ((1, 4)), s"int->long pruning admitted $long")
     // int -> double crosses domains ('l' stats under a 'd' type): old
     // files stop pruning — conservative, never wrong
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.tables.wst WHERE j = 7.0")
-      .head().getLong(0) === 1)
-    assert(prune() === ((4, 4)), s"int->double must admit all: ${prune()}")
+    val double = FilePruner.lastCounts(assert(
+      spark.sql(s"SELECT count(*) AS c FROM $cat.tables.wst WHERE j = 7.0").head().getLong(0) === 1))
+    assert(double === ((4, 4)), s"int->double must admit all: $double")
   }
 
   test("cluster_by table property: unsorted inserts land range-clustered") {
@@ -311,11 +289,9 @@ class StatsPruningSpec extends SparkSpec {
       .orderBy(rand(42)) // deliberately shuffled: the policy must cluster
       .createOrReplaceTempView("clust_src")
     spark.sql(s"INSERT INTO $cat.tables.clust SELECT * FROM clust_src")
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val (kept, total) = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.clust WHERE k BETWEEN 100 AND 149")
-      .head().getLong(0) === 50)
-    val (kept, total) = prune()
+      .head().getLong(0) === 50))
     assert(total >= 4 && kept <= 2,
       s"clustered insert must let a narrow range prune: admitted $kept/$total")
     // the property surfaces through SHOW TBLPROPERTIES and can be unset
@@ -333,12 +309,10 @@ class StatsPruningSpec extends SparkSpec {
       spark.range(0, 2000)
         .select(col("id").as("k"), lit("x").as("v")).orderBy(rand(7)),
       root, "clust2", "s1", 0L)
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val epoch = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.clust2 WHERE k = 1500")
-      .head().getLong(0) === 1)
-    assert(prune()._1 === 1,
-      s"clustered epoch must admit one file: ${prune()}")
+      .head().getLong(0) === 1))
+    assert(epoch._1 === 1, s"clustered epoch must admit one file: $epoch")
     } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
   }
 
@@ -363,39 +337,37 @@ class StatsPruningSpec extends SparkSpec {
     // a real value of u: look it up — stats can't prune, the bloom must
     val u0 = spark.sql(s"SELECT u FROM $cat.tables.bloomt WHERE k = 1234")
       .head().getLong(0)
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    BloomSidecar.lastProbe.set((0, 0))
-    assert(spark.sql(
+    val scan = FilePruner.recorded(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.bloomt WHERE u = $u0")
-      .head().getLong(0) >= 1)
-    val (kept, total) = prune()
-    assert(total === 8, s"8 files expected, saw $total")
-    assert(kept < 8, s"the bloom must exclude some files: admitted $kept/8")
-    assert(BloomSidecar.lastProbe.get()._1 > 0, "exclusions must come from the bloom")
+      .head().getLong(0) >= 1)).last
+    assert(scan.total === 8, s"8 files expected, saw ${scan.total}")
+    assert(scan.admitted.size < 8,
+      s"the bloom must exclude some files: admitted ${scan.admitted.size}/8")
+    assert(scan.skippedByBloom > 0, s"exclusions must come from the bloom: $scan")
     // string bloom
     val s0 = spark.sql(s"SELECT s FROM $cat.tables.bloomt WHERE k = 99")
       .head().getString(0)
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val onS = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.bloomt WHERE s = '$s0'")
-      .head().getLong(0) >= 1)
-    assert(prune()._1 < 8, s"string bloom must prune: ${prune()}")
+      .head().getLong(0) >= 1))
+    assert(onS._1 < 8, s"string bloom must prune: $onS")
     // an absent value: every file excluded, result exactly empty
     assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.bloomt WHERE u = 100001")
       .head().getLong(0) === 0)
     // bloom + stats compose: k range AND u point
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    val both = spark.sql(s"SELECT count(*) AS c FROM $cat.tables.bloomt " +
-      s"WHERE k BETWEEN 1000 AND 1499 AND u = $u0").head().getLong(0)
-    assert(both === (if (1234 >= 1000 && 1234 <= 1499) 1 else 0) || both >= 0)
-    assert(prune()._1 <= 2, s"stats+bloom intersection admitted ${prune()}")
-    // correctness parity with the escape hatch
-    val q = s"SELECT sum(k) AS sk, count(*) AS c FROM $cat.tables.bloomt WHERE u IN ($u0, 77777)"
-    val on = spark.sql(q).collect().toSeq
-    spark.conf.set("spark.graft.sql.statsPruning", "false")
-    try assert(spark.sql(q).collect().toSeq === on)
-    finally spark.conf.set("spark.graft.sql.statsPruning", "true")
+    val both = FilePruner.lastCounts {
+      val n = spark.sql(s"SELECT count(*) AS c FROM $cat.tables.bloomt " +
+        s"WHERE k BETWEEN 1000 AND 1499 AND u = $u0").head().getLong(0)
+      assert(n >= 1 && n === Lake.readTableFeed(spark, root, "bloomt")
+        .filter(col("k").between(1000, 1499) && col("u") === u0).count())
+    }
+    assert(both._1 <= 2, s"stats+bloom intersection admitted $both")
+    // correctness parity with the library read, which never prunes files
+    def q(from: String) = s"SELECT sum(k) AS sk, count(*) AS c FROM $from WHERE u IN ($u0, 77777)"
+    Lake.readTableFeed(spark, root, "bloomt").createOrReplaceTempView("bloomt_unpruned")
+    assert(spark.sql(q(s"$cat.tables.bloomt")).collect().toSeq ===
+      spark.sql(q("bloomt_unpruned")).collect().toSeq)
   }
 
   test("two-level: group envelopes skip whole version dirs before per-file stats") {
@@ -407,13 +379,11 @@ class StatsPruningSpec extends SparkSpec {
     CopyOnWrite.appendEpoch(slice(1000, 1999), root, "st2", "g", 0)
     CopyOnWrite.appendEpoch(slice(2000, 2999), root, "st2", "g", 1)
 
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    StatsSidecar.lastGroupPrune.set((0, 0))
     val q = s"SELECT count(*) AS c FROM $cat.tables.st2 WHERE k BETWEEN 2400 AND 2599"
-    assert(spark.sql(q).head().getLong(0) === 200)
-    val (kept, total) = prune()
+    val first = FilePruner.recorded(assert(spark.sql(q).head().getLong(0) === 200)).last
+    val (kept, total) = (first.admitted.size, first.total)
     assert(total === 6 && kept <= 2, s"admitted $kept/$total")
-    val (skipped, dirs) = StatsSidecar.lastGroupPrune.get()
+    val (skipped, dirs) = (first.dirsSkipped, first.dirsSeen)
     assert(dirs === 3 && skipped === 2,
       s"two of three commit dirs lie outside [2400,2599] and must be " +
         s"skipped at the GROUP level (per-file sidecars unread): $skipped/$dirs")
@@ -426,12 +396,10 @@ class StatsPruningSpec extends SparkSpec {
       p.delete()
     }
     StatsSidecar.clearCache()
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    StatsSidecar.lastGroupPrune.set((0, 0))
-    assert(spark.sql(q).head().getLong(0) === 200)
-    assert(prune() === ((kept, total)),
+    val again = FilePruner.recorded(assert(spark.sql(q).head().getLong(0) === 200)).last
+    assert((again.admitted.size, again.total) === ((kept, total)),
       "per-file admission must be identical without envelopes")
-    assert(StatsSidecar.lastGroupPrune.get() === ((0, 3)),
+    assert((again.dirsSkipped, again.dirsSeen) === ((0, 3)),
       "no envelope, no group skip — conservative fall-through")
   }
 
@@ -440,11 +408,10 @@ class StatsPruningSpec extends SparkSpec {
     val rows = spark.sql(s"CALL $cat.system.collect_stats('nostats')").collect()
     assert(rows.length === 1 && rows(0).getInt(1) === 4,
       s"one dir with 4 files expected: ${rows.mkString(",")}")
-    GraftCatalog.lastStatsPrune.set((0, 0))
-    assert(spark.sql(
+    val backfilled = FilePruner.lastCounts(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.nostats WHERE k = 7")
-      .head().getLong(0) === 1)
-    assert(prune()._1 === 1, s"backfilled stats must prune: ${prune()}")
+      .head().getLong(0) === 1))
+    assert(backfilled._1 === 1, s"backfilled stats must prune: $backfilled")
     // idempotent: a second call finds nothing to stamp
     assert(spark.sql(s"CALL $cat.system.collect_stats('nostats')").collect().isEmpty)
   }
