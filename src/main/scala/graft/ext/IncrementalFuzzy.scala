@@ -261,8 +261,6 @@ object IncrementalFuzzy {
       |WHERE levenshtein(a.c_name, b.c_name) <= 1
       |  AND a.c_custkey % 100 <> 0 AND b.c_custkey % 100 <> 0""".stripMargin
 
-  private val catalogN = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Gate (a23): the fuzzy index's maintained state published through the
     * versioned-lake CATALOG — `SELECT … FROM cat.tables.fuzzy_pairs
     * VERSION AS OF n` reads the index exactly as it stood after each
@@ -288,10 +286,7 @@ object IncrementalFuzzy {
     append(rows.filter(col("id") >= 1000), root, maxDist = 1)
     graft.lake.Lake.writeTableSnapshot(
       s.read.parquet(s"$root/pairs_str"), lakeRoot, "fuzzy_pairs")
-    val cat = s"gfcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", lakeRoot)
+    val cat = org.apache.spark.sql.graft.GraftCatalog.register(s, lakeRoot)
     def q(gen: String, suffix: String): DataFrame = s.sql(
       s"SELECT '$gen' AS gen, s_a, s_b, CAST(dist AS BIGINT) AS dist " +
         s"FROM $cat.tables.fuzzy_pairs$suffix")

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   */
 object CopyOnWrite {
 
-  import Lake.fs
+  import Lake.{fs, retryLoop}
 
   private def norm(p: String): String = new Path(p).toUri.getPath
 
@@ -108,9 +108,7 @@ object CopyOnWrite {
       carriedDeletes: Option[MergeOnRead.Sidecar] = None,
       declared: Option[org.apache.spark.sql.types.StructType] = None,
       markers: Seq[String] = Nil): Option[Int] = {
-    val tdir = Lake.tablePath(root, name)
-    val stage = new Path(
-      s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val stage = Lake.newStage(root, name)
     // bucketed tables keep their layout through mutations: the rewritten
     // rows re-bucket (K touched buckets → K files; empty buckets write
     // nothing), the stamp re-verifies from the data, and the carried
@@ -123,7 +121,7 @@ object CopyOnWrite {
       .parquet(stage.toString)
     carriedDeletes.foreach(
       MergeOnRead.stageSidecar(spark, root, name, stage, MergeOnRead.deletesName, _))
-    val f = fs(spark, tdir)
+    val f = fs(spark, stage.toString)
     // commit-scoped markers (the streaming sinks' epoch-receipt
     // FRONTIER): staged BEFORE the rename, so they exist in the version
     // dir exactly when the commit is visible — never a window where the
@@ -147,19 +145,6 @@ object CopyOnWrite {
       finally out.close()
     }
     Lake.promoteStagedIf(spark, root, name, stage, expectedLatest, retentionVersions)
-  }
-
-  private[lake] def retryLoop(name: String, op: String)(attempt: () => Option[Int]): Int = {
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      attempt() match {
-        case Some(v) => return v
-        case None => () // lost the CAS: re-probe against the new latest
-      }
-    }
-    throw new java.io.IOException(
-      s"$op $name: still conflicting after $attempts attempts")
   }
 
   /** INCREMENTAL small-file compaction — the maintenance companion to

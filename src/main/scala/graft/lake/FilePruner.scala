@@ -1,7 +1,5 @@
 package graft.lake
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -51,7 +49,7 @@ object FilePruner {
           files.size - stats.files.size, stats.files.size - byBucket.size,
           byBucket.size - byBloom.size, stats.dirsSkipped, stats.dirsSeen)
       }
-    Option(recorder.get).foreach(_ += a)
+    recorder.add(a)
     a
   }
 
@@ -67,24 +65,14 @@ object FilePruner {
       org.apache.spark.sql.graft.ExprFilters.toV1(base, pred))
   }
 
-  private val recorder = new ThreadLocal[ArrayBuffer[Admission]]
+  private val recorder = new ThreadRecorder[Admission]
 
   /** The admissions made on the calling thread while `body` ran, in order
     * — catalog scans decide at plan time, so planning a query is enough.
     * Another thread's admissions never show here; a nested `recorded`
     * also reports its admissions to the enclosing one.
     */
-  def recorded(body: => Any): Seq[Admission] = {
-    val outer = recorder.get
-    val mine = ArrayBuffer.empty[Admission]
-    recorder.set(mine)
-    try body
-    finally {
-      recorder.set(outer)
-      if (outer != null) outer ++= mine
-    }
-    mine.toSeq
-  }
+  def recorded(body: => Any): Seq[Admission] = recorder.recorded(body)
 
   /** `(admitted, total)` of the last admission `body` made on the calling
     * thread; `(-1, -1)` when it made none.

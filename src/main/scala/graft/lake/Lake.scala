@@ -417,30 +417,49 @@ object Lake {
     */
   def writeTableSnapshot(
       df: DataFrame, root: String, name: String,
-      retentionVersions: Int = 7): Int = {
+      retentionVersions: Int = 7): Int =
+    stageAndPublish(df, root, name, expectedLatest = None, retentionVersions).get
+
+  /** Stage `df` under the table's write policies and publish it through
+    * [[publishStaged]] — the one body of [[writeTableSnapshot]] and
+    * [[writeTableSnapshotIf]].
+    */
+  private def stageAndPublish(
+      df: DataFrame, root: String, name: String,
+      expectedLatest: Option[Int], retentionVersions: Int): Option[Int] = {
     val spark = df.sparkSession
-    val tdir = tablePath(root, name)
-    val stage = new Path(
-      s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val stage = newStage(root, name)
     policyWriter(spark, root, name, df).parquet(stage.toString)
-    val n = commitStaged(spark, tdir, stage)
-    Retention.pruneTableVersions(spark, root, name, keep = retentionVersions, dryRun = false)
-    n
+    publishStaged(spark, root, name, stage, expectedLatest, Some(retentionVersions))
   }
 
-  /** Optimistic-concurrency snapshot commit: promote a fully-written
-    * staging directory to the next free `version=vN` slot. Version numbers
-    * are claimed with an exclusive marker-file create (atomic on HDFS via
-    * the Hadoop create; atomic on the local FS via NIO O_EXCL — see
-    * [[claimExclusive]]) BEFORE the rename, so two writers that
-    * both computed next = N cannot clobber each other — the loser's create
-    * fails and it retries with N+1. Lost-update prevention for concurrent
-    * snapshot publishers, plus no torn reads ever: a version directory
-    * appears only via rename of a complete staging dir, so `versions()`
-    * can never list a half-written snapshot. A writer that crashes after
-    * claiming but before renaming burns its version number (readers skip
-    * the gap; `vacuumTable` collects the marker and the orphaned staging).
+  /** A fresh staging directory inside the table dir: a hidden sibling of
+    * the version dirs, so promoting it is a same-directory rename, readers
+    * never list it, and [[vacuumTable]] collects it when its writer dies.
+    * `tag` names what the directory holds (empty for a snapshot stage).
     */
+  def newStage(root: String, name: String, tag: String = ""): Path =
+    new Path(s"${tablePath(root, name)}/.stage_$tag" +
+      java.util.UUID.randomUUID().toString.replace("-", ""))
+
+  /** Run one optimistic read-modify-write until it commits: `attempt`
+    * reads the latest version, builds its result and publishes it by
+    * compare-and-swap ([[writeTableSnapshotIf]], [[promoteStagedIf]]),
+    * returning None when another writer committed first — the next
+    * attempt re-reads the new latest. Gives up after 20 lost races.
+    */
+  def retryLoop[A](name: String, op: String)(attempt: () => Option[A]): A = {
+    @annotation.tailrec
+    def go(n: Int): A =
+      if (n > 20) throw new java.io.IOException(
+        s"$op $name: still conflicting after ${n - 1} attempts")
+      else attempt() match {
+        case Some(a) => a
+        case None => go(n + 1)
+      }
+    go(1)
+  }
+
   /** Atomically create a claim marker, returning whether WE created it.
     * `FileSystem.create(path, overwrite = false)` is exists-then-create on
     * the local filesystem — two racing threads can both "win", which is a
@@ -465,10 +484,10 @@ object Lake {
     * live version dirs is re-stamped into the stage (unless the stage
     * already stamps that sink — an appendEpoch committing its own new
     * receipt), so the receipt a replay probe needs can never age out of
-    * the live set no matter which operation commits next. Run by BOTH
-    * commit tails — [[commitStaged]] and [[promoteStagedIf]] — which is
-    * every path that publishes a version (COW rewrites, merge-on-read
-    * sidecars, metadata-only evolutions, plain snapshot writes); taking
+    * the live set no matter which operation commits next. Run by the
+    * commit tail [[publishStaged]], which every path that publishes a
+    * version goes through (COW rewrites, merge-on-read sidecars,
+    * metadata-only evolutions, plain snapshot writes, clones); taking
     * the max across all live dirs (not just the latest) makes a
     * momentarily-stale frontier stamped by a racing writer self-heal
     * instead of propagate.
@@ -535,48 +554,80 @@ object Lake {
     } finally inCommitHook.set(java.lang.Boolean.FALSE)
   }
 
-  private def commitStaged(spark: SparkSession, tdir: String, stage: Path): Int = {
+  /** THE COMMIT TAIL: promote a fully-written staging directory to a
+    * `version=vN` slot — the one function that publishes a version.
+    *
+    * Optimistic concurrency. Version numbers are claimed with an exclusive
+    * marker-file create ([[claimExclusive]]) BEFORE the rename, so two
+    * writers that both computed next = N cannot clobber each other — the
+    * loser's create fails. No torn reads ever: a version directory appears
+    * only via rename of a complete staging dir, so `versions()` can never
+    * list a half-written snapshot. A writer that crashes after claiming but
+    * before renaming burns its version number (readers skip the gap;
+    * `vacuumTable` collects the marker and the orphaned staging).
+    *
+    * The slot:
+    *  - `expectedLatest = None` claims the next free slot; a claimed or
+    *    occupied slot moves it to the one after, so it always publishes;
+    *  - `Some(b)` is a compare-and-swap: it publishes `b + 1` only if `b`
+    *    is still the latest version, else it deletes the stage and returns
+    *    None (the caller re-reads the new latest and retries —
+    *    [[retryLoop]]).
+    *
+    * Every commit runs the same steps: the stats, bloom and bucket stamps
+    * and the epoch-frontier carry go INTO the stage (atomic with the
+    * version; a lost race wastes only their reads), then claim, rename,
+    * `_commit` receipt and ledger entry, claim release, commit hooks, and
+    * last the retention prune (`retentionVersions`; None never prunes —
+    * clones and write-audit-publish). Hooks run before the prune so an
+    * `mv_refresh='on_commit'` refresh still finds the version it diffs
+    * from, even at a small retention.
+    */
+  private def publishStaged(
+      spark: SparkSession, root: String, name: String, stage: Path,
+      expectedLatest: Option[Int], retentionVersions: Option[Int]): Option[Int] = {
+    val tdir = tablePath(root, name)
     val f = fs(spark, tdir)
-    // per-file MIN/MAX stats sidecar over the staged files (footer reads
-    // only — O(new files), no data re-read), written INTO the stage so it
-    // appears atomically with the version; best-effort CACHE like the
-    // receipt: a missing sidecar costs scan IO, never correctness
+    // sidecars are best-effort CACHES: a missing one costs scan IO, never
+    // correctness. Per-file MIN/MAX stats (footer reads only), blooms for
+    // the table's bloom_filter_columns and the bucket mapping (both opt-in
+    // by property, over the STAGED files only)
     try StatsSidecar.stamp(f, stage)
     catch { case scala.util.control.NonFatal(_) => () }
-    val (root, name) = {
-      val p = new Path(tdir)
-      (p.getParent.getParent.toString, p.getName)
-    }
-    // per-file blooms for the table's bloom_filter_columns (opt-in — one
-    // pass over the STAGED files only; nothing without the property)
     try BloomSidecar.stamp(spark, root, name, stage)
     catch { case scala.util.control.NonFatal(_) => () }
-    // bucket mapping, verified from the staged data (opt-in via bucket_by)
     try BucketLayout.stamp(spark, root, name, stage)
     catch { case scala.util.control.NonFatal(_) => () }
     carryEpochFrontier(spark, f, root, name, stage)
-    var n = latestVersion(spark, root, name).getOrElse(0) + 1
-    while (true) {
+    @annotation.tailrec
+    def claimFrom(n: Int): Option[Int] = {
       val claim = new Path(s"$tdir/.claim_v$n")
       val claimed = claimExclusive(f, claim)
-      if (claimed) {
-        val live = new Path(s"$tdir/version=v$n")
-        if (f.exists(live)) {
-          // slot already occupied (pre-OCC partial dir or racing writer):
-          // release the claim and move on, never overwrite a snapshot
-          f.delete(claim, false)
-        } else {
-          if (!f.rename(stage, live))
-            throw new java.io.IOException(s"commit: could not promote $stage to $live")
-          stampCommit(f, live)
-          f.delete(claim, false)
-          runCommitHooks(spark, root, name, n)
-          return n
-        }
+      val live = new Path(s"$tdir/version=v$n")
+      if (claimed && !f.exists(live) &&
+          expectedLatest.forall(b => latestVersion(spark, root, name).getOrElse(0) == b)) {
+        if (!f.rename(stage, live))
+          throw new java.io.IOException(s"commit: could not promote $stage to $live")
+        stampCommit(f, live)
+        f.delete(claim, false)
+        Some(n)
+      } else {
+        // slot taken (a racing writer, a pre-OCC partial dir) or, for a
+        // CAS, a later commit: release OUR claim if we made one (claims
+        // only matter before the slot's rename), never overwrite
+        if (claimed) f.delete(claim, false)
+        if (expectedLatest.isEmpty) claimFrom(n + 1)
+        else { f.delete(stage, true); None }
       }
-      n += 1
     }
-    -1 // unreachable
+    val published = claimFrom(
+      expectedLatest.getOrElse(latestVersion(spark, root, name).getOrElse(0)) + 1)
+    published.foreach { n =>
+      runCommitHooks(spark, root, name, n)
+      retentionVersions.foreach(k =>
+        Retention.pruneTableVersions(spark, root, name, keep = k, dryRun = false))
+    }
+    published
   }
 
   /** Leave a `_commit` receipt inside the published snapshot dir. POSIX
@@ -792,69 +843,33 @@ object Lake {
 
   /** Conditional snapshot commit: publish `df` as version `expectedLatest+1`
     * ONLY IF no other writer has committed past `expectedLatest` — the
-    * compare-and-swap a read-modify-write (e.g. the catalog's INSERT INTO,
-    * which folds current rows into the new snapshot) needs for lost-update
-    * safety. Returns the committed version, or None on conflict (caller
-    * re-reads the new latest and retries). The unconditional
-    * [[writeTableSnapshot]] remains correct for writers whose content does
-    * not depend on the current snapshot.
+    * compare-and-swap every read-modify-write needs for lost-update safety
+    * (the catalog's INSERT INTO and TRUNCATE, warehouse merges, compaction,
+    * the feed descriptor). Returns the committed version, or None on
+    * conflict (caller re-reads the new latest and retries, [[retryLoop]]).
+    * The unconditional [[writeTableSnapshot]] is only for content that
+    * does not depend on the current snapshot: the catalog's INSERT
+    * OVERWRITE, `Txn` members (serialized by their manifest CAS) and
+    * whole-table snapshot writers.
     */
   def writeTableSnapshotIf(
       df: DataFrame, root: String, name: String,
       expectedLatest: Int,
-      retentionVersions: Int = 7): Option[Int] = {
-    val spark = df.sparkSession
-    val tdir = tablePath(root, name)
-    val stage = new Path(
-      s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    policyWriter(spark, root, name, df).parquet(stage.toString)
-    promoteStagedIf(spark, root, name, stage, expectedLatest, retentionVersions)
-  }
+      retentionVersions: Int = 7): Option[Int] =
+    stageAndPublish(df, root, name, Some(expectedLatest), retentionVersions)
 
-  /** The conditional-commit tail of [[writeTableSnapshotIf]] for callers
-    * that staged the snapshot THEMSELVES (e.g. the catalog's row-level
-    * UPDATE/MERGE, whose executors write the staging dir through Spark's
-    * DSv2 parquet writer): claim `expectedLatest+1`, promote the staged
-    * dir only if no other writer committed past `expectedLatest`, else
-    * clean up and return None.
+  /** The conditional commit of a snapshot the caller staged THEMSELVES
+    * (in a [[newStage]] dir — e.g. the catalog's row-level UPDATE/MERGE,
+    * whose executors write it through Spark's DSv2 parquet writer, or the
+    * copy-on-write and merge-on-read commits): [[publishStaged]] with
+    * `expectedLatest`, so None means another writer committed first and
+    * the stage is gone.
     */
   def promoteStagedIf(
       spark: SparkSession, root: String, name: String, stage: Path,
       expectedLatest: Int,
-      retentionVersions: Int = 7): Option[Int] = {
-    val tdir = tablePath(root, name)
-    val f = fs(spark, tdir)
-    // stats sidecar into the stage BEFORE the CAS — atomic with the commit
-    // (see commitStaged); a lost race wastes only the footer reads
-    try StatsSidecar.stamp(f, stage)
-    catch { case scala.util.control.NonFatal(_) => () }
-    try BloomSidecar.stamp(spark, root, name, stage)
-    catch { case scala.util.control.NonFatal(_) => () }
-    try BucketLayout.stamp(spark, root, name, stage)
-    catch { case scala.util.control.NonFatal(_) => () }
-    carryEpochFrontier(spark, f, root, name, stage)
-    val n = expectedLatest + 1
-    val claim = new Path(s"$tdir/.claim_v$n")
-    val claimed = claimExclusive(f, claim)
-    val live = new Path(s"$tdir/version=v$n")
-    if (!claimed || f.exists(live) ||
-        latestVersion(spark, root, name).getOrElse(0) != expectedLatest) {
-      // conflict: someone claimed/committed our slot (or a later one);
-      // delete OUR claim marker if we created one (safe either way: claims
-      // only matter before the slot's rename)
-      if (claimed) f.delete(claim, false)
-      f.delete(stage, true)
-      None
-    } else {
-      if (!f.rename(stage, live))
-        throw new java.io.IOException(s"commit: could not promote $stage to $live")
-      stampCommit(f, live)
-      f.delete(claim, false)
-      Retention.pruneTableVersions(spark, root, name, keep = retentionVersions, dryRun = false)
-      runCommitHooks(spark, root, name, n)
-      Some(n)
-    }
-  }
+      retentionVersions: Int = 7): Option[Int] =
+    publishStaged(spark, root, name, stage, Some(expectedLatest), Some(retentionVersions))
 
   /** Name of the optional per-version FILE MANIFEST: a text file (one
     * ROOT-relative path per line) listing data files this version CARRIES
@@ -1025,7 +1040,7 @@ object Lake {
       retentionVersions: Int = 7): Int = {
     require(field.nullable,
       s"addColumn: only NULLABLE columns can be added without a rewrite (${field.name})")
-    CopyOnWrite.retryLoop(name, "addColumn") { () =>
+    retryLoop(name, "addColumn") { () =>
       val (base, current) = rawSchemaOf(spark, root, name)
       require(!reservedNames(current).contains(field.name),
         s"addColumn: '${field.name}' is taken on $name — a current column, a " +
@@ -1054,7 +1069,7 @@ object Lake {
       spark: SparkSession, root: String, name: String,
       from: String, to: String,
       retentionVersions: Int = 7): Int =
-    CopyOnWrite.retryLoop(name, "renameColumn") { () =>
+    retryLoop(name, "renameColumn") { () =>
       val (base, current) = rawSchemaOf(spark, root, name)
       val idx = current.fields.indexWhere(f => !isDropped(f) && f.name == from)
       require(idx >= 0, s"renameColumn: $name has no column '$from'")
@@ -1084,7 +1099,7 @@ object Lake {
   def dropColumn(
       spark: SparkSession, root: String, name: String, colName: String,
       retentionVersions: Int = 7): Int =
-    CopyOnWrite.retryLoop(name, "dropColumn") { () =>
+    retryLoop(name, "dropColumn") { () =>
       val (base, current) = rawSchemaOf(spark, root, name)
       val idx = current.fields.indexWhere(f => !isDropped(f) && f.name == colName)
       require(idx >= 0, s"dropColumn: $name has no column '$colName'")
@@ -1145,7 +1160,7 @@ object Lake {
       spark: SparkSession, root: String, name: String, colName: String,
       to: org.apache.spark.sql.types.DataType,
       retentionVersions: Int = 7): Int =
-    CopyOnWrite.retryLoop(name, "widenColumn") { () =>
+    retryLoop(name, "widenColumn") { () =>
       val (base, current) = rawSchemaOf(spark, root, name)
       val idx = current.fields.indexWhere(f => !isDropped(f) && f.name == colName)
       require(idx >= 0, s"widenColumn: $name has no column '$colName'")
@@ -1189,10 +1204,8 @@ object Lake {
       newRaw: org.apache.spark.sql.types.StructType, retentionVersions: Int,
       eqTransform: DataFrame => DataFrame = identity): Option[Int] = {
     val files = snapshotFiles(spark, root, name, base)
-    val tdir = tablePath(root, name)
-    val stage = new Path(
-      s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val f = fs(spark, tdir)
+    val stage = newStage(root, name)
+    val f = fs(spark, stage.toString)
     if (MergeOnRead.hasDeletes(spark, root, name, base))
       MergeOnRead.stageSidecar(spark, root, name, stage, MergeOnRead.deletesName,
         MergeOnRead.Carry(base))
@@ -1312,7 +1325,7 @@ object Lake {
       targetFileBytes: Long = 128L << 20,
       retentionVersions: Int = 7,
       clusterBy: Seq[String] = Nil): Int =
-    CopyOnWrite.retryLoop(name, "compactTable") { () =>
+    retryLoop(name, "compactTable") { () =>
       val base = latestVersion(spark, root, name).getOrElse(
         throw new IllegalStateException(s"no versions for table feed $name"))
       val files = snapshotFiles(spark, root, name, base)
@@ -1497,9 +1510,7 @@ object Lake {
       throw new IllegalStateException(
         s"cloneTable: $physDir was pruned concurrently — re-run against the current latest")
     }
-    val tdir = tablePath(root, dst)
-    val stage = new Path(
-      s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val stage = newStage(root, dst)
     f.mkdirs(stage)
     val ptr = f.create(new Path(stage, "_clone"), true)
     ptr.write(s"""{"src":"$physTable","version":$physVersion}"""
@@ -1514,7 +1525,7 @@ object Lake {
       val srcProps = tableProperties(spark, root, src)
       if (srcProps.nonEmpty) setTableProperties(spark, root, dst, srcProps)
     }
-    commitStaged(spark, tdir, stage)
+    publishStaged(spark, root, dst, stage, expectedLatest = None, retentionVersions = None).get
   }
 
   /** DROP a table feed — the branch-retirement half of the clone/pin
@@ -2333,13 +2344,11 @@ object Lake {
       df: DataFrame, root: String, name: String,
       checks: Seq[graft.governance.Quality.Check]): WapResult = {
     val spark = df.sparkSession
-    // UUID-suffixed staging (same scheme as writeTableSnapshot): two
-    // concurrent WAP writers each audit exactly the batch they wrote —
-    // a shared fixed directory would let writer A audit-and-publish
-    // writer B's half-written or unaudited data.
-    val staged = new Path(
-      s"${tablePath(root, name)}/.wap_${java.util.UUID.randomUUID().toString.take(12)}")
-    val f = fs(spark, tablePath(root, name))
+    // a fresh stage per writer: two concurrent WAP writers each audit
+    // exactly the batch they wrote — a shared fixed directory would let
+    // writer A audit-and-publish writer B's half-written or unaudited data
+    val staged = newStage(root, name)
+    val f = fs(spark, staged.toString)
     policyWriter(spark, root, name, df).parquet(staged.toString)
     val audit = graft.governance.Quality
       .evaluate(readParquet(spark, staged.toString), checks)
@@ -2349,9 +2358,10 @@ object Lake {
       f.delete(staged, true)
       WapResult(published = false, None, failed)
     } else {
-      // same OCC claim-then-rename as writeTableSnapshot: concurrent
-      // publishers get distinct versions, readers never see a torn snapshot
-      val next = commitStaged(spark, tablePath(root, name), staged)
+      // the one OCC commit tail: concurrent publishers get distinct
+      // versions, readers never see a torn snapshot
+      val next = publishStaged(spark, root, name, staged,
+        expectedLatest = None, retentionVersions = None).get
       WapResult(published = true, Some(next), Nil)
     }
   }
@@ -2478,16 +2488,23 @@ object Lake {
     val rows = obs.get("rows").asInstanceOf[Long]
     // the walk already happens on the driver — sum there, no Spark job
     val bytes = walkFeed(spark, root, name).map(_._3).sum
-    val next = readFeedDescriptor(spark, root, name) match {
-      case Some(cur) => cur.copy(
-        total_records = cur.total_records + rows,
-        total_size_bytes = bytes,
-        export_count = cur.export_count + 1,
-        last_export_at_us = atUs)
-      case None => FeedDescriptor(name, rows, bytes, 1, atUs, atUs)
+    // the descriptor accumulates, so it commits by CAS against the version
+    // it read: two racing appends must not drop each other's counts
+    val table = descriptorTable(name)
+    retryLoop(table, "appendStreamTracked") { () =>
+      val base = latestVersion(spark, root, table)
+      val next = base.map(v => readTableFeed(spark, root, table, Some(v))
+        .as[FeedDescriptor].head()) match {
+        case Some(cur) => cur.copy(
+          total_records = cur.total_records + rows,
+          total_size_bytes = bytes,
+          export_count = cur.export_count + 1,
+          last_export_at_us = atUs)
+        case None => FeedDescriptor(name, rows, bytes, 1, atUs, atUs)
+      }
+      writeTableSnapshotIf(Seq(next).toDF(), root, table, expectedLatest = base.getOrElse(0))
+        .map(_ => next)
     }
-    writeTableSnapshot(Seq(next).toDF(), root, descriptorTable(name))
-    next
   }
 
   /** Driver-side FS walk shared by [[feedMetadata]] and
@@ -2519,10 +2536,11 @@ object Lake {
     walkFeed(spark, root, name).toDF("partition", "files", "bytes")
   }
 
-  /** Vacuum a versioned table directory: delete every entry that is not a
-    * live `version=vN` snapshot — crashed-write leftovers (staging dirs
-    * like [[writeAuditPublish]]'s `.wap_staging`, `_temporary` attempt
-    * dirs, stray files). The complement of version retention: retention
+  /** Vacuum a versioned table directory: delete every entry that is not
+    * committed — anything but a live `version=vN` snapshot, the version
+    * ledger and the table properties: crashed-write leftovers ([[newStage]]
+    * dirs of writers that died, `_temporary` attempt dirs, claim markers,
+    * stray files). The complement of version retention: retention
     * prunes COMMITTED history, vacuum removes what never committed. Pure
     * driver-side FS listing (no data scan); `dryRun` previews. Live
     * version dirs are untouched by construction — the deletion predicate
@@ -2536,9 +2554,10 @@ object Lake {
     val f = fs(spark, tablePath(root, name))
     if (!f.exists(base)) Seq.empty
     else {
-      // the version ledger dir is committed metadata, not a crashed write
+      // the version ledger and the table properties are committed
+      // metadata, not a crashed write
       val live = versions(spark, root, name).map(v => s"version=v$v").toSet +
-        ledgerDirName
+        ledgerDirName + tablePropsName
       f.listStatus(base).toSeq
         .filterNot(st => live.contains(st.getPath.getName))
         .map { st =>

@@ -215,7 +215,7 @@ object MergeOnRead {
   def deleteWhere(
       spark: SparkSession, root: String, name: String, pred: Column,
       retentionVersions: Int = 7): Int =
-    CopyOnWrite.retryLoop(name, "mor.deleteWhere") { () =>
+    Lake.retryLoop(name, "mor.deleteWhere") { () =>
       val base = Lake.latestVersion(spark, root, name).getOrElse(
         throw new IllegalStateException(s"no versions for table feed $name"))
       val files = Lake.snapshotFiles(spark, root, name, base)
@@ -268,7 +268,7 @@ object MergeOnRead {
   def deleteByKeys(
       spark: SparkSession, root: String, name: String, keys: DataFrame,
       retentionVersions: Int = 7): Int =
-    CopyOnWrite.retryLoop(name, "mor.deleteByKeys") { () =>
+    Lake.retryLoop(name, "mor.deleteByKeys") { () =>
       val base = Lake.latestVersion(spark, root, name).getOrElse(
         throw new IllegalStateException(s"no versions for table feed $name"))
       val files = Lake.snapshotFiles(spark, root, name, base)
@@ -304,12 +304,10 @@ object MergeOnRead {
       retentionVersions: Int,
       declared: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[Int] = {
-    val tdir = Lake.tablePath(root, name)
-    val stage = new Path(
-      s"$tdir/.stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val stage = Lake.newStage(root, name)
     pos.foreach(stageSidecar(spark, root, name, stage, deletesName, _))
     eq.foreach(stageSidecar(spark, root, name, stage, eqDeletesName, _))
-    val f = fs(spark, tdir)
+    val f = fs(spark, stage.toString)
     // an evolved base's declared schema carries forward (one-hop)
     declared.foreach { s =>
       val so = f.create(new Path(stage, Lake.schemaName), true)

@@ -6,6 +6,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftCatalog
 import graft.Tables
 import graft.governance.{DifferentialPrivacy, FeedCatalog, Permissions}
 import graft.lake.{FilePruner, Lake, Retention}
@@ -777,8 +778,6 @@ object Lifecycle {
       |  (CAST(3 AS BIGINT), 'carol@corp', 'ds_b', 'mem'))
       |  t(seq, principal, dataset, src)""".stripMargin
 
-  private val catalogN = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** A19 catalog SQL + time travel: the versioned lake exposed through a
     * DataSource V2 `TableCatalog`
     * ([[org.apache.spark.sql.graft.GraftCatalog]]) — tables addressed BY
@@ -801,10 +800,7 @@ object Lifecycle {
     Lake.writeTableSnapshot(snap(5000), root, "order_summary")
     Lake.writeTableSnapshot(snap(10000), root, "order_summary")
     Lake.writeTableSnapshot(snap(15000), root, "order_summary")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     def q(asof: String, suffix: String): DataFrame = s.sql(
       s"SELECT '$asof' AS asof, o_orderpriority, n, total " +
         s"FROM $cat.tables.order_summary$suffix")
@@ -840,10 +836,7 @@ object Lifecycle {
     val root = scratch("graft_cati_")
     val nat = Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
     Lake.writeTableSnapshot(nat.filter(col("n_nationkey") < 10), root, "nations_sql")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     nat.createOrReplaceTempView("nation_src")
     s.sql(s"INSERT INTO $cat.tables.nations_sql " +
       "SELECT n_nationkey, n_name FROM nation_src WHERE n_nationkey BETWEEN 10 AND 14")
@@ -883,10 +876,7 @@ object Lifecycle {
     val nat = Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
     Lake.writeTableSnapshot(nat, root, "nations_del")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"DELETE FROM $cat.tables.nations_del " +
       "WHERE n_regionkey = 2 OR n_nationkey >= 20")
     s.sql(s"DELETE FROM $cat.tables.nations_del WHERE n_name LIKE 'A%'")
@@ -929,10 +919,7 @@ object Lifecycle {
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey"))
     Lake.writeTableSnapshot(cust.filter(col("c_custkey").between(1, 1000)), root, "cust_rl")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     // money arithmetic normalizes through decimal(18,2) (the Q.moneySum
     // convention): raw double +100 would carry IEEE dust that the decimal
     // money profile (exact addition) does not, splitting the two profiles
@@ -1016,10 +1003,7 @@ object Lifecycle {
       matchedDeleteCond = Some(col("s.c_acctbal") < 0),
       matchedSet = Seq("c_acctbal" -> col("s.c_acctbal")),
       insertNotMatched = true)
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     def q(gen: String, suffix: String): DataFrame = s.sql(
       s"SELECT '$gen' AS gen, c_custkey, c_name, c_acctbal, c_nationkey " +
         s"FROM $cat.tables.cust_cow$suffix")
@@ -1057,10 +1041,7 @@ object Lifecycle {
     Lake.writeTableSnapshot(
       cust.filter(col("c_custkey").between(1, 1000))
         .repartitionByRange(8, col("c_custkey")), root, "cust_mor")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"DELETE FROM $cat.tables.cust_mor WHERE c_nationkey = 5")
     s.sql(s"DELETE FROM $cat.tables.cust_mor WHERE c_acctbal < 0")
     // shape pins: v3 is sidecar + manifest only — zero data files written
@@ -1130,10 +1111,7 @@ object Lifecycle {
       cust.filter(col("c_custkey").between(1, 1000))
         .repartitionByRange(8, col("c_custkey")), root, "cust_a29b")
     val v1Files = Lake.snapshotFiles(s, root, "cust_a29b", 1).toSet
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"DELETE FROM $cat.tables.cust_a29b WHERE c_acctbal < 0")
     require(graft.lake.MergeOnRead.hasDeletes(s, root, "cust_a29b", 2),
       "the range DELETE must commit a positional MOR sidecar")
@@ -1223,10 +1201,7 @@ object Lifecycle {
     Lake.writeTableSnapshot(
       cust.filter(col("c_custkey").between(1, 1000))
         .repartitionByRange(8, col("c_custkey")), root, "cust_eq")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"DELETE FROM $cat.tables.cust_eq WHERE c_nationkey IN (3, 7)")
     require(graft.lake.MergeOnRead.hasEqDeletes(s, root, "cust_eq", 2) &&
       !graft.lake.MergeOnRead.hasDeletes(s, root, "cust_eq", 2),
@@ -1291,10 +1266,7 @@ object Lifecycle {
     Lake.writeTableSnapshot(
       cust.filter(col("c_custkey").between(1, 1200))
         .repartitionByRange(8, col("c_custkey")), root, "cust_eqm")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     // two-column = AND = : one key tuple, equality sidecar, zero scans
     s.sql(s"DELETE FROM $cat.tables.cust_eqm " +
       "WHERE c_nationkey = 5 AND c_mktsegment = 'BUILDING'")
@@ -1359,10 +1331,7 @@ object Lifecycle {
       ord.select(col("o_orderkey"), col("o_orderstatus"))
         .filter(col("o_orderkey").between(1, 500))
         .repartitionByRange(4, col("o_orderkey")), root, "ord_evo")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"ALTER TABLE $cat.tables.ord_evo ADD COLUMN o_orderpriority STRING")
     require(Lake.declaredSchema(s, root, "ord_evo", 2).exists(
       _.fieldNames.sameElements(Array("o_orderkey", "o_orderstatus", "o_orderpriority"))),
@@ -1428,10 +1397,7 @@ object Lifecycle {
       .filter(col("o_orderkey").between(1, 600))
     Lake.writeTableSnapshot(
       ord.repartitionByRange(4, col("o_orderkey")), root, "ord_rd")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"ALTER TABLE $cat.tables.ord_rd RENAME COLUMN o_orderstatus TO status")
     s.sql(s"ALTER TABLE $cat.tables.ord_rd DROP COLUMN o_orderpriority")
     // both commits are metadata-only: zero data files of their own, every
@@ -1509,10 +1475,7 @@ object Lifecycle {
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     def keysTo(hi: Int) = slice.filter(col("o_orderkey").between(1, hi))
     Lake.writeTableSnapshot(keysTo(300), root, "ord_tag")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     require(s.sql(s"CALL $cat.system.tag('ord_tag', 'cut_a', 0)")
       .head().getInt(0) == 1, "tag(version<=0) must tag the current latest")
     Lake.writeTableSnapshot(keysTo(200), root, "ord_tag")
@@ -1571,10 +1534,7 @@ object Lifecycle {
       Lake.readTableFeed(s, root, "branch_orders").unionByName(snap(20001, 25000)),
       root, "branch_orders")
     Lake.writeTableSnapshot(snap(1, 15000), root, "src_orders")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     def q(label: String, table: String, suffix: String): DataFrame = s.sql(
       s"SELECT '$label' AS branch, o_orderkey, o_totalprice, o_orderpriority " +
         s"FROM $cat.tables.$table$suffix")
@@ -1694,10 +1654,7 @@ object Lifecycle {
     def keysIn(lo: Int, hi: Int): DataFrame =
       slice.filter(col("o_orderkey").between(lo, hi))
     Lake.writeTableSnapshot(keysIn(1, 1000), root, "co_src")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     def call1(sql: String): Int = s.sql(sql).head().getInt(0)
     require(call1(s"CALL $cat.system.clone('co_src', 'co_br')") == 1,
       "clone must commit branch v1")
@@ -2606,10 +2563,7 @@ object Lifecycle {
     Lake.writeTableSnapshot(
       ord.repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey"), root, "ord_sp")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
 
     def slice(gen: String, where: String, suffix: String = " VERSION AS OF 1"): DataFrame =
       s.sql(s"SELECT '$gen' AS gen, o_orderkey, o_orderstatus, o_totalprice " +
@@ -2647,14 +2601,13 @@ object Lifecycle {
       "collect_stats must find every snapshot dir already stamped")
     // METADATA AGGREGATE: min/max/count answered from the sidecar alone —
     // the plan is a LocalTableScan, zero jobs over table data
-    org.apache.spark.sql.graft.GraftCatalog.lastMetaAggregate.set(0)
     val aggSlice = s.sql(
       s"SELECT 'agg' AS gen, min(o_orderkey) AS o_orderkey, " +
         "max(o_orderstatus) AS o_orderstatus, " +
         "CAST(count(*) AS DOUBLE) AS o_totalprice " +
         s"FROM $cat.tables.ord_sp VERSION AS OF 1")
-    aggSlice.queryExecution.executedPlan
-    require(org.apache.spark.sql.graft.GraftCatalog.lastMetaAggregate.get() == 3,
+    require(GraftCatalog.metaAggregates
+        .recorded(aggSlice.queryExecution.executedPlan).lastOption.contains(3),
       "min/max/count over the clean snapshot must answer from the sidecar")
     range.unionByName(point).unionByName(none).unionByName(str)
       .unionByName(mor).unionByName(aggSlice)
@@ -2703,10 +2656,7 @@ object Lifecycle {
         col("o_orderstatus").as("status"))
     Lake.writeTableSnapshot(
       ord.repartitionByRange(4, col("k")), root, "ord_w")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"ALTER TABLE $cat.tables.ord_w ALTER COLUMN k TYPE BIGINT")
     s.sql(s"ALTER TABLE $cat.tables.ord_w ALTER COLUMN price TYPE DOUBLE")
     Seq(2, 3).foreach { v =>
@@ -2765,10 +2715,7 @@ object Lifecycle {
     */
   def bloomIndex(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a36_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"CREATE TABLE $cat.tables.li_bloom " +
       "(l_orderkey BIGINT, l_partkey BIGINT, l_quantity DOUBLE) " +
       "TBLPROPERTIES ('cluster_by'='l_orderkey', 'bloom_filter_columns'='l_partkey')")
@@ -2868,10 +2815,7 @@ object Lifecycle {
     */
   def changeFeed(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a37_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     val k = col("o_orderkey")
     Lake.writeTableSnapshot(o.filter(k <= 1000), root, "cdf")
@@ -2944,10 +2888,7 @@ object Lifecycle {
     */
   def cdfMirror(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a38_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val k = col("o_orderkey")
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     Lake.writeTableSnapshot(
@@ -3012,10 +2953,7 @@ object Lifecycle {
     */
   def zorderCluster(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a39_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"CREATE TABLE $cat.tables.zt (k BIGINT, u BIGINT) " +
       "TBLPROPERTIES ('cluster_by'='zorder(k,u)')")
     val src = Tables.orders(s, d).select(
@@ -3073,10 +3011,7 @@ object Lifecycle {
     */
   def bucketedDiff(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a40_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     s.sql(s"CREATE TABLE $cat.tables.bt (k BIGINT, v DOUBLE) " +
       "TBLPROPERTIES ('bucket_by'='k:8')")
     val o = Tables.orders(s, d).select(
@@ -3126,10 +3061,7 @@ object Lifecycle {
     */
   def tableChangesSql(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a41_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val k = col("o_orderkey")
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     Lake.writeTableSnapshot(o.filter(k <= 1000), root, "cdfq")
@@ -3176,10 +3108,7 @@ object Lifecycle {
     bucketed("spj_ord", "o_custkey",
       Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice"))
         .filter(col("o_custkey") <= 3000))
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val saved = Seq(
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
@@ -3258,10 +3187,7 @@ object Lifecycle {
     bucketed("spjm_ord", "o_custkey", 16,
       Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice"))
         .filter(col("o_custkey") <= 3000))
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val saved = Seq(
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
@@ -3303,10 +3229,7 @@ object Lifecycle {
   def bucketEvolve(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a47_")
     import graft.lake.BucketLayout
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     Lake.setTableProperties(s, root, "bev", Map(BucketLayout.Prop -> "o_custkey:8"))
     Lake.writeTableSnapshot(
       Lake.applyClusterPolicy(s, root, "bev",
@@ -3388,10 +3311,7 @@ object Lifecycle {
     */
   def tableDiffSql(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a44_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val k = col("o_orderkey")
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     Lake.writeTableSnapshot(o.filter(k <= 1000), root, "diffq")
@@ -3442,10 +3362,7 @@ object Lifecycle {
     */
   def mergeEvolve(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a46_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val ord = Tables.orders(s, d)
     Lake.writeTableSnapshot(
       ord.select(col("o_orderkey"), col("o_totalprice"))
@@ -3519,10 +3436,7 @@ object Lifecycle {
     */
   def tableDiffTs(s: SparkSession, d: String): DataFrame = {
     val root = scratch("graft_a44b_")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     val k = col("o_orderkey")
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     Lake.writeTableSnapshot(o.filter(k <= 1000), root, "diffts")
@@ -3624,10 +3538,7 @@ object Lifecycle {
     Lake.writeTableSnapshot(
       Lake.applyClusterPolicy(s, root, "cw", o.filter(col("o_orderkey") <= 6000)),
       root, "cw")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     // fragment ONE key range with three streaming epochs — each commits
     // its own small files and carries the base by manifest reference
     // (exactly the 100 TB fragmentation source this operator exists for)
@@ -3786,10 +3697,7 @@ object Lifecycle {
     val o = Tables.orders(s, d).select(col("o_orderkey"),
       col("o_orderpriority"), col("o_totalprice"), col("o_orderdate"))
     Lake.writeTableSnapshot(o.filter(col("o_orderkey") <= 2000), root, "mvbase")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     try {
       SummaryRewrite.createForTable(s, "mv_cdf_prio", root, "mvbase", s"$root/mv",
         keys = Seq("o_orderpriority"), rowKeys = Seq("o_orderkey"),
@@ -3867,10 +3775,7 @@ object Lifecycle {
     Lake.setTableProperties(s, root, "arbase",
       Map(SummaryRewrite.MvRefreshProp -> "on_commit"))
     Lake.writeTableSnapshot(o.filter(col("o_orderkey") <= 1500), root, "arbase")
-    val cat = s"gcat${catalogN.incrementAndGet()}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = GraftCatalog.register(s, root)
     try {
       SummaryRewrite.createForTable(s, "mv_auto_prio", root, "arbase", s"$root/mv",
         keys = Seq("o_orderpriority"), rowKeys = Seq("o_orderkey"),

@@ -644,10 +644,7 @@ object Streams {
       root, "ev_cat", "sinkA", 0)
     require(graft.lake.Lake.versions(s, root, "ev_cat").max == latestBefore,
       "a replayed epoch must be a no-op")
-    val cat = s"gscat${java.util.UUID.randomUUID().toString.take(8)}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = org.apache.spark.sql.graft.GraftCatalog.register(s, root)
     // the maintenance loop: incremental bin-pack of the per-epoch files
     val packed = s.sql(s"CALL $cat.system.compact_files('ev_cat', 64)")
       .head().getInt(0)

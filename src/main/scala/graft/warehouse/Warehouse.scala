@@ -42,20 +42,22 @@ object Warehouse {
   }
 
   /** MERGE into a versioned warehouse table: reads the latest snapshot (if
-    * any), merges, writes version N+1. Returns the new version.
+    * any), merges, and commits version N+1 by compare-and-swap against the
+    * version it read — a racing merge that committed first makes this one
+    * re-read and re-merge, so neither batch's rows are lost. Returns the
+    * new version.
     */
   def mergeIntoTable(
       spark: SparkSession, root: String, table: String,
       updates: DataFrame, keys: Seq[String], orderCols: Seq[String],
-      retentionVersions: Int = 7): Int = {
-    val merged = Lake.latestVersion(spark, root, table) match {
-      case Some(_) => merge(Lake.readTableFeed(spark, root, table), updates, keys, orderCols)
-      case None =>
-        // first load: still dedup the batch itself on the merge key
-        merge(updates.limit(0), updates, keys, orderCols)
+      retentionVersions: Int = 7): Int =
+    Lake.retryLoop(table, "mergeIntoTable") { () =>
+      val base = Lake.latestVersion(spark, root, table)
+      // first load: still dedup the batch itself on the merge key
+      val current = base.fold(updates.limit(0))(v => Lake.readTableFeed(spark, root, table, Some(v)))
+      Lake.writeTableSnapshotIf(merge(current, updates, keys, orderCols), root, table,
+        expectedLatest = base.getOrElse(0), retentionVersions)
     }
-    Lake.writeTableSnapshot(merged, root, table, retentionVersions)
-  }
 
   /** Generic JDBC upsert writer — the literal A10/A11 sink shape (the
     * reference upserts into MySQL, sync_to_mysql.py:133-232): the same

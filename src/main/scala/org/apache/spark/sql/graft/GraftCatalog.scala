@@ -27,12 +27,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * surface on Spark's own catalog API:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-  *   spark.conf.set("spark.sql.catalog.graft.root", "/lake")
-  *   spark.sql("SELECT * FROM graft.tables.user_summary")                 // latest
-  *   spark.sql("SELECT * FROM graft.tables.user_summary VERSION AS OF 1") // pinned
-  *   spark.sql("... TIMESTAMP AS OF '2026-01-01 00:00:00'")               // as-of
+  *   val graft = GraftCatalog.register(spark, "/lake")
+  *   spark.sql(s"SELECT * FROM $graft.tables.user_summary")                 // latest
+  *   spark.sql(s"SELECT * FROM $graft.tables.user_summary VERSION AS OF 1") // pinned
+  *   spark.sql("... TIMESTAMP AS OF '2026-01-01 00:00:00'")                 // as-of
   * }}}
+  *
+  * (`register` sets `spark.sql.catalog.<name>` to this class and
+  * `spark.sql.catalog.<name>.root` to the lake root.)
   *
   * Time travel rides the catalog API itself (`loadTable(ident, version)` /
   * `(ident, timestampMicros)`): `VERSION AS OF n` resolves `version=vn`,
@@ -95,11 +97,25 @@ object GraftCatalog {
   val lastStatsPrune =
     new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
 
-  /** Number of aggregate expressions answered by the most recent
-    * METADATA AGGREGATE (zero-scan MIN/MAX/COUNT from the stats sidecar)
-    * — spec/gate observability.
+  /** Per METADATA AGGREGATE (zero-scan MIN/MAX/COUNT from the stats
+    * sidecar), the number of aggregate expressions it answered, recorded
+    * on the planning thread: `metaAggregates.recorded { plan }` sees only
+    * the calling thread's planning.
     */
-  val lastMetaAggregate = new java.util.concurrent.atomic.AtomicInteger(0)
+  val metaAggregates = new graft.lake.ThreadRecorder[Int]
+
+  private val registered = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Register a catalog over the lake at `root` in `spark`'s session
+    * under a fresh name, and return the name. Spark caches catalog
+    * instances per session by name, so each registration gets its own.
+    */
+  def register(spark: SparkSession, root: String): String = {
+    val name = s"gcat${registered.incrementAndGet()}"
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+    name
+  }
 
   /** Executor-side shim for the group-based row-level write: if a row
     * arrives one field WIDER than the data schema, its leading field is
@@ -577,7 +593,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             StructField(s"max(${fd.name})", fd.dataType))
         case _ => return None
       }
-      GraftCatalog.lastMetaAggregate.set(computed.size)
+      GraftCatalog.metaAggregates.add(computed.size)
       Some((StructType(computed.map(_._2)),
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           computed.map(_._1).toArray)))
@@ -807,21 +823,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                   // concurrent INSERT INTOs would each union only their
                   // own rows and the later commit would drop the earlier
                   // writer's append
-                  var attempts = 0
-                  var done = false
-                  while (!done) {
-                    attempts += 1
-                    if (attempts > 20) throw new java.io.IOException(
-                      s"INSERT INTO ${ident.name()}: still conflicting after $attempts attempts")
+                  graft.lake.Lake.retryLoop(ident.name(), "INSERT INTO") { () =>
                     val base = graft.lake.Lake
                       .latestVersion(spark, root, ident.name()).getOrElse(0)
                     val current =
                       if (base == 0) aligned.limit(0)
                       else graft.lake.Lake.readTableFeed(spark, root, ident.name(), Some(base))
-                    done = graft.lake.Lake.writeTableSnapshotIf(
+                    graft.lake.Lake.writeTableSnapshotIf(
                       clustered(current.unionByName(aligned)), root, ident.name(),
-                      expectedLatest = base).isDefined
+                      expectedLatest = base)
                   }
+                  ()
                 }
               }
             }
@@ -881,8 +893,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                   override def readSchema(): StructType = schema()
                   private lazy val inner = {
                     val spark = SparkSession.active
-                    val tmp = new Path(s"${tableDir(ident)}/.stage_morscan_" +
-                      java.util.UUID.randomUUID().toString.replace("-", ""))
+                    val tmp = graft.lake.Lake.newStage(root, ident.name(), "morscan_")
                     graft.lake.Lake
                       .readTableFeed(spark, root, ident.name(), Some(version))
                       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -904,8 +915,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder =
             new WriteBuilder {
               override def build(): Write = new Write {
-                private val stage = new Path(s"${tableDir(ident)}/.stage_" +
-                  java.util.UUID.randomUUID().toString.replace("-", ""))
+                private val stage = graft.lake.Lake.newStage(root, ident.name())
                 private val stagingWrite = ParquetTable(
                   s"${delegate.name}-rowlevel-staging",
                   SparkSession.active,
@@ -984,17 +994,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (filters.isEmpty) {
         // TRUNCATE (and unconditional DELETE): an empty snapshot is O(1) —
         // never a sidecar covering every row or a survivor rewrite
-        var attempts = 0
-        var done = false
-        while (!done) {
-          attempts += 1
-          if (attempts > 20) throw new java.io.IOException(
-            s"TRUNCATE ${ident.name()}: still conflicting after $attempts attempts")
+        graft.lake.Lake.retryLoop(ident.name(), "TRUNCATE") { () =>
           val base = graft.lake.Lake.latestVersion(spark, root, ident.name()).get
-          done = graft.lake.Lake.writeTableSnapshotIf(
+          graft.lake.Lake.writeTableSnapshotIf(
             graft.lake.Lake.readTableFeed(spark, root, ident.name(), Some(base)).limit(0),
-            root, ident.name(), expectedLatest = base).isDefined
+            root, ident.name(), expectedLatest = base)
         }
+        ()
       } else {
         // a pure key-equality predicate (the GDPR shape: `WHERE user_id =
         // v` / `WHERE user_id IN (...)`, and conjunctions of those on

@@ -16,11 +16,7 @@ class CatalogSpec extends SparkSpec {
 
   private lazy val (cat, root): (String, String) = {
     val root = Files.createTempDirectory("graft_cat_spec_").toString
-    val c = "gcatspec"
-    spark.conf.set(s"spark.sql.catalog.$c",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$c.root", root)
-    (c, root)
+    (org.apache.spark.sql.graft.GraftCatalog.register(spark, root), root)
   }
 
   private def snap(n: Int) =

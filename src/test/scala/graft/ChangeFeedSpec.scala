@@ -17,11 +17,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   private lazy val (cat, root): (String, String) = {
     val root = Files.createTempDirectory("graft_cf_spec_").toString
-    val c = "gcf"
-    spark.conf.set(s"spark.sql.catalog.$c",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$c.root", root)
-    (c, root)
+    (org.apache.spark.sql.graft.GraftCatalog.register(spark, root), root)
   }
 
   import spark.implicits._

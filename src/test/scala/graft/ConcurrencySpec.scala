@@ -761,6 +761,24 @@ class ConcurrencySpec extends SparkSpec {
     } finally MergeOnRead.testStallBeforeCommit = () => ()
   }
 
+  test("racing warehouse merges commit by CAS against the version they read: no key lost") {
+    import graft.warehouse.Warehouse
+    val root = scratch()
+    Warehouse.mergeIntoTable(spark, root, "dim", Seq((0, 0L)).toDF("k", "ts"),
+      Seq("k"), Seq("ts"))
+    // two writers, 8 single-key merges each, on disjoint keys: every merge
+    // reads the latest dimension and must commit on top of exactly it
+    val results = race(2) { w =>
+      (1 to 8).map(i => Warehouse.mergeIntoTable(spark, root, "dim",
+        Seq((100 * w + i, 1L)).toDF("k", "ts"), Seq("k"), Seq("ts"),
+        retentionVersions = Int.MaxValue))
+    }
+    assert(results.forall(_.isSuccess), results.filter(_.isFailure).toString)
+    val keys = Lake.readTableFeed(spark, root, "dim").select("k").as[Int].collect().toSet
+    assert(keys === Set(0) ++ (1 to 8) ++ (101 to 108), "a racing merge dropped keys")
+    assert(Lake.versions(spark, root, "dim") === (1 to 17))
+  }
+
   test("heartbeat racing a sweep never resurrects the swept dir (TOCTOU, round 11)") {
     // The fallback path for filesystems where directory setTimes is a
     // silent no-op: commit() heartbeats a marker INSIDE each staged dir.
@@ -862,22 +880,16 @@ class ConcurrencySpec extends SparkSpec {
       val want = base.collect().map(r => (r.getLong(0), r.getDouble(1),
         r.getDouble(2), r.getDouble(3), r.getLong(4))).sortBy(_._1).toSeq
       // serve check: rewrite fires on a catalog scan at the latest version
-      spark.conf.set("spark.sql.catalog.mvconc",
-        classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-      spark.conf.set("spark.sql.catalog.mvconc.root", root)
+      val mvconc = org.apache.spark.sql.graft.GraftCatalog.register(spark, root)
       val served = spark.sql(
-        """SELECT g, sum(v) AS sv, min(v) AS mn, max(v) AS mx, count(*) AS n
-          |FROM mvconc.tables.mvt GROUP BY g""".stripMargin)
+        s"""SELECT g, sum(v) AS sv, min(v) AS mn, max(v) AS mx, count(*) AS n
+          |FROM $mvconc.tables.mvt GROUP BY g""".stripMargin)
       assert(SummaryRewrite.scannedPaths(served.queryExecution.optimizedPlan)
         .exists(_.contains("/mv")),
         "after racing on_commit refreshes the summary must be fresh and serve")
       val got = served.collect().map(r => (r.getLong(0), r.getDouble(1),
         r.getDouble(2), r.getDouble(3), r.getLong(4))).sortBy(_._1).toSeq
       assert(got === want, s"summary diverged from base after racing refreshes")
-    } finally {
-      SummaryRewrite.drop("mv_conc")
-      spark.conf.unset("spark.sql.catalog.mvconc")
-      spark.conf.unset("spark.sql.catalog.mvconc.root")
-    }
+    } finally SummaryRewrite.drop("mv_conc")
   }
 }

@@ -106,23 +106,21 @@ class ExtensionsSpec extends AnyFunSuite {
       // a sidecar version: catalog reads now route through the V1Scan
       // fallback, whose inner plan must STILL pass the guard
       graft.lake.MergeOnRead.deleteWhere(spark, root, "mor_sec", col("k") <= 5)
-      spark.conf.set("spark.sql.catalog.mg",
-        classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-      spark.conf.set("spark.sql.catalog.mg.root", root)
+      val mg = org.apache.spark.sql.graft.GraftCatalog.register(spark, root)
       val at = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
       val noGrant = Permissions.grant(Permissions.empty(spark),
         "eve@corp", s"$root/elsewhere", "read", "root@corp", at)
       ReadGuard.install(noGrant, "eve@corp", java.sql.Date.valueOf("2024-06-01"))
       try {
         intercept[SecurityException] {
-          spark.sql("SELECT * FROM mg.tables.mor_sec").count()
+          spark.sql(s"SELECT * FROM $mg.tables.mor_sec").count()
         }
       } finally ReadGuard.clear()
       val withGrant = Permissions.grant(noGrant,
         "eve@corp", s"$root/tables/mor_sec", "read", "root@corp", at)
       ReadGuard.install(withGrant, "eve@corp", java.sql.Date.valueOf("2024-06-01"))
       try {
-        assert(spark.sql("SELECT * FROM mg.tables.mor_sec").count() === 15)
+        assert(spark.sql(s"SELECT * FROM $mg.tables.mor_sec").count() === 15)
       } finally ReadGuard.clear()
     }
   }
@@ -135,9 +133,7 @@ class ExtensionsSpec extends AnyFunSuite {
       graft.lake.Lake.writeTableSnapshot(
         Seq((1, "s")).toDF("k", "x"), root, "secret")
       graft.lake.Lake.cloneTable(spark, root, "secret", "branch")
-      spark.conf.set("spark.sql.catalog.cg",
-        classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-      spark.conf.set("spark.sql.catalog.cg.root", root)
+      val cg = org.apache.spark.sql.graft.GraftCatalog.register(spark, root)
       val at = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
       // grant covers only the CLONE's directory — not the source it points at
       val branchOnly = Permissions.grant(Permissions.empty(spark),
@@ -147,7 +143,7 @@ class ExtensionsSpec extends AnyFunSuite {
         // the branch read scans the SOURCE's physical snapshot; governedPath
         // resolves the pointer, so the branch-scoped grant must NOT suffice
         intercept[SecurityException] {
-          spark.sql("SELECT * FROM cg.tables.branch").count()
+          spark.sql(s"SELECT * FROM $cg.tables.branch").count()
         }
       } finally ReadGuard.clear()
       // with the physical table covered, the same read is fine
@@ -155,7 +151,7 @@ class ExtensionsSpec extends AnyFunSuite {
         "eve@corp", s"$root/tables/secret", "read", "root@corp", at)
       ReadGuard.install(withSource, "eve@corp", java.sql.Date.valueOf("2024-06-01"))
       try {
-        assert(spark.sql("SELECT * FROM cg.tables.branch").count() === 1)
+        assert(spark.sql(s"SELECT * FROM $cg.tables.branch").count() === 1)
       } finally ReadGuard.clear()
     }
   }
@@ -493,15 +489,13 @@ class ExtensionsSpec extends AnyFunSuite {
         val lakeRoot = java.nio.file.Files.createTempDirectory("graft_rls_cat_").toString
         graft.lake.Lake.writeTableSnapshot(
           Seq(("u1", 1L)).toDF("user", "k"), lakeRoot, "gov_t")
-        spark.conf.set("spark.sql.catalog.rlscat",
-          classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-        spark.conf.set("spark.sql.catalog.rlscat.root", lakeRoot)
+        val rlscat = org.apache.spark.sql.graft.GraftCatalog.register(spark, lakeRoot)
         RowFilter.install(Seq(Policy(s"$lakeRoot/tables/gov_t", "k > 0")))
         intercept[SecurityException] {
-          spark.sql("SELECT * FROM rlscat.tables.gov_t").collect()
+          spark.sql(s"SELECT * FROM $rlscat.tables.gov_t").collect()
         }
         RowFilter.clear()
-        assert(spark.sql("SELECT * FROM rlscat.tables.gov_t").count() === 1)
+        assert(spark.sql(s"SELECT * FROM $rlscat.tables.gov_t").count() === 1)
         RowFilter.install(Seq(Policy(s"$root/t", "country = 'fr'")))
       } finally RowFilter.clear()
       // cleared: every row visible again

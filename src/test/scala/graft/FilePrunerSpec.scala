@@ -4,27 +4,21 @@ import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftCatalog
 
 import graft.lake.{BloomSidecar, BucketLayout, FilePruner, Lake, MergeOnRead}
 import graft.warehouse.SummaryRewrite
 
 /** [[FilePruner]] is the one file-pruning decision behind every catalog
   * scan and mutation probe: for one predicate they all admit the same
-  * files, and the counts a caller reads are the admissions made on its own
-  * thread, never another session's.
+  * files, and the counts a caller reads (admissions, and the aggregates a
+  * metadata aggregate answered) are the ones made on its own thread, never
+  * another session's.
   */
 class FilePrunerSpec extends SparkSpec {
 
   private lazy val root = Files.createTempDirectory("graft_pruner_spec_").toString
-
-  private def withCatalog(s: SparkSession, name: String): SparkSession = {
-    s.conf.set(s"spark.sql.catalog.$name",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$name.root", root)
-    s
-  }
 
   private def counts(a: FilePruner.Admission): (Int, Int) = (a.admitted.size, a.total)
 
@@ -37,29 +31,48 @@ class FilePrunerSpec extends SparkSpec {
     Lake.writeTableSnapshot(clustered(4000, 8), root, "iso_a")
     Lake.writeTableSnapshot(clustered(3000, 6), root, "iso_b")
     val reads = Seq("iso_a" -> "k BETWEEN 1000 AND 1099", "iso_b" -> "k >= 2900")
+    // each table also gets a metadata aggregate with its own arity
+    val aggs = Seq("min(k), max(k)", "count(*), min(k), max(k)")
+    val cat = GraftCatalog.register(spark, root)
     val expected = reads.map { case (t, where) =>
-      FilePruner.lastCounts(withCatalog(spark, "giso")
-        .sql(s"SELECT * FROM giso.tables.$t WHERE $where").queryExecution.executedPlan)
+      FilePruner.lastCounts(
+        spark.sql(s"SELECT * FROM $cat.tables.$t WHERE $where").queryExecution.executedPlan)
     }
     assert(expected(0)._2 === 8 && expected(1)._2 === 6 &&
       expected.forall { case (a, t) => a < t }, s"both reads must prune: $expected")
+    reads.zip(aggs).foreach { case ((t, _), agg) =>
+      assert(GraftCatalog.metaAggregates.recorded(spark.sql(s"SELECT $agg FROM $cat.tables.$t")
+        .queryExecution.executedPlan) === Seq(agg.split(", ").length),
+        s"$t: $agg must answer from the sidecar")
+    }
 
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)
     try {
-      val futures = reads.map { case (t, where) =>
-        pool.submit(new Callable[Seq[FilePruner.Admission]] {
-          override def call(): Seq[FilePruner.Admission] = {
-            val s = withCatalog(spark.newSession(), "giso")
+      val futures = reads.zip(aggs).map { case ((t, where), agg) =>
+        pool.submit(new Callable[(Seq[FilePruner.Admission], Seq[Int])] {
+          override def call(): (Seq[FilePruner.Admission], Seq[Int]) = {
+            val s = spark.newSession()
+            val c = GraftCatalog.register(s, root)
             start.await()
-            FilePruner.recorded((1 to 50).foreach(_ =>
-              s.sql(s"SELECT * FROM giso.tables.$t WHERE $where").queryExecution.executedPlan))
+            var admissions = Seq.empty[FilePruner.Admission]
+            val answered = GraftCatalog.metaAggregates.recorded {
+              admissions = FilePruner.recorded((1 to 50).foreach { _ =>
+                s.sql(s"SELECT * FROM $c.tables.$t WHERE $where").queryExecution.executedPlan
+                s.sql(s"SELECT $agg FROM $c.tables.$t").queryExecution.executedPlan
+              })
+            }
+            (admissions, answered)
           }
         })
       }
       start.countDown()
       val got = futures.map(_.get(5, TimeUnit.MINUTES))
-      reads.zip(got).zip(expected).foreach { case (((t, _), admissions), want) =>
+      reads.zip(aggs).zip(got).foreach { case (((t, _), agg), (_, answered)) =>
+        assert(answered === Seq.fill(50)(agg.split(", ").length),
+          s"$t: every metadata aggregate must be its own query's: ${answered.distinct}")
+      }
+      reads.zip(got.map(_._1)).zip(expected).foreach { case (((t, _), admissions), want) =>
         assert(admissions.size === 50, s"$t: one admission per planned read")
         assert(admissions.forall(a => counts(a) == want),
           s"$t: every admission must be its own table's $want: ${admissions.map(counts).distinct}")
@@ -70,7 +83,7 @@ class FilePrunerSpec extends SparkSpec {
   }
 
   test("scan, fallback, UPDATE probe and merge-on-read probe admit the same files") {
-    withCatalog(spark, "gprune")
+    val cat = GraftCatalog.register(spark, root)
     Lake.setTableProperties(spark, root, "one", Map(
       BucketLayout.Prop -> "u:4",
       Lake.ClusterByProp -> "zorder(k,j)",
@@ -85,7 +98,7 @@ class FilePrunerSpec extends SparkSpec {
       .select("u").head().getLong(0)
     def planned(sql: String): FilePruner.Admission =
       FilePruner.recorded(spark.sql(sql).queryExecution.executedPlan).last
-    val read = s"SELECT * FROM gprune.tables.one WHERE u = $x"
+    val read = s"SELECT * FROM $cat.tables.one WHERE u = $x"
 
     val scan = planned(read)
     // the merge-on-read DELETE commits a position sidecar and carries every
@@ -96,7 +109,7 @@ class FilePrunerSpec extends SparkSpec {
       "test setup: the DELETE must commit a merge-on-read sidecar")
     val fallback = planned(read)
     val cow = FilePruner.recorded(
-      spark.sql(s"UPDATE gprune.tables.one SET j = 0 WHERE u = $x")).last
+      spark.sql(s"UPDATE $cat.tables.one SET j = 0 WHERE u = $x")).last
     assert(Lake.hasManifest(spark, root, "one", Lake.versions(spark, root, "one").max),
       "the UPDATE must ride the copy-on-write route")
 
@@ -113,7 +126,7 @@ class FilePrunerSpec extends SparkSpec {
   }
 
   test("the summary refresh prunes by bloom") {
-    withCatalog(spark, "gprune")
+    val cat = GraftCatalog.register(spark, root)
     Lake.setTableProperties(spark, root, "mvb", Map(BloomSidecar.ColumnsProp -> "g"))
     // clustered by k; the group key g is spread over every file, so min/max
     // stats admit every file for any g and only the bloom can narrow
@@ -123,7 +136,7 @@ class FilePrunerSpec extends SparkSpec {
     SummaryRewrite.createForTable(spark, "mv_bloom_spec", root, "mvb", s"$root/mv_bloom",
       keys = Seq("g"), rowKeys = Seq("k"), sums = Seq("v" -> None))
     try {
-      spark.sql("UPDATE gprune.tables.mvb SET v = v + 100 WHERE k = 17")
+      spark.sql(s"UPDATE $cat.tables.mvb SET v = v + 100 WHERE k = 17")
       val admissions = FilePruner.recorded(
         SummaryRewrite.refreshFromChanges(spark, "mv_bloom_spec"))
       val (adm, tot, groups) = SummaryRewrite.refreshStats("mv_bloom_spec")

@@ -616,6 +616,16 @@ class LakeSpec extends SparkSpec {
       "version=v5", "version=v6"))
   }
 
+  test("vacuum keeps the table's properties") {
+    val root = scratch()
+    val props = Map("bloom_filter_columns" -> "k", Lake.FileMaxRecordsProp -> "100")
+    Lake.setTableProperties(spark, root, "t", props)
+    Lake.writeTableSnapshot(Seq((1, "a"), (2, "b")).toDF("k", "x"), root, "t")
+    val swept = Lake.vacuumTable(spark, root, "t")
+    assert(!swept.map(_._1).contains("_props.json"), s"vacuum swept the properties: $swept")
+    assert(Lake.tableProperties(spark, root, "t") === props)
+  }
+
   test("restoreTable republishes an old snapshot as a new version, history intact") {
     val root = scratch()
     Lake.writeTableSnapshot(Seq((1, "good"), (2, "good")).toDF("k", "x"), root, "t")
@@ -900,8 +910,8 @@ class LakeSpec extends SparkSpec {
     val r2 = Lake.writeAuditPublish(dirty, root, "t", Seq(Quality.InRange("v", 0, 100)))
     assert(!r2.published && r2.failedChecks.nonEmpty)
     assert(Lake.versions(spark, root, "t") === Seq(1), "rejected batch changed versions")
-    assert(!new java.io.File(s"$root/tables/t/.wap_staging").exists(),
-      "staging survived a rejected batch")
+    val stages = new java.io.File(s"$root/tables/t").list().filter(_.startsWith(".stage_"))
+    assert(stages.isEmpty, s"staging survived a rejected batch: ${stages.toSeq}")
     assert(Lake.readTableFeed(spark, root, "t").count() === 2)
   }
 
@@ -1232,9 +1242,7 @@ class LakeSpec extends SparkSpec {
     }
     bucketed("spj_a", (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va"))
     bucketed("spj_b", (500 to 1500).map(i => (i.toLong, s"b$i")).toDF("k", "vb"))
-    spark.conf.set("spark.sql.catalog.spjcat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.spjcat.root", root)
+    val spjcat = org.apache.spark.sql.graft.GraftCatalog.register(spark, root)
     val saved = Seq(
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
@@ -1244,8 +1252,8 @@ class LakeSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val q = spark.sql(
-        """SELECT a.k, a.va, b.vb
-          |FROM spjcat.tables.spj_a a JOIN spjcat.tables.spj_b b ON a.k = b.k
+        s"""SELECT a.k, a.va, b.vb
+          |FROM $spjcat.tables.spj_a a JOIN $spjcat.tables.spj_b b ON a.k = b.k
           |""".stripMargin)
       val exchanges = q.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e
@@ -1261,7 +1269,7 @@ class LakeSpec extends SparkSpec {
       // a keyed AGGREGATE over one bucketed table also skips its exchange:
       // KeyGroupedPartitioning satisfies the groupBy's ClusteredDistribution
       val agg = spark.sql(
-        "SELECT k, count(*) AS n FROM spjcat.tables.spj_a GROUP BY k")
+        s"SELECT k, count(*) AS n FROM $spjcat.tables.spj_a GROUP BY k")
       assert(agg.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e
       }.isEmpty, "a bucket-key aggregate must not shuffle")
@@ -1276,7 +1284,7 @@ class LakeSpec extends SparkSpec {
         root, "spj_a", "spjsink", 0L)
       graft.lake.CopyOnWrite.compactWhere(spark, root, "spj_a", col("k") >= 2001)
       val q2 = spark.sql(
-        "SELECT a.k FROM spjcat.tables.spj_a a JOIN spjcat.tables.spj_b b ON a.k = b.k")
+        s"SELECT a.k FROM $spjcat.tables.spj_a a JOIN $spjcat.tables.spj_b b ON a.k = b.k")
       assert(q2.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e
       }.isEmpty,
@@ -1287,7 +1295,7 @@ class LakeSpec extends SparkSpec {
       // conf OFF → the default plan (shuffled join), byte-identical behavior
       spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       val off = spark.sql(
-        "SELECT a.k FROM spjcat.tables.spj_a a JOIN spjcat.tables.spj_b b ON a.k = b.k")
+        s"SELECT a.k FROM $spjcat.tables.spj_a a JOIN $spjcat.tables.spj_b b ON a.k = b.k")
       assert(off.count() === 501)
       assert(off.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e

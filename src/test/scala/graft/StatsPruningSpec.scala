@@ -21,12 +21,14 @@ class StatsPruningSpec extends SparkSpec {
 
   private lazy val (cat, root): (String, String) = {
     val root = Files.createTempDirectory("graft_stats_spec_").toString
-    val c = "gstats"
-    spark.conf.set(s"spark.sql.catalog.$c",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$c.root", root)
-    (c, root)
+    (GraftCatalog.register(spark, root), root)
   }
+
+  /** Aggregates the last metadata aggregate planned on this thread during
+    * `body` answered from the sidecar; 0 when none did.
+    */
+  private def metaAggregated(body: => Any): Int =
+    GraftCatalog.metaAggregates.recorded(body).lastOption.getOrElse(0)
 
   private def clustered(n: Int, files: Int) = {
     spark.range(0, n).select(
@@ -82,12 +84,13 @@ class StatsPruningSpec extends SparkSpec {
         "WHERE price BETWEEN 1500.00 AND 1648.50").head().getLong(0) === 100))
     assert(total === 8 && kept <= 2,
       s"a narrow decimal range over price-clustered files admitted $kept/$total")
-    GraftCatalog.lastMetaAggregate.set(0)
-    val r = spark.sql(
-      s"SELECT min(price) AS mn, max(price) AS mx FROM $cat.tables.st_dec").head()
-    assert(r.getDecimal(0).compareTo(new java.math.BigDecimal("0.00")) === 0 &&
-      r.getDecimal(1).compareTo(new java.math.BigDecimal("5998.50")) === 0)
-    assert(GraftCatalog.lastMetaAggregate.get() === 2,
+    val answered = metaAggregated {
+      val r = spark.sql(
+        s"SELECT min(price) AS mn, max(price) AS mx FROM $cat.tables.st_dec").head()
+      assert(r.getDecimal(0).compareTo(new java.math.BigDecimal("0.00")) === 0 &&
+        r.getDecimal(1).compareTo(new java.math.BigDecimal("5998.50")) === 0)
+    }
+    assert(answered === 2,
       "decimal MIN/MAX must answer from the sidecar (stats are exact — " +
         "fixed-width, never truncated)")
   }
@@ -157,37 +160,33 @@ class StatsPruningSpec extends SparkSpec {
 
   test("min/max/count answer from the sidecar with zero file reads") {
     // `st` is at v2 after the COW update: 8 files, 4000 rows
-    GraftCatalog.lastMetaAggregate.set(0)
     val q = s"SELECT count(*) AS c, min(k) AS mn, max(k) AS mx, " +
       s"min(name) AS mnm, count(cat) AS cc, max(d) AS mxd FROM $cat.tables.st"
-    val r = spark.sql(q).head()
-    assert(r.getLong(0) === 4000 && r.getLong(1) === 0 && r.getLong(2) === 3999)
-    assert(r.getString(3) === "user_000000")
-    assert(r.getLong(4) === 3600, "count(cat) must subtract the nulls")
-    assert(r.getDate(5) === spark.sql(
-      "SELECT date_add(DATE'2026-01-01', 299)").head().getDate(0))
-    assert(GraftCatalog.lastMetaAggregate.get() === 6,
+    val answered = metaAggregated {
+      val r = spark.sql(q).head()
+      assert(r.getLong(0) === 4000 && r.getLong(1) === 0 && r.getLong(2) === 3999)
+      assert(r.getString(3) === "user_000000")
+      assert(r.getLong(4) === 3600, "count(cat) must subtract the nulls")
+      assert(r.getDate(5) === spark.sql(
+        "SELECT date_add(DATE'2026-01-01', 299)").head().getDate(0))
+    }
+    assert(answered === 6,
       "all six aggregates must answer from the sidecar")
     val plan = spark.sql(q).queryExecution.executedPlan.toString
     assert(plan.contains("LocalTableScan"),
       s"a metadata aggregate plans as LocalTableScan, got:\n$plan")
 
     // floating-point MIN/MAX never answers from stats (NaN soundness)
-    GraftCatalog.lastMetaAggregate.set(0)
-    assert(spark.sql(s"SELECT min(score) AS m FROM $cat.tables.st")
-      .head().getDouble(0) === 0.0)
-    assert(GraftCatalog.lastMetaAggregate.get() === 0)
+    assert(metaAggregated(assert(spark.sql(s"SELECT min(score) AS m FROM $cat.tables.st")
+      .head().getDouble(0) === 0.0)) === 0)
     // an unsupported function in the mix sends the WHOLE query to the scan
-    GraftCatalog.lastMetaAggregate.set(0)
-    assert(spark.sql(s"SELECT count(*) AS c, sum(k) AS s FROM $cat.tables.st")
-      .head().getLong(0) === 4000)
-    assert(GraftCatalog.lastMetaAggregate.get() === 0)
+    assert(metaAggregated(assert(spark.sql(
+      s"SELECT count(*) AS c, sum(k) AS s FROM $cat.tables.st")
+      .head().getLong(0) === 4000)) === 0)
     // a filter sends it to the (pruned) scan — still exact
-    GraftCatalog.lastMetaAggregate.set(0)
-    assert(spark.sql(
+    assert(metaAggregated(assert(spark.sql(
       s"SELECT count(*) AS c FROM $cat.tables.st WHERE k >= 2000")
-      .head().getLong(0) === 2000)
-    assert(GraftCatalog.lastMetaAggregate.get() === 0)
+      .head().getLong(0) === 2000)) === 0)
   }
 
   test("merge-on-read positional delete probes only candidate files") {

@@ -287,16 +287,14 @@ class WarehouseSpec extends SparkSpec {
     } finally oldCoalesce.fold(
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled"))(
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", _))
-    spark.conf.set("spark.sql.catalog.mvcdfcat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.mvcdfcat.root", root)
+    val mvcdfcat = org.apache.spark.sql.graft.GraftCatalog.register(spark, root)
     try {
       SummaryRewrite.createForTable(spark, "mv_cdf_spec", root, "b", s"$root/mv",
         keys = Seq("g"), rowKeys = Seq("k"),
         sums = Seq("v" -> None), mins = Seq("v"), maxs = Seq("v"))
       def agg() = spark.sql(
-        """SELECT g, sum(v) AS sv, min(v) AS mn, max(v) AS mx, count(*) AS n
-          |FROM mvcdfcat.tables.b GROUP BY g""".stripMargin)
+        s"""SELECT g, sum(v) AS sv, min(v) AS mn, max(v) AS mx, count(*) AS n
+          |FROM $mvcdfcat.tables.b GROUP BY g""".stripMargin)
       def scans(df: org.apache.spark.sql.DataFrame) =
         SummaryRewrite.scannedPaths(df.queryExecution.optimizedPlan)
       assert(scans(agg()).exists(_.contains("/mv")),
@@ -305,12 +303,12 @@ class WarehouseSpec extends SparkSpec {
       // three file-granular mutations: an in-group update, a delete that
       // REMOVES group 2's maxima (un-foldable without re-probe), and a
       // MERGE that moves rows across groups + inserts a new group
-      spark.sql("UPDATE mvcdfcat.tables.b SET v = v + 100 WHERE k BETWEEN 100 AND 149")
-      spark.sql("DELETE FROM mvcdfcat.tables.b WHERE k BETWEEN 250 AND 299")
+      spark.sql(s"UPDATE $mvcdfcat.tables.b SET v = v + 100 WHERE k BETWEEN 100 AND 149")
+      spark.sql(s"DELETE FROM $mvcdfcat.tables.b WHERE k BETWEEN 250 AND 299")
       spark.range(7990, 8100).select(lit(999L).as("g"), col("id").as("k"),
         lit(3.5).as("v")).createOrReplaceTempView("mv_cdf_src")
       spark.sql(
-        """MERGE INTO mvcdfcat.tables.b t USING mv_cdf_src s ON t.k = s.k
+        s"""MERGE INTO $mvcdfcat.tables.b t USING mv_cdf_src s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET t.g = s.g, t.v = s.v
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
 
@@ -342,11 +340,7 @@ class WarehouseSpec extends SparkSpec {
         sums = Seq("v" -> None))
       assert(SummaryRewrite.refreshFromChanges(spark, "mv_cdf_spec") === again)
       assert(refreshed.asOfVersion === Lake.latestVersion(spark, root, "b").get)
-    } finally {
-      SummaryRewrite.drop("mv_cdf_spec")
-      spark.conf.unset("spark.sql.catalog.mvcdfcat")
-      spark.conf.unset("spark.sql.catalog.mvcdfcat.root")
-    }
+    } finally SummaryRewrite.drop("mv_cdf_spec")
   }
 
   test("refreshFromChanges composite keys: exactly the affected TUPLES re-aggregate") {
@@ -363,24 +357,22 @@ class WarehouseSpec extends SparkSpec {
       (col("id") % 4 / 2).cast("long").as("g2"),
       col("id").as("k"), (col("id") % 9).cast("double").as("v"))
     Lake.writeTableSnapshot(df, root, "tb")
-    spark.conf.set("spark.sql.catalog.mvtupcat",
-      classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.mvtupcat.root", root)
+    val mvtupcat = org.apache.spark.sql.graft.GraftCatalog.register(spark, root)
     try {
       SummaryRewrite.createForTable(spark, "mv_tuple_spec", root, "tb", s"$root/mv",
         keys = Seq("g1", "g2"), rowKeys = Seq("k"),
         sums = Seq("v" -> None), mins = Seq("v"), maxs = Seq("v"))
       // touch rows of exactly (g1,g2) = (0,0) and (1,1): id%20==0 hits
       // g1=0,g2=0; id%20==3 hits g1=1,g2=1
-      spark.sql("UPDATE mvtupcat.tables.tb SET v = v + 50 WHERE k % 20 = 0")
-      spark.sql("UPDATE mvtupcat.tables.tb SET v = v - 10 WHERE k % 20 = 3")
+      spark.sql(s"UPDATE $mvtupcat.tables.tb SET v = v + 50 WHERE k % 20 = 0")
+      spark.sql(s"UPDATE $mvtupcat.tables.tb SET v = v - 10 WHERE k % 20 = 3")
       SummaryRewrite.refreshFromChanges(spark, "mv_tuple_spec")
       assert(SummaryRewrite.refreshStats("mv_tuple_spec")._3 === 2L,
         s"disjoint-column mutations must re-aggregate exactly 2 groups, " +
           s"got ${SummaryRewrite.refreshStats("mv_tuple_spec")._3}")
       def agg() = spark.sql(
-        """SELECT g1, g2, sum(v) AS sv, min(v) AS mn, max(v) AS mx, count(*) AS n
-          |FROM mvtupcat.tables.tb GROUP BY g1, g2""".stripMargin)
+        s"""SELECT g1, g2, sum(v) AS sv, min(v) AS mn, max(v) AS mx, count(*) AS n
+          |FROM $mvtupcat.tables.tb GROUP BY g1, g2""".stripMargin)
       val q = agg()
       assert(SummaryRewrite.scannedPaths(q.queryExecution.optimizedPlan)
         .exists(_.contains("/mv")), "refreshed summary must serve")
@@ -396,7 +388,7 @@ class WarehouseSpec extends SparkSpec {
       SummaryRewrite.createForTable(spark, "mv_tuple_spec", root, "tb", s"$root/mv2",
         keys = Seq("g1", "g2"), rowKeys = Seq("k"),
         sums = Seq("v" -> None), mins = Seq("v"), maxs = Seq("v"))
-      spark.sql("UPDATE mvtupcat.tables.tb SET v = v + 7 WHERE k % 20 = 4")
+      spark.sql(s"UPDATE $mvtupcat.tables.tb SET v = v + 7 WHERE k % 20 = 4")
       SummaryRewrite.refreshFromChanges(spark, "mv_tuple_spec")
       assert(SummaryRewrite.refreshStats("mv_tuple_spec")._3 >= 1L)
       val q2 = agg()
@@ -406,11 +398,7 @@ class WarehouseSpec extends SparkSpec {
       SummaryRewrite.drop("mv_tuple_spec")
       assert(got2 === shape(agg().collect()),
         "null-keyed refresh must equal full recompute")
-    } finally {
-      SummaryRewrite.drop("mv_tuple_spec")
-      spark.conf.unset("spark.sql.catalog.mvtupcat")
-      spark.conf.unset("spark.sql.catalog.mvtupcat.root")
-    }
+    } finally SummaryRewrite.drop("mv_tuple_spec")
   }
 
   test("mv rewrite serves AVG and COUNT(col) via cnt measures; cast-wrapped decimal avg declines") {
