@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE session configuration every runtime entry point (Verify, Bench,
   * Plans, test utilities) builds from — a missed config line in a
@@ -118,6 +118,14 @@ object GraftSession {
     SparkSession.setActiveSession(s)
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.getClass
     s
+  }
+
+  /** Runs `body` over `df` persisted and unpersists it in a `finally`, so
+    * an exception cannot leave the cache entry in the long-lived session.
+    */
+  private[graft] def withPersisted[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = df.persist()
+    try body(p) finally p.unpersist()
   }
 
   /** Counts the Spark jobs started while it is a listener of the context.

@@ -12,28 +12,11 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new GraftSession.JobCounter
     spark.sparkContext.addSparkListener(jobs)
-    new java.io.File(outDir).mkdirs()
     // local-iteration filter: comma-separated exact keys to dump instead
     // of the full registry; only their oracles go into oracle_sql.json, so
     // tools/localcheck.py checks just those gates
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def chosen[V](gates: Map[String, V]): Map[String, V] =
-      only.fold(gates)(ks => gates.filter(kv => ks(kv._1)))
-    val selected = chosen(SparkEntry.queries)
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // a tab or CR in builder-authored SQL would make the driver's
-    // json.load fail and silently zero the round's correctness
-    def q(s: String): String = GraftSession.jsonEscape(s)
-    val json = chosen(SparkEntry.oracleSql)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    dump(spark, sfDir, outDir, sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet))
     org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
     // the codegen working set of a full registry run, which sizes
     // GraftSession's cache: every compile is a cache miss, so below the
@@ -50,5 +33,34 @@ object Verify {
     spark.stop()
     // outputs are written; reclaim every scratch dir this session created
     Tmp.purge()
+  }
+
+  /** Write each gate's output to `outDir/<name>` and the gates' oracle SQL
+    * to `outDir/oracle_sql.json`, the layout `tools/localcheck.py`
+    * compares. `only` names the gates to run, all when None. A gate that
+    * throws is logged and has no output dir; returns one
+    * `name: exception` line per such gate.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]] = None): Seq[String] = {
+    def chosen[V](gates: Map[String, V]): Map[String, V] =
+      only.fold(gates)(ks => gates.filter(kv => ks(kv._1)))
+    new java.io.File(outDir).mkdirs()
+    val failures = chosen(SparkEntry.queries).toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(s"$name: ${e.getClass.getSimpleName}: " + String.valueOf(e.getMessage).take(200))
+      }
+    }
+    // a raw tab or CR in a gate's SQL would make a strict JSON reader
+    // (`json.load` in tools/localcheck.py) reject the whole file
+    def q(s: String): String = GraftSession.jsonEscape(s)
+    val json = chosen(SparkEntry.oracleSql)
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    failures.sorted
   }
 }

@@ -1,68 +1,70 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withPersisted
 import graft.Tables
+import graft.lake.{CopyOnWrite, Lake}
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** MAINTAINED content-defined-chunking dedup index — [[Dedup.cdcDedup]]
   * kept current under continuous ingest, completing the incremental-index
   * family (fuzzy/LSH/PQ/SimHash/IVF) with the byte-resolution member.
   *
-  * State is ONE table: `postings` (doc_id, md5(chunk)) — chunk hashes are
-  * per-document and content-local (the CDC property), so an append batch
-  * indexes ONLY its own documents with zero cross-document candidate
-  * work; ownership/duplication statistics are derived at read time from
-  * the posting aggregate, exactly the one-shot operator's shape. That
-  * independence is what makes this the cheapest index in the family:
-  * append cost is O(batch bytes), no touched-bucket re-verify, no pair
-  * state to maintain.
+  * State is ONE lake table under the root: `postings` (doc_id,
+  * md5(chunk)) — chunk hashes are per-document and content-local (the
+  * CDC property), so an append batch indexes ONLY its own documents with
+  * zero cross-document candidate work; ownership/duplication statistics
+  * are derived at read time from the posting aggregate, exactly the
+  * one-shot operator's shape. That independence is what makes this the
+  * cheapest index in the family: append cost is O(batch bytes), no
+  * touched-bucket re-verify, no pair state to maintain.
   *
   * Replay tolerance: postings are a deterministic function of
-  * (doc_id, text), so a re-delivered append batch writes verbatim
-  * duplicate rows and the read-time `distinct()` erases them — no
-  * watermark or marker needed (at-least-once ingest is safe by
-  * construction).
+  * (doc_id, text), so a batch appended twice writes verbatim duplicate
+  * rows and the read-time `distinct()` erases them — at-least-once
+  * ingest is safe by construction.
   *
   * Erasure (right-to-be-forgotten on derived state, the `c23`-`c25`
   * contract): chunk hashes are content-derived PII-bearing state, and a
-  * single anti-join rewrite of `postings` purges an erased document's
-  * every byte from the index; owner/duplication stats recompute over
-  * survivors at read time, identical to an index built from the
-  * survivors alone (removing documents can never create duplication).
+  * single anti-join rewrite of `postings`, keeping one version, purges
+  * an erased document's every byte from the index; owner/duplication
+  * stats recompute over survivors at read time, identical to an index
+  * built from the survivors alone (removing documents can never create
+  * duplication).
   */
 object IncrementalCdc {
 
   /** Build the index fresh over `docs`. */
   def init(docs: DataFrame, root: String): Unit =
-    Dedup.cdcPostings(docs).write.mode("overwrite").parquet(s"$root/postings")
+    Lake.writeTableSnapshot(Dedup.cdcPostings(docs), root, "postings")
 
   /** Absorb an append batch: index ONLY the new documents — CDC postings
     * are per-document, so no existing state is read or touched.
     */
   def append(newDocs: DataFrame, root: String): Unit =
-    Dedup.cdcPostings(newDocs).write.mode("append").parquet(s"$root/postings")
+    CopyOnWrite.appendEpoch(Dedup.cdcPostings(newDocs), root, "postings",
+      Streams.IndexSink, Streams.nextIndexEpoch(newDocs.sparkSession, root, "postings"))
 
   /** Per-document dedup statistics over the maintained postings —
     * identical to [[Dedup.cdcDedup]] over everything ingested (the
     * incremental ≡ one-shot contract the gates verify).
     */
   def stats(s: SparkSession, root: String): DataFrame =
-    Dedup.cdcStats(s.read.parquet(s"$root/postings").distinct())
+    Dedup.cdcStats(Lake.readTableFeed(s, root, "postings").distinct())
 
   /** Erase documents: one anti-join rewrite of the single state table. */
   def erase(s: SparkSession, root: String, ids: DataFrame): Unit = {
     val gone = ids.select(col("doc_id")).distinct()
-    IndexMaintenance.swapIn(s, root, "postings",
-      s.read.parquet(s"$root/postings").join(gone, Seq("doc_id"), "left_anti"))
+    Lake.rewriteTable(s, root, "postings", retentionVersions = 1)(
+      _.join(gone, Seq("doc_id"), "left_anti"))
   }
 
   /** Compact: postings are a deterministic set — distinct + rewrite. */
   def compact(s: SparkSession, root: String, filesPerTable: Int = 1): Unit =
-    IndexMaintenance.compactTables(s, root, Seq("postings"), filesPerTable)
+    Lake.rewriteTable(s, root, "postings")(_.distinct().coalesce(filesPerTable))
 
   /** Gate: init on the low half, two appends for the rest — the
     * maintained stats must hash-equal the one-shot [[Dedup.cdcDedup]]
@@ -111,15 +113,15 @@ object IncrementalCdc {
 
   /** Gate: the SAME maintenance driven by Structured Streaming —
     * documents arrive as micro-batches and each is appended to the
-    * persisted index ([[IndexMaintenance.streamAppends]]). The index would
-    * not need the shared applied-batch guard: a re-delivered batch's
+    * persisted index ([[Streams.streamAppends]]). The index would not
+    * need the shared applied-batch guard: a re-delivered batch's
     * verbatim posting rows vanish under the read-time distinct anyway.
     */
   def streamCdcIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_scdc_").toString
-    Similarity.withPersisted(Tables.documents(s, d)) { docs =>
+    withPersisted(Tables.documents(s, d)) { docs =>
       init(docs.filter(col("doc_id") < 200), root)
-      IndexMaintenance.streamAppends(root, docs.filter(col("doc_id") >= 200),
+      Streams.streamAppends(root, "postings", docs.filter(col("doc_id") >= 200),
         (col("doc_id") >= 350).cast("int"))(append(_, root))
     }
     stats(s, root)

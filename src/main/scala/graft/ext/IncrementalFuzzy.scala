@@ -1,23 +1,31 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withPersisted
+import graft.lake.{CopyOnWrite, Lake}
+import graft.lake.Lake.readTableFeed
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** Incremental maintenance of the edit-distance (fuzzy) match index — the
   * growing-corpus form of [[FuzzyJoin.edSelfJoin]]: a continuously-ingested
   * entity stream keeps its ≤`maxDist` pair set current without ever
   * re-blocking the corpus.
   *
-  * State on disk (lake-style parquet under a root):
+  * State: one lake table per state table under a root (`Lake.tablePath`),
+  * each version a whole snapshot:
   *  - `members`:  (id, s) every ingested row — appended.
   *  - `strs`:     the DISTINCT strings ever indexed — appended.
   *  - `keys`:     (k, s) deletion-neighborhood postings of those strings —
   *    appended; the blocking index.
   *  - `pairs_str`: (s_a, s_b, dist) verified distinct-string pairs, one
   *    orientation (s_a < s_b) — append-only.
+  *
+  * An append commits only the batch's new files to each table
+  * ([[CopyOnWrite.appendEpoch]], earlier files carried by the manifest),
+  * stamping one epoch receipt, `strs` last: a re-run of an interrupted
+  * append skips the tables that hold its receipt and commits the rest.
   *
   * An append batch costs O(new strings): only strings NEW to the index are
   * neighborhood-expanded; candidates come from joining the new postings
@@ -67,14 +75,11 @@ object IncrementalFuzzy {
   /** Build the index from an initial batch of (id, s) rows. */
   def init(rows: DataFrame, root: String, maxDist: Int): Unit = {
     val s = rows.sparkSession
-    rows.select(col("id"), col("s")).write.mode("overwrite").parquet(s"$root/members")
-    val strs = distinctStrs(rows)
-    strs.write.mode("overwrite").parquet(s"$root/strs")
-    postings(s.read.parquet(s"$root/strs"), maxDist)
-      .write.mode("overwrite").parquet(s"$root/keys")
-    val keys = s.read.parquet(s"$root/keys")
-    newStringPairs(keys, keys, maxDist)
-      .write.mode("overwrite").parquet(s"$root/pairs_str")
+    Lake.writeTableSnapshot(rows.select(col("id"), col("s")), root, "members")
+    Lake.writeTableSnapshot(distinctStrs(rows), root, "strs")
+    Lake.writeTableSnapshot(postings(readTableFeed(s, root, "strs"), maxDist), root, "keys")
+    val keys = readTableFeed(s, root, "keys")
+    Lake.writeTableSnapshot(newStringPairs(keys, keys, maxDist), root, "pairs_str")
   }
 
   /** Absorb an append batch: index only strings new to the corpus, verify
@@ -82,19 +87,23 @@ object IncrementalFuzzy {
     */
   def append(rows: DataFrame, root: String, maxDist: Int): Unit = {
     val s = rows.sparkSession
-    rows.select(col("id"), col("s")).write.mode("append").parquet(s"$root/members")
-    Similarity.withPersisted(distinctStrs(rows)
-        .join(s.read.parquet(s"$root/strs"), Seq("s"), "left_anti")) { newStrs =>
-      if (!newStrs.isEmpty) Similarity.withPersisted(postings(newStrs, maxDist)) { newKeys =>
+    val epoch = Streams.nextIndexEpoch(s, root, "strs")
+    def commit(t: String, df: DataFrame): Unit =
+      CopyOnWrite.appendEpoch(df, root, t, Streams.IndexSink, epoch)
+    commit("members", rows.select(col("id"), col("s")))
+    withPersisted(distinctStrs(rows)
+        .join(readTableFeed(s, root, "strs"), Seq("s"), "left_anti")) { newStrs =>
+      if (!newStrs.isEmpty) withPersisted(postings(newStrs, maxDist)) { newKeys =>
         // probe BEFORE appending the new postings, against old ∪ new — the
         // union keeps new-new pairs discoverable while the left side
         // restricts generation to the new frontier
-        val oldKeys = s.read.parquet(s"$root/keys")
-        newStringPairs(newKeys, oldKeys.unionByName(newKeys), maxDist)
-          .write.mode("append").parquet(s"$root/pairs_str")
-        newKeys.write.mode("append").parquet(s"$root/keys")
-        newStrs.write.mode("append").parquet(s"$root/strs")
+        commit("pairs_str", newStringPairs(
+          newKeys, readTableFeed(s, root, "keys").unionByName(newKeys), maxDist))
+        commit("keys", newKeys)
       }
+      // the frontier commits on every append, empty or not: its receipt
+      // numbers the next append's epoch
+      commit("strs", newStrs)
     }
   }
 
@@ -103,16 +112,15 @@ object IncrementalFuzzy {
     *
     * Replay tolerance: every stored row is a DETERMINISTIC function of the
     * corpus (member rows verbatim; string pairs of the distinct strings),
-    * so a re-delivered append — Structured Streaming is at-least-once into
-    * `foreachBatch`, and a crash between [[append]]'s sequential writes
-    * re-runs the whole batch — can only duplicate rows verbatim, never
-    * diverge them. The `distinct()` on both reads restores set semantics,
-    * making a replayed or half-replayed batch invisible here (on clean
-    * state it deduplicates an already-distinct set — a no-op for results).
+    * so the same rows appended twice (two [[append]] calls over one
+    * slice) can only duplicate rows verbatim, never diverge them. The
+    * `distinct()` on both reads restores set semantics, making such a
+    * replay invisible here (on clean state it deduplicates an
+    * already-distinct set — a no-op for results).
     */
   def pairs(s: SparkSession, root: String): DataFrame = {
-    val members = s.read.parquet(s"$root/members").distinct()
-    val sp = s.read.parquet(s"$root/pairs_str").distinct()
+    val members = readTableFeed(s, root, "members").distinct()
+    val sp = readTableFeed(s, root, "pairs_str").distinct()
     val memA = members.select(col("id").as("id_x"), col("s").as("s_a"))
     val memB = members.select(col("id").as("id_y"), col("s").as("s_b"))
     val cross = sp.join(memA, Seq("s_a")).join(memB, Seq("s_b"))
@@ -147,15 +155,15 @@ object IncrementalFuzzy {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming micro-
-    * batches ([[IndexMaintenance.streamAppends]]) — a continuously
+    * batches ([[Streams.streamAppends]]) — a continuously
     * ingested entity feed keeping its fuzzy-match index current; batch
     * boundaries must be invisible in the final pair set.
     */
   def streamFuzzyIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sfuzzy_").toString
-    Similarity.withPersisted(customerRows(s, d)) { rows =>
+    withPersisted(customerRows(s, d)) { rows =>
       init(rows.filter(col("id") < 500), root, maxDist = 1)
-      IndexMaintenance.streamAppends(root, rows.filter(col("id") >= 500),
+      Streams.streamAppends(root, "strs", rows.filter(col("id") >= 500),
         (col("id") >= 1000).cast("int"))(append(_, root, maxDist = 1))
     }
     pairs(s, root)
@@ -171,16 +179,15 @@ object IncrementalFuzzy {
     * deterministic SET (members verbatim, distinct strings, their
     * postings, verified string pairs), `distinct + rewrite` is exactly
     * equivalence-preserving — the gate proves pairs() is hash-identical
-    * across a compaction. Each table is written aside first and swapped
-    * in only after that write committed ([[IndexMaintenance.swapIn]]), so
-    * the rewrite never reads its own output; the swap is
-    * delete-then-rename of the table directory —
-    * index-level atomicity at 100 TB would ride the versioned-lake
-    * publish path (`a23_fuzzy_index_sql`) instead of raw dirs.
+    * across a compaction. Each table is one compare-and-swap snapshot
+    * ([[Lake.rewriteTable]]): readers see its old or its new version,
+    * never a missing table. Tables publish one at a time; an interrupted
+    * compaction leaves each table at a whole version, and running it
+    * again converges.
     */
   def compact(s: SparkSession, root: String, filesPerTable: Int = 1): Unit =
-    IndexMaintenance.compactTables(
-      s, root, Seq("members", "strs", "keys", "pairs_str"), filesPerTable)
+    Seq("members", "strs", "keys", "pairs_str").foreach(t =>
+      Lake.rewriteTable(s, root, t)(_.distinct().coalesce(filesPerTable)))
 
   /** Gate: the incremental build of [[fuzzyIncremental]] followed by a
     * compaction — the maintained pair set must still hash-match the batch
@@ -201,41 +208,41 @@ object IncrementalFuzzy {
     * DERIVED state, the compliance requirement `c9_gdpr_erasure` covers
     * for lake tables and this op extends to the index: deleting a person
     * from the corpus is not enough when their name still sits in the
-    * index's string/posting/pair tables. Two-stage swap-rewrite (same
-    * mechanics as [[compact]]):
+    * index's string/posting/pair tables. Two-stage rewrite, each table one
+    * compare-and-swap snapshot as in [[compact]], keeping one version, so
+    * the erased rows leave every version of the table:
     *
     *  1. `members` rewritten without the erased ids — output-level
     *     forgetting ([[pairs]] expands only through member rows, so every
     *     pair touching an erased id vanishes immediately).
     *  2. Strings no remaining member carries are ORPHANS — PII with no
-    *     surviving subject — and are purged from `strs`, `keys`, and
-    *     `pairs_str` too (state-level forgetting: the erased name is gone
-    *     from every byte of index state, not just unreachable).
+    *     surviving subject — and are purged from `keys`, `pairs_str` and
+    *     then `strs` (state-level forgetting: the erased name is gone
+    *     from every byte of index state, not just unreachable). The
+    *     orphans are read from `strs`, so it is purged last.
     *
     * A string shared with surviving members stays — it is still those
     * members' data. Cost: one anti-join rewrite per table, O(index); runs
-    * at erasure cadence, not ingest cadence.
+    * at erasure cadence, not ingest cadence. An interrupted erasure leaves
+    * each table at a whole version; running it again finds the same
+    * orphans and converges.
     */
   def erase(s: SparkSession, root: String, ids: DataFrame): Unit = {
-    def swapIn(t: String, df: DataFrame): Unit =
-      IndexMaintenance.swapIn(s, root, t, df)
+    def purge(t: String)(keep: DataFrame => DataFrame): Unit =
+      Lake.rewriteTable(s, root, t, retentionVersions = 1)(keep)
     val gone = ids.select(col("id")).distinct()
-    swapIn("members",
-      s.read.parquet(s"$root/members").join(gone, Seq("id"), "left_anti"))
-    val orphans = s.read.parquet(s"$root/strs")
-      .join(s.read.parquet(s"$root/members").select(col("s")).distinct(),
+    purge("members")(_.join(gone, Seq("id"), "left_anti"))
+    // materialized before the next commit: each rewrite's one-version
+    // prune deletes the files `orphans` would otherwise re-read
+    val orphans = readTableFeed(s, root, "strs")
+      .join(readTableFeed(s, root, "members").select(col("s")).distinct(),
         Seq("s"), "left_anti")
       .localCheckpoint()
-    // the three remaining rewrites are INDEPENDENT once `orphans` is
-    // checkpointed (each reads and swaps only its own table) — concurrent,
-    // so the erasure pays the max of the three job latencies, not the sum
-    val sp = s.read.parquet(s"$root/pairs_str")
-    IndexMaintenance.swapInConcurrently(s, root, Seq(
-      "strs" -> s.read.parquet(s"$root/strs").join(orphans, Seq("s"), "left_anti"),
-      "keys" -> s.read.parquet(s"$root/keys").join(orphans, Seq("s"), "left_anti"),
-      "pairs_str" -> sp
-        .join(orphans.select(col("s").as("s_a")), Seq("s_a"), "left_anti")
-        .join(orphans.select(col("s").as("s_b")), Seq("s_b"), "left_anti")))
+    purge("keys")(_.join(orphans, Seq("s"), "left_anti"))
+    purge("pairs_str")(_
+      .join(orphans.select(col("s").as("s_a")), Seq("s_a"), "left_anti")
+      .join(orphans.select(col("s").as("s_b")), Seq("s_b"), "left_anti"))
+    purge("strs")(_.join(orphans, Seq("s"), "left_anti"))
   }
 
   /** Gate (c23): incremental build, then erasure of every id divisible by
@@ -261,35 +268,25 @@ object IncrementalFuzzy {
       |WHERE levenshtein(a.c_name, b.c_name) <= 1
       |  AND a.c_custkey % 100 <> 0 AND b.c_custkey % 100 <> 0""".stripMargin
 
-  /** Gate (a23): the fuzzy index's maintained state published through the
-    * versioned-lake CATALOG — `SELECT … FROM cat.tables.fuzzy_pairs
-    * VERSION AS OF n` reads the index exactly as it stood after each
-    * maintenance point, proving index state is time-travel auditable like
-    * every other lake table (the `pairs_str` layout stops being a private
-    * parquet detail). Each generation is one `Lake.writeTableSnapshot` of
-    * the string-level pair state — O(index) at gate scale; a 100 TB
-    * deployment publishes via the same snapshot API with the incremental
-    * layout staying the working store, auditing generations at whatever
-    * cadence governance needs (the pair state is ~output-sized, orders of
-    * magnitude below the corpus). The oracle recomputes BOTH generations'
-    * expected string-pair sets from the raw table, so a hash match proves
-    * the v1 cut contains exactly the pre-append pairs — appends never
-    * rewrote history.
+  /** Gate (a23): the fuzzy index's own state read through the
+    * versioned-lake CATALOG registered on the index root — `SELECT … FROM
+    * cat.tables.pairs_str VERSION AS OF n` reads the index exactly as it
+    * stood after each maintenance point: version 1 is the init commit,
+    * version 2 the append's. Index state is time-travel auditable like
+    * every other lake table, at no extra write. The oracle recomputes
+    * BOTH generations' expected string-pair sets from the raw table, so a
+    * hash match proves the v1 cut contains exactly the pre-append pairs —
+    * appends never rewrote history.
     */
   def fuzzyIndexSql(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_ifuzzy_cat_").toString
-    val lakeRoot = graft.Tmp.dir("graft_ifuzzy_lakecat_").toString
     val rows = customerRows(s, d)
     init(rows.filter(col("id") < 1000), root, maxDist = 1)
-    graft.lake.Lake.writeTableSnapshot(
-      s.read.parquet(s"$root/pairs_str"), lakeRoot, "fuzzy_pairs")
     append(rows.filter(col("id") >= 1000), root, maxDist = 1)
-    graft.lake.Lake.writeTableSnapshot(
-      s.read.parquet(s"$root/pairs_str"), lakeRoot, "fuzzy_pairs")
-    val cat = org.apache.spark.sql.graft.GraftCatalog.register(s, lakeRoot)
+    val cat = org.apache.spark.sql.graft.GraftCatalog.register(s, root)
     def q(gen: String, suffix: String): DataFrame = s.sql(
       s"SELECT '$gen' AS gen, s_a, s_b, CAST(dist AS BIGINT) AS dist " +
-        s"FROM $cat.tables.fuzzy_pairs$suffix")
+        s"FROM $cat.tables.pairs_str$suffix")
     q("v1", " VERSION AS OF 1").unionByName(q("v2", " VERSION AS OF 2"))
   }
 

@@ -1,11 +1,13 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withPersisted
 import graft.Tables
+import graft.lake.{CopyOnWrite, Lake}
+import graft.lake.Lake.readTableFeed
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** Incremental maintenance of the IVF ANN index — the growing-corpus form
   * of [[Similarity.annIvfMultiprobe]], completing incremental maintenance
@@ -22,19 +24,17 @@ import graft.queries.Q.QueryFn
   * ≡ full recompute BY CONSTRUCTION, and the gates verify it hash-exactly
   * against the one-shot multiprobe oracle.
   *
-  * State on disk (lake-style parquet under a root):
+  * State: one lake table per state table under a root:
   *  - `cents`:    (cent_id, cv, cn) the frozen codebook — written once.
-  *  - `assigned`: (vec_id, v, nrm, cent_id) — appended per batch.
+  *  - `assigned`: (vec_id, v, nrm, cent_id) — appended per batch, each
+  *    append committing only its own files ([[CopyOnWrite.appendEpoch]]).
   *
   * Reads dedup with `dropDuplicates(vec_id)` — assignment is a pure
-  * function of the frozen codebook, so replayed (or half-replayed) append
-  * batches can only duplicate rows verbatim; the streaming gate
-  * additionally keys applied batches by batchId.
+  * function of the frozen codebook, so a batch appended twice can only
+  * duplicate rows verbatim; the streaming gate additionally skips a
+  * re-delivered batch by its epoch receipt.
   */
 object IncrementalIvf {
-
-  private def centsOf(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/cents")
 
   /** Train (= deterministically sample, like the batch operator) the
     * codebook from the init batch and assign it.
@@ -44,12 +44,12 @@ object IncrementalIvf {
     // e feeds the codebook write and both halves of the assignment —
     // persist across the eager writes so the scan + normalization runs
     // once (guide §2.4); released before returning
-    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
-      e.orderBy(col("vec_id")).limit(Similarity.IvfK)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-        .write.mode("overwrite").parquet(s"$root/cents")
-      Similarity.ivfAssigned(e, centsOf(s, root))
-        .write.mode("overwrite").parquet(s"$root/assigned")
+    withPersisted(Similarity.withNorm(vecs)) { e =>
+      Lake.writeTableSnapshot(e.orderBy(col("vec_id")).limit(Similarity.IvfK)
+        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn")),
+        root, "cents")
+      Lake.writeTableSnapshot(
+        Similarity.ivfAssigned(e, readTableFeed(s, root, "cents")), root, "assigned")
     }
   }
 
@@ -60,9 +60,9 @@ object IncrementalIvf {
     val s = vecs.sparkSession
     // ivfAssigned reads its input twice (scoring + re-attach) — persist
     // the normalized batch across the one write, then release
-    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
-      Similarity.ivfAssigned(e, centsOf(s, root))
-        .write.mode("append").parquet(s"$root/assigned")
+    withPersisted(Similarity.withNorm(vecs)) { e =>
+      CopyOnWrite.appendEpoch(Similarity.ivfAssigned(e, readTableFeed(s, root, "cents")),
+        root, "assigned", Streams.IndexSink, Streams.nextIndexEpoch(s, root, "assigned"))
     }
   }
 
@@ -87,11 +87,11 @@ object IncrementalIvf {
     */
   private[graft] def query(
       s: SparkSession, root: String, nprobe: Int, reuse: Boolean): DataFrame = {
-    val cents = centsOf(s, root)
+    val cents = readTableFeed(s, root, "cents")
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     Similarity.finishGate(reuse,
-        s.read.parquet(s"$root/assigned").dropDuplicates("vec_id")) { assigned =>
+        readTableFeed(s, root, "assigned").dropDuplicates("vec_id")) { assigned =>
       val e = assigned.select(col("vec_id"), col("v"), col("nrm"))
       val qp = Similarity.queryProbes(e, cents, nprobe).drop("prk")
         .join(e.filter(Similarity.isQuery(col("vec_id"))).select(
@@ -121,14 +121,14 @@ object IncrementalIvf {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming with the
-    * at-least-once replay guard — batch boundaries invisible in the
-    * query results.
+    * at-least-once replay guard ([[Streams.streamAppends]]) — batch
+    * boundaries invisible in the query results.
     */
   def streamIvfIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sivf_").toString
-    Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+    withPersisted(Tables.embeddings(s, d)) { vecs =>
       init(vecs.filter(col("vec_id") < 250), root)
-      IndexMaintenance.streamAppends(root, vecs.filter(col("vec_id") >= 250),
+      Streams.streamAppends(root, "assigned", vecs.filter(col("vec_id") >= 250),
         (col("vec_id") >= 375).cast("int"))(append(_, root))
     }
     query(s, root)

@@ -1,12 +1,14 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withPersisted
 import graft.Tables
+import graft.lake.{CopyOnWrite, Lake}
+import graft.lake.Lake.readTableFeed
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** Incremental maintenance of the COMPOSED IVF-PQ index — the
   * growing-corpus form of [[Similarity.ivfPqTopK]], completing the
@@ -23,7 +25,7 @@ import graft.queries.Q.QueryFn
   * append-then-incremental ≡ full recompute BY CONSTRUCTION, verified
   * hash-exactly against the one-shot oracle.
   *
-  * State on disk:
+  * State: one lake table per state table under a root:
   *  - `cents` (cent_id, cv, cn) — the frozen coarse codebook;
   *  - `cb`    (cj, cid, csub)  — the frozen residual codebook;
   *  - `codes` (vec_id, cent_id, j, code) — 4 small ints per vector, the
@@ -32,22 +34,19 @@ import graft.queries.Q.QueryFn
   *    build query residuals (and by a re-ranker); candidates never touch
   *    it — appended per batch.
   *
+  * An append commits only the batch's new files to `vecs`, then `codes`
+  * ([[CopyOnWrite.appendEpoch]]), stamping one epoch receipt on each.
   * Replay tolerance: codes/vecs are pure functions of (vector, frozen
-  * models), so replayed appends duplicate rows verbatim and the read-time
-  * `dropDuplicates` erases them. Erasure: codes and vecs rows of the
-  * erased ids are anti-join-rewritten away (concurrently — independent
-  * tables); the frozen CODEBOOKS stay, like the k-means centroids they
+  * models), so a batch appended twice duplicates rows verbatim and the
+  * read-time `dropDuplicates` erases them. Erasure: codes and vecs rows
+  * of the erased ids are anti-join-rewritten away, each table keeping one
+  * version; the frozen CODEBOOKS stay, like the k-means centroids they
   * are — aggregate model state, not per-subject data (the same contract
   * the `c23`-`c25` family documents for id watermarks).
   */
 object IncrementalIvfPq {
 
   import Similarity.{PqK, PqM, PqSub}
-
-  private def centsOf(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/cents")
-  private def cbOf(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/cb")
 
   /** Residual subvectors of an assigned batch against its centroids. */
   private def rsubsOf(assigned: DataFrame, cents: DataFrame): DataFrame =
@@ -79,19 +78,19 @@ object IncrementalIvfPq {
     // e feeds the codebook write + both halves of the assignment, and
     // assigned feeds the vecs write + the residual pass — persist both
     // across the eager writes (guide §2.4), release before returning
-    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
-      e.orderBy(col("vec_id")).limit(Similarity.IvfK)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-        .write.mode("overwrite").parquet(s"$root/cents")
-      val cents = centsOf(s, root)
-      Similarity.withPersisted(Similarity.ivfAssigned(e, cents)) { assigned =>
-        assigned.select(col("vec_id"), col("v"), col("nrm"))
-          .write.mode("overwrite").parquet(s"$root/vecs")
-        Similarity.withPersisted(rsubsOf(assigned, cents)) { rsubs =>
-          rsubs.filter(col("vec_id") < PqK)
-            .select(col("j").as("cj"), col("vec_id").as("cid"), col("rsub").as("csub"))
-            .write.mode("overwrite").parquet(s"$root/cb")
-          encode(rsubs, cbOf(s, root)).write.mode("overwrite").parquet(s"$root/codes")
+    withPersisted(Similarity.withNorm(vecs)) { e =>
+      Lake.writeTableSnapshot(e.orderBy(col("vec_id")).limit(Similarity.IvfK)
+        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn")),
+        root, "cents")
+      val cents = readTableFeed(s, root, "cents")
+      withPersisted(Similarity.ivfAssigned(e, cents)) { assigned =>
+        Lake.writeTableSnapshot(assigned.select(col("vec_id"), col("v"), col("nrm")),
+          root, "vecs")
+        withPersisted(rsubsOf(assigned, cents)) { rsubs =>
+          Lake.writeTableSnapshot(rsubs.filter(col("vec_id") < PqK)
+            .select(col("j").as("cj"), col("vec_id").as("cid"), col("rsub").as("csub")),
+            root, "cb")
+          Lake.writeTableSnapshot(encode(rsubs, readTableFeed(s, root, "cb")), root, "codes")
         }
       }
     }
@@ -102,16 +101,17 @@ object IncrementalIvfPq {
     */
   def append(vecs: DataFrame, root: String): Unit = {
     val s = vecs.sparkSession
-    val cents = centsOf(s, root)
+    val cents = readTableFeed(s, root, "cents")
+    val epoch = Streams.nextIndexEpoch(s, root, "codes")
     // the normalized batch is read twice inside ivfAssigned and the
     // assignment twice more (vecs write + encode) — persist both across
     // the two eager writes (guide §2.4), release before returning
-    Similarity.withPersisted(Similarity.withNorm(vecs)) { e =>
-      Similarity.withPersisted(Similarity.ivfAssigned(e, cents)) { assigned =>
-        assigned.select(col("vec_id"), col("v"), col("nrm"))
-          .write.mode("append").parquet(s"$root/vecs")
-        encode(rsubsOf(assigned, cents), cbOf(s, root))
-          .write.mode("append").parquet(s"$root/codes")
+    withPersisted(Similarity.withNorm(vecs)) { e =>
+      withPersisted(Similarity.ivfAssigned(e, cents)) { assigned =>
+        CopyOnWrite.appendEpoch(assigned.select(col("vec_id"), col("v"), col("nrm")),
+          root, "vecs", Streams.IndexSink, epoch)
+        CopyOnWrite.appendEpoch(encode(rsubsOf(assigned, cents), readTableFeed(s, root, "cb")),
+          root, "codes", Streams.IndexSink, epoch)
       }
     }
   }
@@ -120,14 +120,14 @@ object IncrementalIvfPq {
     * formulas (and therefore hashes) to [[Similarity.ivfPqTopK]].
     */
   def query(s: SparkSession, root: String): DataFrame = {
-    val cents = centsOf(s, root)
-    val cb = cbOf(s, root)
-    val codes = s.read.parquet(s"$root/codes").dropDuplicates("vec_id", "j")
+    val cents = readTableFeed(s, root, "cents")
+    val cb = readTableFeed(s, root, "cb")
+    val codes = readTableFeed(s, root, "codes").dropDuplicates("vec_id", "j")
     // the cold vector store is read ONLY for the fixed query batch (probe
     // ranking + query residuals) — filter to it BEFORE the dedup, which
     // commutes with dropDuplicates on the filter key: the dedup then
     // shuffles Q rows of 64-dim vectors instead of the whole store (§2.3)
-    val vecs = s.read.parquet(s"$root/vecs")
+    val vecs = readTableFeed(s, root, "vecs")
       .filter(Similarity.isQuery(col("vec_id")))
       .dropDuplicates("vec_id")
     val probes = Similarity.queryProbes(vecs, cents, nprobe = 4).drop("prk")
@@ -162,14 +162,17 @@ object IncrementalIvfPq {
         col("cent_id").as("cell"), col("adc"), col("rk"))
   }
 
-  /** Erase vectors from the index: codes and the cold vector store are
-    * independent tables — concurrent anti-join rewrites.
+  /** Erase vectors from the index: one anti-join rewrite each of codes and
+    * the cold vector store, each keeping one version, so the erased rows
+    * leave every version.
     */
   def erase(s: SparkSession, root: String, ids: DataFrame): Unit = {
+    // materialized before the first commit: `ids` may read index state,
+    // whose files the one-version prune of `codes` deletes
     val gone = ids.select(col("vec_id")).distinct().localCheckpoint()
-    IndexMaintenance.swapInConcurrently(s, root, Seq(
-      "codes" -> s.read.parquet(s"$root/codes").join(gone, Seq("vec_id"), "left_anti"),
-      "vecs" -> s.read.parquet(s"$root/vecs").join(gone, Seq("vec_id"), "left_anti")))
+    Seq("codes", "vecs").foreach(t =>
+      Lake.rewriteTable(s, root, t, retentionVersions = 1)(
+        _.join(gone, Seq("vec_id"), "left_anti")))
   }
 
   /** Gate: init on vec_id < 250 (contains every centroid and codebook
@@ -187,13 +190,13 @@ object IncrementalIvfPq {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming with the
-    * at-least-once replay guard.
+    * at-least-once replay guard ([[Streams.streamAppends]]).
     */
   def streamIvfPqIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_sivfpq_").toString
-    Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+    withPersisted(Tables.embeddings(s, d)) { vecs =>
       init(vecs.filter(col("vec_id") < 250), root)
-      IndexMaintenance.streamAppends(root, vecs.filter(col("vec_id") >= 250),
+      Streams.streamAppends(root, "codes", vecs.filter(col("vec_id") >= 250),
         (col("vec_id") >= 375).cast("int"))(append(_, root))
     }
     query(s, root)

@@ -1,21 +1,29 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withPersisted
+import graft.lake.{CopyOnWrite, Lake}
+import graft.lake.Lake.readTableFeed
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** Incremental maintenance of the MinHash-LSH near-dup index — the real
   * operation on a GROWING 100-TB corpus, where recomputing the whole
   * pipeline per ingest batch ([[Dedup.minhashLshOver]]) would reprocess
   * 100 TB to absorb a few GB.
   *
-  * State on disk (lake-style parquet tables under a root):
+  * State: one lake table per state table under a root:
   *  - `sigs`:  doc_id, shingle set, 32-slot minhash signature — appended,
   *    never rewritten; the shingle arrays let later appends verify
   *    candidates without re-reading document text.
   *  - `pairs`: doc_a, doc_b, jaccard — append-only verified output.
+  *  - `meta`:  max_id, the id watermark — one row per append.
+  *
+  * An append commits only the batch's new files to each table
+  * ([[CopyOnWrite.appendEpoch]]), stamping one epoch receipt, `meta`
+  * last: a re-run of an interrupted append skips the tables that hold its
+  * receipt and commits the rest.
   *
   * An append batch costs O(new): only new documents are shingled and
   * signed; candidate generation joins the FULL posting table down to the
@@ -67,14 +75,14 @@ object IncrementalLsh {
   /** The highest doc id ever INGESTED (not just signed): shingle-less docs
     * never reach the sigs table, but their ids are still spent — computing
     * the watermark from sigs would let a later batch silently reuse them.
-    * Kept as a one-row parquet marker next to the data tables.
+    * Kept as the `meta` table next to the data tables, one row per init
+    * or append; the watermark is its maximum.
     */
-  private def writeIdWatermark(s: SparkSession, root: String, maxId: Long): Unit =
+  private def idWatermark(s: SparkSession, maxId: Long): DataFrame =
     s.range(1).select(lit(maxId).as("max_id"))
-      .write.mode("overwrite").parquet(s"$root/meta")
 
   private def readIdWatermark(s: SparkSession, root: String): Long =
-    s.read.parquet(s"$root/meta").head().getLong(0)
+    readTableFeed(s, root, "meta").agg(max(col("max_id"))).head().getLong(0)
 
   /** Max doc_id of a batch; None when the batch is empty. */
   private def maxId(docs: DataFrame): Option[Long] = {
@@ -88,12 +96,13 @@ object IncrementalLsh {
   def init(docs: DataFrame, root: String,
       maxBucket: Int = Dedup.MaxBucketDefault): Unit = {
     val s = docs.sparkSession
-    signatures(docs).write.mode("overwrite").parquet(s"$root/sigs")
-    val sigs = s.read.parquet(s"$root/sigs")
+    Lake.writeTableSnapshot(signatures(docs), root, "sigs")
+    val sigs = readTableFeed(s, root, "sigs")
     val cand = Dedup.lshCandidates(
       sigs.select(col("doc_id").as("rep_id"), col("sig")), maxBucket)
-    verify(cand, sigs).write.mode("overwrite").parquet(s"$root/pairs")
-    writeIdWatermark(s, root, maxId(docs).getOrElse(Long.MinValue))
+    Lake.writeTableSnapshot(verify(cand, sigs), root, "pairs")
+    Lake.writeTableSnapshot(
+      idWatermark(s, maxId(docs).getOrElse(Long.MinValue)), root, "meta")
   }
 
   /** Absorb an append batch: sign ONLY the new docs, generate only
@@ -111,14 +120,16 @@ object IncrementalLsh {
     val (minNew, maxNew) = (bounds.getLong(0), bounds.getLong(1))
     require(minNew > maxOld,
       s"IncrementalLsh.append: new ids must exceed all ingested ids ($minNew <= $maxOld)")
-    Similarity.withPersisted(signatures(newDocs)) { newSigs =>
-      newSigs.write.mode("append").parquet(s"$root/sigs")
+    val epoch = Streams.nextIndexEpoch(s, root, "meta")
+    def commit(t: String, df: DataFrame): Unit =
+      CopyOnWrite.appendEpoch(df, root, t, Streams.IndexSink, epoch)
+    withPersisted(signatures(newDocs)) { newSigs =>
+      commit("sigs", newSigs)
       // distinct: signatures are a deterministic function of (doc_id, text),
-      // so the only possible duplicates are verbatim rows from a replayed
-      // half-committed append (crash after the sigs write, before the
-      // watermark) — dedup here keeps the bucket cap and the verify joins
-      // exact under at-least-once redelivery; on clean state it is a no-op
-      val all = s.read.parquet(s"$root/sigs").distinct()
+      // so verbatim duplicate rows are the only kind there can be — dedup
+      // here keeps the bucket cap and the verify joins exact whatever the
+      // state holds; on clean state it is a no-op
+      val all = readTableFeed(s, root, "sigs").distinct()
       val touched = Dedup.bandBuckets(
         newSigs.select(col("doc_id").as("rep_id"), col("sig")))
         .select(col("band_idx"), col("band_hash")).distinct()
@@ -131,9 +142,9 @@ object IncrementalLsh {
         // doc" ⟺ rep_b is new; old-old pairs in touched buckets are already
         // stored and must not re-verify or duplicate
         .filter(col("rep_b") > maxOld)
-      verify(cand, all).write.mode("append").parquet(s"$root/pairs")
+      commit("pairs", verify(cand, all))
     }
-    writeIdWatermark(s, root, maxNew)
+    commit("meta", idWatermark(s, maxNew))
   }
 
   /** Erase docs from the index: `sigs` rows (which carry the
@@ -141,37 +152,39 @@ object IncrementalLsh {
     * stored pair touching an erased id are rewritten away. The id
     * WATERMARK is deliberately untouched: erased ids stay SPENT — freeing
     * them for reuse would let a future append violate the id-ranked
-    * bucket-cap stability the whole append contract rests on.
+    * bucket-cap stability the whole append contract rests on. Each table
+    * is one compare-and-swap rewrite keeping one version, so the erased
+    * rows leave every version.
     */
   def erase(s: SparkSession, root: String, ids: DataFrame): Unit = {
-    // both rewrites depend only on the (tiny, deterministic) erased-id
-    // set — independent, so concurrent (see IndexMaintenance)
+    // materialized before the first commit: `ids` may read index state,
+    // whose files the one-version prune of `sigs` deletes
     val gone = ids.select(col("doc_id")).distinct().localCheckpoint()
-    val p = s.read.parquet(s"$root/pairs")
-    IndexMaintenance.swapInConcurrently(s, root, Seq(
-      "sigs" -> s.read.parquet(s"$root/sigs").join(gone, Seq("doc_id"), "left_anti"),
-      "pairs" -> p
-        .join(gone.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
-        .join(gone.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")))
+    Lake.rewriteTable(s, root, "sigs", retentionVersions = 1)(
+      _.join(gone, Seq("doc_id"), "left_anti"))
+    Lake.rewriteTable(s, root, "pairs", retentionVersions = 1)(_
+      .join(gone.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
+      .join(gone.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti"))
   }
 
-  /** Compact the index state (see [[IndexMaintenance]]): sigs and pairs
-    * are deterministic sets, so distinct + rewrite preserves the index
-    * exactly; the 1-row id watermark (`meta`) is overwrite-maintained and
-    * needs no compaction.
+  /** Compact the index state: sigs and pairs are deterministic sets, so
+    * distinct + rewrite preserves the index exactly; the id watermark
+    * (`meta`, one row per append) folds to its one maximum row, which
+    * [[readIdWatermark]] reads the same.
     */
-  def compact(s: SparkSession, root: String, filesPerTable: Int = 1): Unit =
-    IndexMaintenance.compactTables(s, root, Seq("sigs", "pairs"), filesPerTable)
+  def compact(s: SparkSession, root: String, filesPerTable: Int = 1): Unit = {
+    Seq("sigs", "pairs").foreach(t =>
+      Lake.rewriteTable(s, root, t)(_.distinct().coalesce(filesPerTable)))
+    Lake.rewriteTable(s, root, "meta")(_.agg(max(col("max_id")).as("max_id")))
+  }
 
   /** The maintained near-dup pair table. Verified pairs are deterministic
     * per (doc_a, doc_b), so the read-time distinct restores set semantics
-    * if a replayed half-committed append double-appended a batch's pairs
-    * (see [[IndexMaintenance.appliedOnce]] for the
-    * common-case guard); on clean state it deduplicates an
-    * already-distinct set.
+    * whatever verbatim duplicates the state holds; on clean state it
+    * deduplicates an already-distinct set.
     */
   def pairs(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/pairs").distinct()
+    readTableFeed(s, root, "pairs").distinct()
 
   /** Gate: init on the 100 planted base docs, then TWO incremental appends
     * of 10 exact duplicates each — the final maintained pair table must
@@ -189,7 +202,7 @@ object IncrementalLsh {
   }
 
   /** Gate: the SAME maintenance driven by Structured Streaming — documents
-    * arrive as micro-batches ([[IndexMaintenance.streamAppends]]), each
+    * arrive as micro-batches ([[Streams.streamAppends]]), each
     * appended to the persisted index in arrival order, the canonical shape of a
     * continuously-ingested corpus keeping its near-dup index current
     * (crawl ids grow monotonically, satisfying the append contract). The
@@ -198,10 +211,10 @@ object IncrementalLsh {
     */
   def streamLshIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_slsh_").toString
-    Similarity.withPersisted(Dedup.plantedDocs(s)) { docs =>
+    withPersisted(Dedup.plantedDocs(s)) { docs =>
       init(docs.filter(col("doc_id") < 100), root)
       // two arrival chunks in id order (ids grow with arrival time in a crawl)
-      IndexMaintenance.streamAppends(root, docs.filter(col("doc_id") >= 1000),
+      Streams.streamAppends(root, "meta", docs.filter(col("doc_id") >= 1000),
         (col("doc_id") >= 1010).cast("int"))(append(_, root))
     }
     pairs(s, root)

@@ -1,11 +1,13 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withPersisted
 import graft.Tables
+import graft.lake.{CopyOnWrite, Lake}
+import graft.lake.Lake.readTableFeed
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** Incremental maintenance of the PRODUCT-QUANTIZATION index — the
   * growing-corpus form of [[Similarity.annPq]], closing the last gap in
@@ -21,17 +23,18 @@ import graft.queries.Q.QueryFn
   * ≡ full recompute, verified hash-exactly against the one-shot ADC
   * oracle.
   *
-  * State on disk (lake-style parquet under a root):
+  * State: one lake table per state table under a root:
   *  - `cb`:    (cj, cid, csub) the M×K frozen codebook — written once.
-  *  - `codes`: (vec_id, j, code) — appended per batch. THIS is the whole
-  *    index: M small ints per vector (the 64× memory compression that is
-  *    PQ's point) — raw vectors are never re-read at query time; query
-  *    vectors arrive with the query.
+  *  - `codes`: (vec_id, j, code) — appended per batch, each append
+  *    committing only its own files ([[CopyOnWrite.appendEpoch]]).
+  *    THIS is the whole index: M small ints per vector (the 64× memory
+  *    compression that is PQ's point) — raw vectors are never re-read at
+  *    query time; query vectors arrive with the query.
   *
   * Reads dedup with `dropDuplicates(vec_id, j)` — encoding is a pure
-  * function of the frozen codebook, so replayed append batches can only
-  * duplicate rows verbatim; the streaming gate additionally keys applied
-  * batches by batchId.
+  * function of the frozen codebook, so a batch appended twice can only
+  * duplicate rows verbatim; the streaming gate additionally skips a
+  * re-delivered batch by its epoch receipt.
   */
 object IncrementalPq {
 
@@ -44,9 +47,6 @@ object IncrementalPq {
       .select(col("vec_id"), posexplode(expr(
         s"transform(sequence(0, ${PqM - 1}), j -> slice(v, j * $PqSub + 1, $PqSub))")))
       .select(col("vec_id"), col("pos").as("j"), col("col").as("sub"))
-
-  private def cbOf(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/cb")
 
   /** Encode a batch against the frozen codebook: broadcast-scored, one
     * `min(struct)` partial aggregate — identical math (and IEEE op order)
@@ -66,10 +66,10 @@ object IncrementalPq {
   def init(vecs: DataFrame, root: String): Unit = {
     val s = vecs.sparkSession
     val subs = pqSubs(vecs)
-    subs.filter(col("vec_id") < PqK)
-      .select(col("j").as("cj"), col("vec_id").as("cid"), col("sub").as("csub"))
-      .write.mode("overwrite").parquet(s"$root/cb")
-    encode(subs, cbOf(s, root)).write.mode("overwrite").parquet(s"$root/codes")
+    Lake.writeTableSnapshot(subs.filter(col("vec_id") < PqK)
+      .select(col("j").as("cj"), col("vec_id").as("cid"), col("sub").as("csub")),
+      root, "cb")
+    Lake.writeTableSnapshot(encode(subs, readTableFeed(s, root, "cb")), root, "codes")
   }
 
   /** Encode an append batch against the FROZEN codebook and append —
@@ -77,8 +77,8 @@ object IncrementalPq {
     */
   def append(vecs: DataFrame, root: String): Unit = {
     val s = vecs.sparkSession
-    encode(pqSubs(vecs), cbOf(s, root))
-      .write.mode("append").parquet(s"$root/codes")
+    CopyOnWrite.appendEpoch(encode(pqSubs(vecs), readTableFeed(s, root, "cb")),
+      root, "codes", Streams.IndexSink, Streams.nextIndexEpoch(s, root, "codes"))
   }
 
   /** ADC top-5 for the standard query batch over the maintained index —
@@ -89,8 +89,8 @@ object IncrementalPq {
     * query; the index itself holds only codes).
     */
   def query(s: SparkSession, root: String, queries: DataFrame): DataFrame = {
-    val codes = s.read.parquet(s"$root/codes").dropDuplicates("vec_id", "j")
-    val cb = cbOf(s, root)
+    val codes = readTableFeed(s, root, "codes").dropDuplicates("vec_id", "j")
+    val cb = readTableFeed(s, root, "cb")
     val lut = pqSubs(queries.filter(isQuery(col("vec_id"))))
       .join(broadcast(cb), col("j") === col("cj"))
       .select(col("vec_id").as("q_id"), col("j").as("lj"), col("cid"),
@@ -133,14 +133,14 @@ object IncrementalPq {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming with the
-    * at-least-once replay guard of [[IndexMaintenance.streamAppends]] — batch
+    * at-least-once replay guard of [[Streams.streamAppends]] — batch
     * boundaries invisible in the query results.
     */
   def streamPqIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_spq_").toString
-    Similarity.withPersisted(Tables.embeddings(s, d)) { vecs =>
+    withPersisted(Tables.embeddings(s, d)) { vecs =>
       init(vecs.filter(col("vec_id") < 250), root)
-      IndexMaintenance.streamAppends(root, vecs.filter(col("vec_id") >= 250),
+      Streams.streamAppends(root, "codes", vecs.filter(col("vec_id") >= 250),
         (col("vec_id") >= 375).cast("int"))(append(_, root))
     }
     query(s, root, Tables.embeddings(s, d))

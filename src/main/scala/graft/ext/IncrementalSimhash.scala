@@ -1,10 +1,12 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withPersisted
+import graft.lake.{CopyOnWrite, Lake}
+import graft.lake.Lake.readTableFeed
 import graft.queries.Q.QueryFn
+import graft.streaming.Streams
 
 /** Incremental maintenance of the SimHash near-dup index — the
   * growing-corpus form of [[Dedup.simhashPairsOver]], completing the
@@ -19,13 +21,18 @@ import graft.queries.Q.QueryFn
   * id; a re-ingested duplicate text costs one membership probe, never
   * re-banding).
   *
-  * State on disk (lake-style parquet under a root):
+  * State: one lake table per state table under a root:
   *  - `members`:  (doc_id, simhash) every ingested doc — appended.
   *  - `sks`:      the DISTINCT sketches ever indexed — appended.
   *  - `chunks`:   (chunk_idx, chunk_val, simhash) 4×16-bit band postings
   *    of those sketches — appended; the blocking index.
   *  - `pairs_sk`: (sk_a, sk_b, hamming) verified distinct-sketch pairs at
   *    Hamming 1..3, one orientation (sk_a < sk_b) — append-only.
+  *
+  * An append commits only the batch's new files to each table
+  * ([[CopyOnWrite.appendEpoch]]), stamping one epoch receipt, `sks`
+  * last: a re-run of an interrupted append skips the tables that hold its
+  * receipt and commits the rest.
   *
   * An append batch costs O(new sketches): only sketches NEW to the index
   * are banded; candidates come from one equi-join of the new postings
@@ -83,15 +90,12 @@ object IncrementalSimhash {
   /** Build the index from an initial doc batch (doc_id, text). */
   def init(docs: DataFrame, root: String): Unit = {
     val s = docs.sparkSession
-    Dedup.simhashSketches(docs)
-      .write.mode("overwrite").parquet(s"$root/members")
-    s.read.parquet(s"$root/members").select(col("simhash")).distinct()
-      .write.mode("overwrite").parquet(s"$root/sks")
-    chunkPostings(s.read.parquet(s"$root/sks"))
-      .write.mode("overwrite").parquet(s"$root/chunks")
-    val chunks = s.read.parquet(s"$root/chunks")
-    newSketchPairs(chunks, chunks)
-      .write.mode("overwrite").parquet(s"$root/pairs_sk")
+    Lake.writeTableSnapshot(Dedup.simhashSketches(docs), root, "members")
+    Lake.writeTableSnapshot(
+      readTableFeed(s, root, "members").select(col("simhash")).distinct(), root, "sks")
+    Lake.writeTableSnapshot(chunkPostings(readTableFeed(s, root, "sks")), root, "chunks")
+    val chunks = readTableFeed(s, root, "chunks")
+    Lake.writeTableSnapshot(newSketchPairs(chunks, chunks), root, "pairs_sk")
   }
 
   /** Absorb an append batch: sketch the new docs, band only sketches new
@@ -100,66 +104,72 @@ object IncrementalSimhash {
     */
   def append(docs: DataFrame, root: String): Unit = {
     val s = docs.sparkSession
-    Similarity.withPersisted(Dedup.simhashSketches(docs)) { batchSk =>
-      batchSk.write.mode("append").parquet(s"$root/members")
-      Similarity.withPersisted(batchSk.select(col("simhash")).distinct()
-          .join(s.read.parquet(s"$root/sks"), Seq("simhash"), "left_anti")) { newSks =>
-        if (!newSks.isEmpty) Similarity.withPersisted(chunkPostings(newSks)) { newChunks =>
-          val oldChunks = s.read.parquet(s"$root/chunks")
-          newSketchPairs(newChunks, oldChunks.unionByName(newChunks))
-            .write.mode("append").parquet(s"$root/pairs_sk")
-          newChunks.write.mode("append").parquet(s"$root/chunks")
-          newSks.write.mode("append").parquet(s"$root/sks")
+    val epoch = Streams.nextIndexEpoch(s, root, "sks")
+    def commit(t: String, df: DataFrame): Unit =
+      CopyOnWrite.appendEpoch(df, root, t, Streams.IndexSink, epoch)
+    withPersisted(Dedup.simhashSketches(docs)) { batchSk =>
+      commit("members", batchSk)
+      withPersisted(batchSk.select(col("simhash")).distinct()
+          .join(readTableFeed(s, root, "sks"), Seq("simhash"), "left_anti")) { newSks =>
+        if (!newSks.isEmpty) withPersisted(chunkPostings(newSks)) { newChunks =>
+          commit("pairs_sk", newSketchPairs(
+            newChunks, readTableFeed(s, root, "chunks").unionByName(newChunks)))
+          commit("chunks", newChunks)
         }
+        // the frontier commits on every append, empty or not: its receipt
+        // numbers the next append's epoch
+        commit("sks", newSks)
       }
     }
   }
 
-  /** Compact the index state (see [[IndexMaintenance]]): every table is a
-    * deterministic set, so distinct + rewrite preserves the index exactly.
+  /** Compact the index state: every table is a deterministic set, so
+    * distinct + rewrite preserves the index exactly. Each table is one
+    * compare-and-swap snapshot ([[Lake.rewriteTable]]).
     */
   def compact(s: SparkSession, root: String, filesPerTable: Int = 1): Unit =
-    IndexMaintenance.compactTables(
-      s, root, Seq("members", "sks", "chunks", "pairs_sk"), filesPerTable)
+    Seq("members", "sks", "chunks", "pairs_sk").foreach(t =>
+      Lake.rewriteTable(s, root, t)(_.distinct().coalesce(filesPerTable)))
 
   /** Erase members (right-to-be-forgotten for derived state — the
     * [[IncrementalFuzzy.erase]] contract applied here): members are
     * rewritten without the erased ids, then sketches no surviving member
-    * carries are purged from `sks`, `chunks`, and `pairs_sk`. A sketch is
-    * a lossy content digest, but it is still DERIVED from the erased
-    * text — compliance postures that treat digests as personal data get
-    * state-level forgetting, everyone gets output-level forgetting.
+    * carries are purged from `chunks`, `pairs_sk` and, last because the
+    * orphans are read from it, `sks`. A sketch is a lossy content
+    * digest, but it is still DERIVED from the erased text — compliance
+    * postures that treat digests as personal data get
+    * state-level forgetting, everyone gets output-level forgetting. Each
+    * table is one compare-and-swap rewrite keeping one version, so the
+    * purged rows leave every version; an interrupted erasure converges
+    * when run again.
     */
   def erase(s: SparkSession, root: String, ids: DataFrame): Unit = {
+    def purge(t: String)(keep: DataFrame => DataFrame): Unit =
+      Lake.rewriteTable(s, root, t, retentionVersions = 1)(keep)
     val gone = ids.select(col("doc_id")).distinct()
-    IndexMaintenance.swapIn(s, root, "members",
-      s.read.parquet(s"$root/members").join(gone, Seq("doc_id"), "left_anti"))
-    val orphans = s.read.parquet(s"$root/sks")
-      .join(s.read.parquet(s"$root/members").select(col("simhash")).distinct(),
+    purge("members")(_.join(gone, Seq("doc_id"), "left_anti"))
+    // materialized before the next commit: each rewrite's one-version
+    // prune deletes the files `orphans` would otherwise re-read
+    val orphans = readTableFeed(s, root, "sks")
+      .join(readTableFeed(s, root, "members").select(col("simhash")).distinct(),
         Seq("simhash"), "left_anti")
       .localCheckpoint()
-    // independent once `orphans` is checkpointed — concurrent rewrites
-    // (max of the job latencies, not the sum; see IndexMaintenance)
-    val sp = s.read.parquet(s"$root/pairs_sk")
-    IndexMaintenance.swapInConcurrently(s, root, Seq(
-      "sks" -> s.read.parquet(s"$root/sks")
-        .join(orphans, Seq("simhash"), "left_anti"),
-      "chunks" -> s.read.parquet(s"$root/chunks")
-        .join(orphans, Seq("simhash"), "left_anti"),
-      "pairs_sk" -> sp
-        .join(orphans.select(col("simhash").as("sk_a")), Seq("sk_a"), "left_anti")
-        .join(orphans.select(col("simhash").as("sk_b")), Seq("sk_b"), "left_anti")))
+    purge("chunks")(_.join(orphans, Seq("simhash"), "left_anti"))
+    purge("pairs_sk")(_
+      .join(orphans.select(col("simhash").as("sk_a")), Seq("sk_a"), "left_anti")
+      .join(orphans.select(col("simhash").as("sk_b")), Seq("sk_b"), "left_anti"))
+    purge("sks")(_.join(orphans, Seq("simhash"), "left_anti"))
   }
 
   /** The maintained member-level pair set (doc_a, doc_b, hamming),
     * doc_a < doc_b — expanded from sketch-level state at read time.
     * Replay tolerance as in [[IncrementalFuzzy.pairs]]: all stored rows
     * are deterministic functions of the corpus, so the distinct() reads
-    * make a replayed (or half-replayed) append invisible.
+    * make a slice appended twice invisible.
     */
   def pairs(s: SparkSession, root: String): DataFrame = {
-    val members = s.read.parquet(s"$root/members").distinct()
-    val sp = s.read.parquet(s"$root/pairs_sk").distinct()
+    val members = readTableFeed(s, root, "members").distinct()
+    val sp = readTableFeed(s, root, "pairs_sk").distinct()
     val memA = members.select(col("doc_id").as("id_x"), col("simhash").as("sk_a"))
     val memB = members.select(col("doc_id").as("id_y"), col("simhash").as("sk_b"))
     val cross = sp.join(memA, Seq("sk_a")).join(memB, Seq("sk_b"))
@@ -190,14 +200,15 @@ object IncrementalSimhash {
   }
 
   /** Gate: the same maintenance driven by Structured Streaming
-    * micro-batches with the at-least-once replay guard — batch boundaries
-    * must be invisible in the final pair set.
+    * micro-batches with the at-least-once replay guard
+    * ([[Streams.streamAppends]]) — batch boundaries must be invisible in
+    * the final pair set.
     */
   def streamSimhashIndex(s: SparkSession, d: String): DataFrame = {
     val root = graft.Tmp.dir("graft_ssim_").toString
-    Similarity.withPersisted(Dedup.plantedDocs(s)) { docs =>
+    withPersisted(Dedup.plantedDocs(s)) { docs =>
       init(docs.filter(col("doc_id") < 50), root)
-      IndexMaintenance.streamAppends(root, docs.filter(col("doc_id") >= 50),
+      Streams.streamAppends(root, "sks", docs.filter(col("doc_id") >= 50),
         (col("doc_id") >= 1010).cast("int"))(append(_, root))
     }
     pairs(s, root)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withPersisted
 import graft.Tables
 import graft.queries.Q.QueryFn
 
@@ -40,14 +41,6 @@ object Similarity {
       res: DataFrame => DataFrame): DataFrame =
     if (!reuse) res(shared)
     else withPersisted(shared)(p => res(p).localCheckpoint())
-
-  /** Runs `body` over `df` persisted and unpersists it in a `finally`, so
-    * an exception cannot leave the cache entry in the long-lived session.
-    */
-  private[ext] def withPersisted[A](df: DataFrame)(body: DataFrame => A): A = {
-    val p = df.persist()
-    try body(p) finally p.unpersist()
-  }
 
   /** Strict sequential dot product of two double arrays — the codegen'd
     * native expression (see graft.functions.DotProductD). Numerically

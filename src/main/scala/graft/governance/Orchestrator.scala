@@ -131,11 +131,11 @@ object Orchestrator {
     // materialize ONCE: the diff (two snapshot scans + full-outer joins per
     // new version) feeds both the count and the merge — unpersisted, the
     // whole change computation would execute twice per tick
-    val stamped = updates.withColumn("snapshot_version", lit(latest)).persist()
-    val n = stamped.count()
-    val newV = Warehouse.mergeIntoTable(spark, lakeRoot, whTable,
-      stamped, keys, orderCols)
-    stamped.unpersist()
+    val (n, newV) = graft.GraftSession.withPersisted(
+        updates.withColumn("snapshot_version", lit(latest))) { stamped =>
+      (stamped.count(),
+        Warehouse.mergeIntoTable(spark, lakeRoot, whTable, stamped, keys, orderCols))
+    }
     // advance the watermark via temp-write + rename (atomic on the local FS)
     fs.mkdirs(wmDir)
     val tmp = new org.apache.hadoop.fs.Path(wmDir,

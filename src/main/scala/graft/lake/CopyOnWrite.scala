@@ -327,7 +327,7 @@ object CopyOnWrite {
     * the cross-dir max) guarantees the true newest receipt is re-stamped
     * into later versions before its own dir can age out.
     */
-  private def latestEpochOf(
+  private[graft] def latestEpochOf(
       spark: SparkSession, root: String, name: String,
       sinkId: String): Option[(Int, Long)] = {
     val hits = for {

@@ -1361,6 +1361,22 @@ object Lake {
       writeTableSnapshotIf(shaped, root, name, expectedLatest = base, retentionVersions)
     }
 
+  /** Rewrite a table as `f` of its latest snapshot, by compare-and-swap:
+    * [[retryLoop]] reads the latest version, and [[writeTableSnapshotIf]]
+    * publishes `f` of it only while that version is still the latest, so
+    * a writer that commits first makes `f` run again over its commit
+    * instead of being overwritten. Returns the version written.
+    */
+  def rewriteTable(
+      spark: SparkSession, root: String, name: String,
+      retentionVersions: Int = 7)(f: DataFrame => DataFrame): Int =
+    retryLoop(name, "rewriteTable") { () =>
+      val base = latestVersion(spark, root, name).getOrElse(
+        throw new IllegalStateException(s"no versions for table feed $name"))
+      writeTableSnapshotIf(f(readTableFeed(spark, root, name, Some(base))),
+        root, name, expectedLatest = base, retentionVersions)
+    }
+
   /** VERSION TAGS — named refs over the version ledger (the Iceberg
     * tag idea on the snapshot layout): `tagVersion` drops a
     * `_tag_<tag>` marker INSIDE the tagged version dir, so

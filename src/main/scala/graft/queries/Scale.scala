@@ -111,19 +111,20 @@ object Scale {
     // inflates the HLL++ aggregation buffer to ~2,700 long attributes and
     // the per-plan codegen compile to seconds (the ±5% accuracy envelope
     // that genuinely needs rsd 0.01 lives in `x_sketch_bounds`, one plan)
-    val keys = o.select(col("o_custkey")).distinct().persist()
-    // multi-partition estimate over the post-shuffle hash layout, plus the
-    // exact global anchor, in one pass over the key set
-    val gm = keys
-      .agg(approx_count_distinct(col("o_custkey")),
-        count(lit(1))).head
-    val (acdMulti, exactGlobal) = (gm.getLong(0), gm.getLong(1))
-    // single-partition estimate: coalesce (not repartition) — one task, one
-    // HLL buffer, no exchange. Layout differs from the hash-partitioned
-    // pass above, which is exactly the invariance being asserted.
-    val acd1 = keys.coalesce(1)
-      .agg(approx_count_distinct(col("o_custkey"))).head.getLong(0)
-    keys.unpersist()
+    val (acdMulti, exactGlobal, acd1) =
+      graft.GraftSession.withPersisted(o.select(col("o_custkey")).distinct()) { keys =>
+        // multi-partition estimate over the post-shuffle hash layout, plus
+        // the exact global anchor, in one pass over the key set
+        val gm = keys
+          .agg(approx_count_distinct(col("o_custkey")),
+            count(lit(1))).head
+        // single-partition estimate: coalesce (not repartition) — one task,
+        // one HLL buffer, no exchange. Layout differs from the
+        // hash-partitioned pass above, which is exactly the invariance
+        // being asserted.
+        (gm.getLong(0), gm.getLong(1), keys.coalesce(1)
+          .agg(approx_count_distinct(col("o_custkey"))).head.getLong(0))
+      }
     // the sketch union stays a SEPARATE pass: fusing hll_sketch_agg into
     // the groups aggregate below looks like one job saved, but countDistinct
     // triggers the two-phase distinct Expand rewrite and dragging a

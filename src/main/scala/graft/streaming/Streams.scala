@@ -155,6 +155,61 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start())
 
+  /** Sink id of the epoch receipts ([[graft.lake.CopyOnWrite.appendEpoch]])
+    * that a maintained index's appends stamp on its state tables.
+    */
+  private[graft] val IndexSink = "index"
+
+  /** The epoch the next append to the index under `root` commits: one past
+    * the newest [[IndexSink]] receipt on `frontier`, the state table every
+    * append of that index commits last, or 0 before its first append.
+    */
+  private[graft] def nextIndexEpoch(s: SparkSession, root: String, frontier: String): Long =
+    graft.lake.CopyOnWrite.latestEpochOf(s, root, frontier, IndexSink).fold(0L)(_._2 + 1)
+
+  /** Drive a maintained index's `append` from Structured Streaming, the
+    * continuous ingest shape: `rows` is staged as one file per `chunk`
+    * value (an int column) in one ordered write ([[writeChunksOrdered]]),
+    * then drained one file per trigger, in chunk order, and every
+    * micro-batch goes to `append` at most once ([[appliedOnce]]).
+    * `frontier` is the index's last-committed state table.
+    */
+  def streamAppends(root: String, frontier: String, rows: DataFrame,
+      chunk: org.apache.spark.sql.Column)(append: DataFrame => Unit): Unit = {
+    val staged = graft.Tmp.dir("graft_index_src_").toString
+    writeChunksOrdered(rows, chunk, staged)
+    drainChunks(rows.sparkSession, root, frontier, staged, rows.schema)(append)
+  }
+
+  /** The drain half of [[streamAppends]] over an already staged `staged`
+    * directory of `chunk=N` files.
+    */
+  private[graft] def drainChunks(
+      s: SparkSession, root: String, frontier: String, staged: String,
+      schema: org.apache.spark.sql.types.StructType)(append: DataFrame => Unit): Unit =
+    drainBatches(
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$staged/chunk=*"),
+      graft.Tmp.dir("graft_index_ckpt_").toString)(appliedOnce(s, root, frontier)(append))
+
+  /** The per-batch function of [[streamAppends]]. Structured Streaming is
+    * at-least-once into `foreachBatch`: a batch whose append committed but
+    * whose checkpoint write failed is re-delivered after a restart. Each
+    * index append stamps one epoch on every table it commits, `frontier`
+    * last, so batch `id` is epoch `first + id`, where `first` is the
+    * index's next epoch when the drive starts (the drive's checkpoint is
+    * its own, so its batch ids start at 0). A batch whose epoch the
+    * frontier already holds is skipped before `append` runs, which
+    * [[graft.ext.IncrementalLsh]]'s monotone-id `require` would otherwise
+    * reject. A batch that died mid-append runs again, and the receipts on
+    * the tables it did commit make those commits no-ops.
+    */
+  private[graft] def appliedOnce(s: SparkSession, root: String, frontier: String)(
+      append: DataFrame => Unit): (DataFrame, Long) => Unit = {
+    val first = nextIndexEpoch(s, root, frontier)
+    (batch, id) => if (nextIndexEpoch(s, root, frontier) <= first + id) append(batch)
+  }
+
   private val DrainTimeoutMs = 10L * 60 * 1000
 
   /** Wait for an `AvailableNow` query to finish, at most `DrainTimeoutMs`:
@@ -713,13 +768,12 @@ object Streams {
     drainBatches(
         s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob),
         graft.Tmp.dir("graft_ckpt_").toString) { (batch, _) =>
-      batch.persist()
-      try {
-        batch.write.mode(SaveMode.Append).parquet(s"$lakeRoot/events_raw")
+      graft.GraftSession.withPersisted(batch) { b =>
+        b.write.mode(SaveMode.Append).parquet(s"$lakeRoot/events_raw")
         graft.warehouse.Warehouse.mergeIntoTable(
-          batch.sparkSession, whRoot, "user_latest", batch,
+          b.sparkSession, whRoot, "user_latest", b,
           keys = Seq("user_id"), orderCols = Seq("ts_us", "event_id"))
-      } finally batch.unpersist()
+      }
     }
     val lakeAgg = s.read.parquet(s"$lakeRoot/events_raw")
       .groupBy(col("user_id"))
@@ -886,12 +940,9 @@ object Streams {
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob)
             .filter(pmod(col("event_id"), lit(4)) =!= 0), // seed already applied
           graft.Tmp.dir("graft_ckpt_").toString) { (batch, _) =>
-        if (!batch.isEmpty) {
-          val rows = batch.persist()
-          try {
-            rows.write.mode("append").parquet(base)
-            SummaryRewrite.refreshIncremental(rows.sparkSession, "mv_stream_users", rows)
-          } finally rows.unpersist()
+        if (!batch.isEmpty) graft.GraftSession.withPersisted(batch) { rows =>
+          rows.write.mode("append").parquet(base)
+          SummaryRewrite.refreshIncremental(rows.sparkSession, "mv_stream_users", rows)
         }
       }
       val agg = s.read.parquet(base)

@@ -97,12 +97,11 @@ object Warehouse {
         if (exists)
           spark.read.format("jdbc").option("url", url).option("dbtable", table).load()
         else updates.limit(0)
-      val merged = merge(base, updates, keys, orderCols).persist()
-      merged.count()
-      merged.write.format("jdbc").mode("overwrite")
-        .option("url", url).option("dbtable", table).save()
-      merged.unpersist()
-      ()
+      graft.GraftSession.withPersisted(merge(base, updates, keys, orderCols)) { merged =>
+        merged.count()
+        merged.write.format("jdbc").mode("overwrite")
+          .option("url", url).option("dbtable", table).save()
+      }
     }
 
   private val MergeLockTable = "graft_merge_lock"

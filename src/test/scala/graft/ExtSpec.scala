@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, FuzzyJoin, IncrementalCdc, Multimodal, Similarity}
+import graft.lake.Lake.readTableFeed
 
 class ExtSpec extends SparkSpec {
   import spark.implicits._
@@ -213,11 +214,11 @@ class ExtSpec extends SparkSpec {
   }
 
   test("streamAppends: a batch id delivered twice is appended once") {
-    import graft.ext.{IncrementalLsh, IndexMaintenance}
+    import graft.ext.IncrementalLsh
     val root = java.nio.file.Files.createTempDirectory("ilsh_spec6_").toString
     IncrementalLsh.init(Seq((1L, "a b c d e")).toDF("doc_id", "text"), root)
     var appends = 0
-    val perBatch = IndexMaintenance.appliedOnce(root) { batch =>
+    val perBatch = graft.streaming.Streams.appliedOnce(spark, root, "meta") { batch =>
       appends += 1
       IncrementalLsh.append(batch, root)
     }
@@ -229,11 +230,11 @@ class ExtSpec extends SparkSpec {
     assert(appends === 1)
     perBatch(Seq((3L, "a b c d g")).toDF("doc_id", "text"), 1L)
     assert(appends === 2)
-    assert(spark.read.parquet(s"$root/sigs").count() === 3)
+    assert(readTableFeed(spark, root, "sigs").count() === 3)
   }
 
   test("streamAppends: chunks drain in chunk order when the highest ids are written first") {
-    import graft.ext.{IncrementalLsh, IndexMaintenance}
+    import graft.ext.IncrementalLsh
     def docs(ids: Range) = ids.map(i =>
       (i.toLong, (0 until 6).map(k => s"w${i * 7 + k}").mkString(" "))).toDF("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("ilsh_spec7_").toString
@@ -244,9 +245,9 @@ class ExtSpec extends SparkSpec {
     // do not exceed every ingested id, so a drain out of chunk order fails
     graft.streaming.Streams.writeChunksOrdered(docs(20 until 30), lit(1), staged)
     graft.streaming.Streams.writeChunksOrdered(docs(10 until 20), lit(0), staged)
-    IndexMaintenance.drainChunks(spark, root, staged, docs(0 until 1).schema)(
+    graft.streaming.Streams.drainChunks(spark, root, "meta", staged, docs(0 until 1).schema)(
       IncrementalLsh.append(_, root))
-    assert(spark.read.parquet(s"$root/sigs").select("doc_id").distinct().count() === 30)
+    assert(readTableFeed(spark, root, "sigs").select("doc_id").distinct().count() === 30)
   }
 
   test("incremental LSH: shingle-less doc ids are still spent; empty appends rejected") {
@@ -321,9 +322,8 @@ class ExtSpec extends SparkSpec {
     IncrementalFuzzy.init(rows.filter(col("id") < 50), root, maxDist = 1)
     IncrementalFuzzy.append(rows.filter(col("id") >= 50 && col("id") < 100), root, 1)
     IncrementalFuzzy.append(rows.filter(col("id") >= 100), root, 1)
-    def partFiles(t: String): Int =
-      new java.io.File(s"$root/$t").listFiles()
-        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    def partFiles(t: String): Int = graft.lake.Lake.snapshotFiles(
+      spark, root, t, graft.lake.Lake.latestVersion(spark, root, t).get).size
     val before = IncrementalFuzzy.pairs(spark, root).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val filesBefore = partFiles("members")
@@ -353,8 +353,9 @@ class ExtSpec extends SparkSpec {
     val lshAfter = IncrementalLsh.pairs(spark, lshRoot).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lshAfter === lshBefore)
-    // the watermark survives compaction (meta is not touched): further
-    // appends still enforce the monotone-id contract
+    assert(readTableFeed(spark, lshRoot, "meta").count() === 1)
+    // the watermark survives compaction (meta folds to its maximum row):
+    // further appends still enforce the monotone-id contract
     intercept[IllegalArgumentException] {
       IncrementalLsh.append(docs.filter(col("doc_id") < 100), lshRoot)
     }
@@ -381,7 +382,7 @@ class ExtSpec extends SparkSpec {
     assert(IncrementalLsh.pairs(spark, lshRoot)
       .filter(col("doc_a") === 0 && col("doc_b") === 1000).count() === 1)
     IncrementalLsh.erase(spark, lshRoot, Seq(1000L).toDF("doc_id"))
-    assert(spark.read.parquet(s"$lshRoot/sigs")
+    assert(readTableFeed(spark, lshRoot, "sigs")
       .filter(col("doc_id") === 1000).count() === 0,
       "content-derived signature row must be purged")
     assert(IncrementalLsh.pairs(spark, lshRoot)
@@ -394,12 +395,12 @@ class ExtSpec extends SparkSpec {
     // their sketch, which must leave every state table
     val simRoot = java.nio.file.Files.createTempDirectory("graft_esim_t_").toString
     IncrementalSimhash.init(docs, simRoot)
-    val sk0 = spark.read.parquet(s"$simRoot/members")
+    val sk0 = readTableFeed(spark, simRoot, "members")
       .filter(col("doc_id") === 0).head().getLong(1)
     IncrementalSimhash.erase(spark, simRoot, Seq(0L, 1000L).toDF("doc_id"))
-    assert(spark.read.parquet(s"$simRoot/sks")
+    assert(readTableFeed(spark, simRoot, "sks")
       .filter(col("simhash") === sk0).count() === 0, "orphaned sketch must be purged")
-    assert(spark.read.parquet(s"$simRoot/chunks")
+    assert(readTableFeed(spark, simRoot, "chunks")
       .filter(col("simhash") === sk0).count() === 0)
     assert(IncrementalSimhash.pairs(spark, simRoot)
       .filter(col("doc_a").isin(0L, 1000L) || col("doc_b").isin(0L, 1000L))
@@ -414,24 +415,24 @@ class ExtSpec extends SparkSpec {
       .select(col("c_custkey").as("id"), col("c_name").as("s"))
     IncrementalFuzzy.init(rows, root, maxDist = 1)
     val name7 = rows.filter(col("id") === 7).head().getString(1)
-    val strsBefore = spark.read.parquet(s"$root/strs").count()
+    val strsBefore = readTableFeed(spark, root, "strs").count()
     IncrementalFuzzy.erase(spark, root, Seq(7L).toDF("id"))
     // output-level: the member is gone and no pair touches it
-    assert(spark.read.parquet(s"$root/members")
+    assert(readTableFeed(spark, root, "members")
       .filter(col("id") === 7).count() === 0)
     assert(IncrementalFuzzy.pairs(spark, root)
       .filter(col("id_a") === 7 || col("id_b") === 7).count() === 0)
     // state-level: the orphaned NAME is purged from every table — the
     // PII is gone from the index bytes, not merely unreachable
-    assert(spark.read.parquet(s"$root/strs")
+    assert(readTableFeed(spark, root, "strs")
       .filter(col("s") === name7).count() === 0)
-    assert(spark.read.parquet(s"$root/keys")
+    assert(readTableFeed(spark, root, "keys")
       .filter(col("s") === name7).count() === 0)
-    assert(spark.read.parquet(s"$root/pairs_str")
+    assert(readTableFeed(spark, root, "pairs_str")
       .filter(col("s_a") === name7 || col("s_b") === name7).count() === 0)
     // strings with surviving members are untouched (names are unique per
     // id here, so exactly one string disappears)
-    assert(spark.read.parquet(s"$root/strs").count() === strsBefore - 1)
+    assert(readTableFeed(spark, root, "strs").count() === strsBefore - 1)
     // and the index still works: remaining pairs equal brute force over
     // the surviving members
     val got = IncrementalFuzzy.pairs(spark, root).count()
@@ -577,18 +578,18 @@ class ExtSpec extends SparkSpec {
     val vecs = Tables.embeddings(spark, d)
     IncrementalIvfPq.init(vecs.filter(col("vec_id") < 250), root)
     IncrementalIvfPq.append(vecs.filter(col("vec_id") >= 250), root)
-    val cbBefore = spark.read.parquet(s"$root/cb").count()
+    val cbBefore = readTableFeed(spark, root, "cb").count()
     IncrementalIvfPq.erase(spark, root,
       vecs.filter(col("vec_id") % 100 === 50).select(col("vec_id")))
     // state-level forgetting: codes AND the raw-vector cold store
     Seq("codes", "vecs").foreach { t =>
-      assert(spark.read.parquet(s"$root/$t")
+      assert(readTableFeed(spark, root, t)
         .filter(col("vec_id") % 100 === 50).count() === 0,
         s"erased ids must leave $t")
     }
     // the frozen models are aggregate state and survive (re-deriving them
     // would re-key every stored code)
-    assert(spark.read.parquet(s"$root/cb").count() === cbBefore)
+    assert(readTableFeed(spark, root, "cb").count() === cbBefore)
     // and no erased id can reach a shortlist
     assert(!IncrementalIvfPq.query(spark, root).collect()
       .exists(_.getAs[Long]("neighbor_id") % 100 == 50))
@@ -613,7 +614,7 @@ class ExtSpec extends SparkSpec {
     // table itself, not merely the derived stats
     IncrementalCdc.erase(spark, root, docs.filter(col("doc_id") === 7)
       .select(col("doc_id")))
-    assert(spark.read.parquet(s"$root/postings")
+    assert(readTableFeed(spark, root, "postings")
       .filter(col("doc_id") === 7).count() === 0,
       "erased doc's chunk hashes must leave the state table")
     assert(!IncrementalCdc.stats(spark, root).collect()

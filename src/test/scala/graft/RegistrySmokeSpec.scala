@@ -17,6 +17,11 @@ package graft
   * All entries run inside ONE test so a single broken gate reports every
   * other broken gate alongside it (the driver's Verify behaves the same
   * way), and the assertion message names each failure with its exception.
+  *
+  * Each gate's output is then hashed against its DuckDB oracle
+  * (`graft.Verify.dump`, then `tools/localcheck.py`), so a hash mismatch
+  * fails here, naming every failing gate. Without an importable `duckdb`
+  * the test is canceled, never passed.
   */
 class RegistrySmokeSpec extends SparkSpec {
 
@@ -29,21 +34,25 @@ class RegistrySmokeSpec extends SparkSpec {
       val tmp = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
       Option(tmp.list()).fold(Set.empty[String])(_.filter(_.startsWith("graft")).toSet)
     }
+    import scala.sys.process._
+    assume(Seq("python3", "-c", "import duckdb").! == 0,
+      "python3 cannot import duckdb: the oracle hashes cannot be checked")
     val tmpBefore = topLevelGraftDirs()
     // a fresh session keeps the gates' session state away from the
     // suite-shared one
     SparkSpec.withSession("local[8]", "8", "graft-registry-smoke") { s =>
-      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          try { fn(s, dir).count(); None }
-          catch {
-            case e: Throwable =>
-              Some(s"$name: ${e.getClass.getSimpleName}: " +
-                String.valueOf(e.getMessage).take(200))
-          }
-      }
+      val out = Tmp.dir("graft_registry_out_").toString
+      val failures = Verify.dump(s, dir, out)
       assert(failures.isEmpty,
         s"${failures.size} registry entries failed:\n${failures.mkString("\n")}")
+      val report = new StringBuilder
+      val log = ProcessLogger(line => report.synchronized { report.append(line).append('\n') })
+      val exit = Seq("python3", "tools/localcheck.py", out, dir) ! log
+      val lines = report.toString.linesIterator.toSeq
+      val mismatched = lines.filter(_.startsWith("FAIL"))
+      assert(exit == 0 && mismatched.isEmpty,
+        s"oracle check exited $exit, ${mismatched.size} gates failed:\n" +
+          (if (mismatched.nonEmpty) mismatched else lines.takeRight(20)).mkString("\n"))
       val leaked = topLevelGraftDirs() -- tmpBefore - Tmp.root.getFileName.toString
       assert(leaked.isEmpty,
         s"registry run leaked top-level temp dirs outside Tmp.root: $leaked")
